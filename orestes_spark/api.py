@@ -6,7 +6,9 @@ same request/response *shapes* as plain dicts — an HTTP framework (none
 ships in this container) would only add routing around
 ``handle_request``:
 
-    write           → {"errors": [{point, error}, ...]}
+    write           → {"errors": [{point, error}, ...]} (this request's
+                      errors only; concurrent writes to a space are
+                      group-committed, see OrestesEngine.write)
     read            → {"series": [{"tags": {...}, "points": [[ms, v], ...]}]}
     read + count    → {"series": [{"tags": {...}, "count": N}]}
     /series         → {"series": [tags, ...]}

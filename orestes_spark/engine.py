@@ -47,6 +47,7 @@ from __future__ import annotations
 import json as _json_mod
 import re as _re
 import shutil
+import threading
 import time as _time
 from contextlib import contextmanager
 from pathlib import Path
@@ -437,6 +438,43 @@ class ConcurrentWriterError(RuntimeError):
     writer holds its lock (single-writer contract, enforced loudly)."""
 
 
+class _WriteRequest:
+    """One list-input write waiting in its space's commit queue."""
+
+    def __init__(self, rows: list[dict[str, Any]], max_errors: int) -> None:
+        self.rows = rows
+        self.max_errors = max_errors
+        # Set when this request's group has committed, or when it is
+        # handed leadership of the next group (``done`` tells which).
+        self.turn = threading.Event()
+        self.done = False
+        self.errors: list[dict[str, Any]] = []
+        self.exc: BaseException | None = None
+
+
+# Largest |int| time the driver passes through unchecked: up to 2**53
+# normalize_time_col's double round-trip is exact, and the bucket is
+# far inside the INT partition column.
+_EXACT_TIME_MS = 2**53
+
+
+def _truncation_entry(total: int, max_errors: int) -> dict[str, Any]:
+    return {
+        "point": None,
+        "error": f"error list truncated: {total} invalid points total,"
+        f" first {max_errors} returned",
+    }
+
+
+def _proven_time_ms(t: Any) -> int | None:
+    """Epoch ms of a time the driver can vouch for without Spark (an
+    int, not a bool, within ±2**53); None sends the row through
+    normalize_time_col and classify."""
+    if type(t) is int and -_EXACT_TIME_MS <= t <= _EXACT_TIME_MS:
+        return t
+    return None
+
+
 class RollupStaleWarning(UserWarning):
     """Rollup tables may diverge from point reads until reconciled
     (cross-delivery overwrites counted per-delivery in the partials)."""
@@ -488,6 +526,11 @@ class OrestesEngine:
         # SAME thread (compact() calls rebuild_rollup()); a different
         # thread of this engine contends like any foreign writer.
         self._held_locks: dict[str, int] = {}
+        # Group commit of list-input writes (_group_commit): requests
+        # queued per space, and the spaces whose leader is committing.
+        self._commit_mutex = threading.Lock()
+        self._commit_queues: dict[str, list[_WriteRequest]] = {}
+        self._committing: set[str] = set()
 
     # ---------- single-writer lock ----------
 
@@ -723,7 +766,10 @@ class OrestesEngine:
         is race-free; fully concurrent appends to the SAME space are
         still bounded by the storage layer — Spark's file committer
         stages all jobs for one table under a shared _temporary dir —
-        so treat same-space appends as serialized, same as compact().)
+        so same-space appends are serialized, same as compact():
+        concurrent list writes in this engine are group-committed into
+        one append (_group_commit), and any other writer fails loudly
+        on the writer lock.)
         Migrates the earlier single-JSON marker on first write: the
         old count seeds marker files (capped at 2 — only the ≤1 vs >1
         distinction is ever read) and the JSON is removed."""
@@ -815,61 +861,24 @@ class OrestesEngine:
         (time_ms, value, tags), or a wide DataFrame (time/value + one
         column per tag).
 
+        List input (the reference's only write surface, and what
+        ``/write`` sends) is group-committed: concurrent list writes to
+        one space in this engine share one ``_append`` (see
+        _group_commit), and each call returns once its group is
+        committed, with its own errors.
+
         The collected error list is capped at ``max_errors`` rows: the
         reference returns every error, but a poisoned 100-TB batch
         would otherwise collect millions of rows to the driver. When
         truncated, a final summary entry (``point: None``) carries the
         TOTAL invalid count so callers still see the full damage.
         """
-        errors: list[dict[str, Any]] = []
         if isinstance(points, list):
             valid_rows, errors = validation.validate_raw_rows(points)
             if not valid_rows:
                 return errors
-            # In-batch upsert: the reference's Cassandra batch writes
-            # the same (series, time) twice as one row (last wins; at
-            # equal write-timestamps the greater value, which is the
-            # deterministic rule used here and by the read-side merge).
-            # Driver-side for list input — the reference's only write
-            # surface — so a single delivery is always duplicate-free
-            # and the merge gate can stay off. DataFrame bulk loads
-            # (our extension surface) expect in-batch-unique rows;
-            # cross-delivery upserts are handled for both by the
-            # read-side merge + compaction.
-            merged_rows: dict[tuple, dict[str, Any]] = {}
-            raw_keyed = False
-            for r in valid_rows:
-                # Key on NORMALIZED epoch-ms (validation.time_key_ms),
-                # not the raw representation: 1700000000000 and its
-                # ISO form are the same Cassandra row. Unparseable
-                # times keep a raw-tagged key and flow to the Spark
-                # validation error path untouched.
-                tk = validation.time_key_ms(r["time"])
-                raw_keyed = raw_keyed or tk is None
-                k = (tk if tk is not None else ("raw", str(r["time"])), tuple(sorted(r["tags"].items())))
-                prev = merged_rows.get(k)
-                if prev is None or r["value"] > prev["value"]:
-                    merged_rows[k] = r
-            valid_rows = list(merged_rows.values())
-            if raw_keyed:
-                # A time the driver parser could not key may still
-                # parse executor-side (schema.normalize_time_col is
-                # the wider parser), so THIS delivery might store
-                # duplicate (series, time) rows the driver dedup
-                # missed. Arm the merge gate up front (extra marker —
-                # _append adds its own): reads merge, upsert parity
-                # holds, and the only cost is merge-priced reads until
-                # the next compaction. Never a duplicate served.
-                self._mark_delivery(space)
-            df = self.spark.createDataFrame(
-                [(r["time"], r["value"], r["tags"]) for r in valid_rows],
-                "time STRING, value DOUBLE, tags MAP<STRING,STRING>",
-            ).select(
-                schema.normalize_time_col(F.col("time")).alias("time_ms"),
-                F.col("value"),
-                F.col("tags"),
-            )
-        elif isinstance(points, DataFrame):
+            return errors + self._group_commit(space, _WriteRequest(valid_rows, max_errors))
+        if isinstance(points, DataFrame):
             df = points
             if "tags" not in df.columns:
                 df = schema.points_from_wide(df)
@@ -882,37 +891,153 @@ class OrestesEngine:
         else:
             raise TypeError(f"unsupported points input: {type(points).__name__}")
 
-        # List input: the adapter already guaranteed the time KEY, so a
-        # NULL time_ms is present-but-unparseable — the reference's
-        # distinct 'invalid timestamp' error, not missing-keys.
-        null_time_err = (
-            validation.ERR_INVALID_TIMESTAMP
-            if isinstance(points, list)
-            else validation.ERR_MISSING_TIME
-        )
-        valid, err_df = validation.split_valid(
-            df.select("time_ms", "value", "tags"), null_time_err
-        )
+        valid, err_df = validation.split_valid(df.select("time_ms", "value", "tags"))
         # Per-point error reporting, never batch abort (S4). Collecting
         # the error side-output is an extra job; callers on the hot
         # path can pre-validate and use _append directly. The collect
         # is bounded (limit + count), never an unbounded driver pull.
+        errors: list[dict[str, Any]] = []
         err_rows = err_df.limit(max_errors).collect()
         for row in err_rows:
             errors.append({"point": row.asDict(recursive=True), "error": row["error"]})
         if len(err_rows) == max_errors:
             total = err_df.count()
             if total > max_errors:
-                errors.append(
-                    {
-                        "point": None,
-                        "error": f"error list truncated: {total} invalid points total,"
-                        f" first {max_errors} returned",
-                    }
-                )
+                errors.append(_truncation_entry(total, max_errors))
 
         self._append(valid, space)
         return errors
+
+    def _group_commit(self, space: str, req: _WriteRequest) -> list[dict[str, Any]]:
+        """Queue ``req`` for the space's next commit and return its
+        errors once that commit is done (the micro-batch model of
+        Structured Streaming, applied to the request path). The first
+        request to arrive leads: it commits everything queued so far as
+        one _append, then hands leadership to the first request still
+        queued. A group is whatever arrived while the previous commit
+        ran — no timer, no size cap. If the commit raises (a foreign
+        writer holds the lock, a sink fails), every member of the group
+        raises the same error. Only list writes of THIS engine queue
+        here; any other writer still meets the writer lock and fails
+        loudly."""
+        with self._commit_mutex:
+            self._commit_queues.setdefault(space, []).append(req)
+            lead = space not in self._committing
+            self._committing.add(space)
+        if not lead:
+            req.turn.wait()
+        if not req.done:
+            with self._commit_mutex:
+                group = self._commit_queues.pop(space)
+            try:
+                self._commit_group(group, space)
+            except BaseException as e:
+                for r in group:
+                    r.exc = e
+            finally:
+                with self._commit_mutex:
+                    waiting = self._commit_queues.get(space)
+                    if waiting:
+                        waiting[0].turn.set()  # hand over leadership
+                    else:
+                        self._committing.discard(space)
+                for r in group:
+                    r.done = True
+                    r.turn.set()
+        if req.exc is not None:
+            raise req.exc
+        return req.errors
+
+    def _commit_group(self, group: list[_WriteRequest], space: str) -> None:
+        """Commit a group of validated list writes as ONE delivery and
+        fill in each request's errors."""
+        # Upsert: the reference's Cassandra batch writes the same
+        # (series, time) twice as one row (last wins; at equal
+        # write-timestamps the greater value, which is the
+        # deterministic rule used here and by the read-side merge).
+        # Across the requests of a group, the later request wins, as a
+        # later serial delivery would. Driver-side, so a single
+        # delivery is always duplicate-free and the merge gate can stay
+        # off. DataFrame bulk loads (our extension surface) expect
+        # in-batch-unique rows; cross-delivery upserts are handled for
+        # both by the read-side merge + compaction.
+        batches: list[dict[tuple, dict[str, Any]]] = []
+        last_req: dict[tuple, int] = {}  # key -> last request carrying it
+        raw_keyed = False
+        for i, req in enumerate(group):
+            merged_rows: dict[tuple, dict[str, Any]] = {}
+            for r in req.rows:
+                # Key on NORMALIZED epoch-ms (validation.time_key_ms),
+                # not the raw representation: 1700000000000 and its
+                # ISO form are the same Cassandra row. Unparseable
+                # times keep a raw-tagged key and flow to the Spark
+                # validation error path untouched.
+                tk = validation.time_key_ms(r["time"])
+                raw_keyed = raw_keyed or tk is None
+                k = (tk if tk is not None else ("raw", str(r["time"])), tuple(sorted(r["tags"].items())))
+                prev = merged_rows.get(k)
+                if prev is None or r["value"] > prev["value"]:
+                    merged_rows[k] = r
+            batches.append(merged_rows)
+            last_req.update(dict.fromkeys(merged_rows, i))
+        # Rows whose time the driver proves valid carry time_ms and skip
+        # Spark validation (validate_raw_rows already checked values
+        # and tags). The rest are normalized and classified in Spark,
+        # and a row a later request overwrote stays in (keep = false)
+        # so it still reports its own error.
+        rows = []
+        unproven = 0
+        for i, merged_rows in enumerate(batches):
+            for k, r in merged_rows.items():
+                keep = last_req[k] == i
+                ms = _proven_time_ms(r["time"])
+                if ms is None:
+                    unproven += 1
+                elif not keep:
+                    continue
+                rows.append((i, keep, None if ms is not None else r["time"], ms, r["value"], r["tags"]))
+        if raw_keyed:
+            # A time the driver parser could not key may still
+            # parse executor-side (schema.normalize_time_col is
+            # the wider parser), so THIS delivery might store
+            # duplicate (series, time) rows the driver dedup
+            # missed. Arm the merge gate up front (extra marker —
+            # _append adds its own): reads merge, upsert parity
+            # holds, and the only cost is merge-priced reads until
+            # the next compaction. Never a duplicate served.
+            self._mark_delivery(space)
+        df = self.spark.createDataFrame(
+            rows,
+            "req INT, keep BOOLEAN, time STRING, time_ms LONG, value DOUBLE,"
+            " tags MAP<STRING,STRING>",
+        )
+        if unproven:
+            df = df.withColumn(
+                "time_ms",
+                F.coalesce(
+                    F.col("time_ms"),
+                    schema.bucketable_time_col(
+                        schema.normalize_time_col(F.col("time")), self._granularity(space)
+                    ),
+                ),
+            )
+            # The adapter already guaranteed the time KEY, so a NULL
+            # time_ms is present-but-unparseable — the reference's
+            # distinct 'invalid timestamp' error, not missing-keys.
+            df, err_df = validation.split_valid(df, validation.ERR_INVALID_TIMESTAMP)
+            df = df.where("keep")
+            # Per-point error reporting (S4). The error rows come from
+            # list input already held in the driver, so collecting all
+            # of them is bounded by the requests themselves.
+            errs = err_df.select("req", "time_ms", "value", "tags", "error").collect()
+            for row in errs:
+                point = row.asDict(recursive=True)
+                group[point.pop("req")].errors.append({"point": point, "error": row["error"]})
+            for req in group:
+                if len(req.errors) > req.max_errors:
+                    total = len(req.errors)
+                    req.errors[req.max_errors:] = [_truncation_entry(total, req.max_errors)]
+        self._append(df.select("time_ms", "value", "tags"), space)
 
     def _write_partitions(self, df: DataFrame) -> int:
         """Size-based shuffle width for the points write: one range

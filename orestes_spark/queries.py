@@ -3344,9 +3344,10 @@ def events_sessionization(spark, sf_dir):
     pattern done batch-side with windows."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.when(
-        F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w) > 1800, 1
-    ).otherwise(0)
+    # Exact interval in microseconds, as the oracle's INTERVAL compare:
+    # a cast to whole seconds would split no session at a 1800.5 s gap.
+    us = F.unix_micros("ts")
+    gap = F.when(us - F.lag(us).over(w) > 1_800_000_000, 1).otherwise(0)
     # event_id tiebreak: with duplicate (user_id, ts) rows at a session
     # boundary, a ts-only ORDER BY leaves the cumsum row order
     # engine-arbitrary — both sides order by (ts, event_id).

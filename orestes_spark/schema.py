@@ -65,12 +65,24 @@ def series_id_col(tags: Column) -> Column:
     )
 
 
+def _bucket_long(time_ms: Column, granularity_days: int) -> Column:
+    day = F.floor(time_ms / F.lit(MS_IN_DAY))
+    g = F.lit(granularity_days)
+    return F.floor(day / g) * g
+
+
 def bucket_col(time_ms: Column, granularity_days: int) -> Column:
     """Day index floored to a multiple of granularity
     (/root/reference/lib/orestes-utils.js:49-53 semantics)."""
-    day = F.floor(time_ms / F.lit(MS_IN_DAY))
-    g = F.lit(granularity_days)
-    return (F.floor(day / g) * g).cast("int")
+    return _bucket_long(time_ms, granularity_days).cast("int")
+
+
+def bucketable_time_col(time_ms: Column, granularity_days: int) -> Column:
+    """``time_ms``, or NULL where its bucket overflows the INT partition
+    column (|time| beyond ~1.8e17 ms): such a time is an invalid
+    timestamp, not a CAST_OVERFLOW that aborts the whole batch."""
+    b = _bucket_long(time_ms, granularity_days)
+    return F.when(b.between(-(2**31), 2**31 - 1), time_ms)
 
 
 def normalize_time_col(time_any: Column) -> Column:

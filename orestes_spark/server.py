@@ -8,7 +8,12 @@ No web framework ships in this container, and none is needed:
 ``http.server.ThreadingHTTPServer`` provides routing + threading, and
 the Spark driver is the real concurrency governor (jobs from all
 handler threads funnel into Spark's scheduler — the same role Express
-played in front of Cassandra/ES for the reference).
+played in front of Cassandra/ES for the reference). Concurrent
+``/write``s to one space are group-committed by the engine: requests
+that arrive while a commit runs join the next one and are acknowledged
+when it lands, so handler threads never race the writer lock. Other
+writers of the space (another process, a compaction) still fail
+loudly with the lock's 500.
 
 /read responses stream with chunked transfer-encoding: the 200 status
 commits before Spark runs, each series is flushed as its fetcher

@@ -1116,6 +1116,200 @@ def test_concurrent_writer_guard(spark, tmp_path):
         (START, 9.0), (START + 2, 3.0)]
 
 
+def _wait_until(cond, timeout=120.0):
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < deadline, "timed out"
+        time.sleep(0.01)
+
+
+def _write_as_one_group(eng, batches, space="default"):
+    """Run each batch as a concurrent ``eng.write``, queued in list
+    order behind a leader that is held until all of them are queued,
+    so the batches commit as ONE group. Returns each batch's outcome
+    (its error list, or the exception it raised) and the sizes of the
+    groups committed after the held one."""
+    import threading
+
+    commit = eng._commit_group
+    entered, release, sizes = threading.Event(), threading.Event(), []
+
+    def held(group, sp):
+        if not entered.is_set():
+            entered.set()
+            release.wait(120)
+        sizes.append(len(group))
+        return commit(group, sp)
+
+    outcomes = [None] * (len(batches) + 1)  # the last slot is the held leader's
+
+    def run(i, pts):
+        try:
+            outcomes[i] = eng.write(pts, space)
+        except Exception as e:  # noqa: BLE001 — the outcome under test
+            outcomes[i] = e
+
+    eng._commit_group = held
+    try:
+        threads = [threading.Thread(
+            target=run, args=(-1, [{"time": START, "value": 0.0, "blocker": "x"}]))]
+        threads[0].start()
+        assert entered.wait(120)
+        for i, pts in enumerate(batches):
+            threads.append(threading.Thread(target=run, args=(i, pts)))
+            threads[-1].start()
+            _wait_until(lambda: len(eng._commit_queues.get(space, [])) == i + 1)
+        release.set()
+        for t in threads:
+            t.join(300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        release.set()
+        del eng._commit_group
+    return outcomes[:-1], sizes[1:]
+
+
+def _write_or_hang(eng, pts):
+    """eng.write in a thread: fails instead of hanging if the space's
+    commit leadership was never released."""
+    import threading
+
+    out = []
+    t = threading.Thread(target=lambda: out.append(eng.write(pts)))
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "write waited forever for commit leadership"
+    return out[0]
+
+
+def test_group_commit_queue_stress(spark, tmp_path):
+    """More writers than cores with a shortened switch interval: every
+    request is committed in exactly one group, no two groups of a space
+    commit at once, and each call returns its own result."""
+    import sys
+    import threading
+    import time
+
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+    committed, active, overlaps, sizes = [], [0], [], []
+
+    def fake_commit(group, space):
+        active[0] += 1
+        overlaps.append(active[0] > 1)
+        time.sleep(0.0005)
+        for r in group:
+            committed.append(r.rows[0]["tags"]["n"])
+            r.errors = [r.rows[0]["tags"]["n"]]
+        sizes.append(len(group))
+        active[0] -= 1
+
+    eng._commit_group = fake_commit
+    n_threads, writes_each = 16, 40
+    results = {}
+
+    def client(t):
+        for k in range(writes_each):
+            n = f"{t}-{k}"
+            results[n] = eng.write([{"time": START, "value": 1.0, "n": n}])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    want = sorted(f"{t}-{k}" for t in range(n_threads) for k in range(writes_each))
+    assert sorted(committed) == want
+    assert all(results[n] == [n] for n in want)
+    assert not any(overlaps)
+    assert max(sizes) > 1  # writers did share commits
+    assert not eng._committing and not eng._commit_queues
+
+
+def test_group_commit_foreign_lock_fails_every_member(spark, tmp_path):
+    """A live foreign lock fails every member of a group with
+    ConcurrentWriterError, and the next write still commits."""
+    import json
+    import os
+
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import ConcurrentWriterError, OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+    lock = eng._lock_path("default")
+    lock.parent.mkdir(parents=True)
+    lock.write_text(json.dumps({"pid": os.getpid(), "op": "append", "ts_ms": 0}))
+    batches = [[{"time": START + i, "value": 1.0, "host": str(i)}] for i in range(3)]
+    outcomes, sizes = _write_as_one_group(eng, batches)
+    assert sizes == [3]
+    for o in outcomes:
+        assert isinstance(o, ConcurrentWriterError) and "live writer" in str(o)
+    lock.unlink()
+    assert _write_or_hang(eng, [{"time": START, "value": 2.0, "host": "z"}]) == []
+    assert read_as_model(eng) == {"host=z": ({"host": "z"}, [(START, 2.0)])}
+
+
+def test_group_commit_failed_sink_fails_every_member(spark, tmp_path):
+    """A sink that raises fails every member of its group; the writer
+    lock and the commit leadership are released, so the next write
+    commits."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+
+    def broken_points_sink(df):
+        raise RuntimeError("points sink down")
+
+    eng._write_partitions = broken_points_sink
+    batches = [[{"time": START + i, "value": 1.0, "host": str(i)}] for i in range(3)]
+    outcomes, sizes = _write_as_one_group(eng, batches)
+    assert sizes == [3]
+    for o in outcomes:
+        assert isinstance(o, RuntimeError) and "points sink down" in str(o)
+    del eng._write_partitions
+    assert not eng._lock_path("default").exists()
+    assert _write_or_hang(eng, [{"time": START, "value": 2.0, "host": "z"}]) == []
+    assert read_as_model(eng, {"term": {"host": "z"}}) == {
+        "host=z": ({"host": "z"}, [(START, 2.0)])
+    }
+
+
+def test_group_commit_later_request_wins_like_serial_writes(spark, tmp_path):
+    """Two requests of one group carrying the same (series, time) read
+    back as one point with the later request's value — what two serial
+    writes give. Inside one request the greater value still wins."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    first = [
+        {"time": START, "value": 9.0, "host": "a"},
+        {"time": START + 1, "value": 1.0, "host": "a"},
+    ]
+    second = [
+        {"time": START, "value": 2.0, "host": "a"},
+        {"time": START, "value": 3.0, "host": "a"},
+    ]
+    grouped = OrestesEngine(spark, str(tmp_path / "g"), spaces={"default": SpaceConfig(1)})
+    outcomes, sizes = _write_as_one_group(grouped, [first, second])
+    assert outcomes == [[], []] and sizes == [2]
+    serial = OrestesEngine(spark, str(tmp_path / "s"), spaces={"default": SpaceConfig(1)})
+    assert serial.write(first) == [] and serial.write(second) == []
+    want = {"host=a": ({"host": "a"}, [(START, 3.0), (START + 1, 1.0)])}
+    assert read_as_model(grouped, {"term": {"host": "a"}}) == want
+    assert read_as_model(serial) == want
+
+
 def test_config_preserves_reference_client_knobs(tmp_path):
     """SURVEY §2.6 parity: the reference's ES/Cassandra client-pool
     knobs load verbatim from a reference-format config (with reference

@@ -7,7 +7,7 @@ DataFrame check."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from orestes_spark import esdsl
@@ -249,6 +249,91 @@ def test_upsert_merge_matches_python_model(spark, tmp_path_factory, batches):
     for r in eng.read(None, "default", 0, _UPSERT_START + 10**9, grouped=False).collect():
         got[(r["tags"]["host"], r["time_ms"])] = r["value"]
     assert got == model
+
+
+# -------------------------------------------- driver-proven times ---
+
+_EDGE_TIMES = [
+    0, 1_700_000_000_000, -1,
+    2**53 - 1, 2**53, 2**53 + 1, -(2**53) - 1,
+    2**63 - 1, -(2**63 - 1), 2**63, -(2**63), 2**63 + 4096, 10**30,
+    150_000_000_000_000_000, 200_000_000_000_000_000,
+    True, False,
+    1.7e12, 1_700_000_000_000.5, -0.5, 2e17,
+    "2024-01-01T00:00:00Z", "2024-01-01T00:00:00.123+05:00", "1700000000000", "soon",
+]
+
+write_times = st.lists(
+    st.one_of(st.sampled_from(_EDGE_TIMES), st.integers(-(2**64), 2**64)),
+    min_size=1,
+    max_size=8,
+)
+
+
+def _all_spark_write_model(spark, points, granularity_days):
+    """The list-input write path before driver-proven times: every
+    row's time normalized and classified in Spark. Returns (errors,
+    {point index: stored time_ms}). A stored time whose day bucket
+    overflows the INT partition column made that path's _append abort
+    the whole batch (CAST_OVERFLOW); such a point is now reported as
+    an invalid timestamp, which the model applies."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from orestes_spark import schema, validation
+
+    valid_rows, errors = validation.validate_raw_rows(points)
+    df = spark.createDataFrame(
+        [(r["time"], r["value"], r["tags"]) for r in valid_rows],
+        "time STRING, value DOUBLE, tags MAP<STRING,STRING>",
+    ).select(
+        schema.normalize_time_col(F.col("time")).alias("time_ms"), "value", "tags"
+    )
+    stored = {}
+    for r in validation.classify(df, validation.ERR_INVALID_TIMESTAMP).collect():
+        point = r.asDict(recursive=True)
+        # the bucket's day index, in doubles as Spark computes it
+        day = None if r["time_ms"] is None else math.floor(float(r["time_ms"]) / 86_400_000)
+        if day is not None and not -(2**31) <= day // granularity_days * granularity_days < 2**31:
+            point.update(time_ms=None, error=validation.ERR_INVALID_TIMESTAMP)
+        if point["error"] is None:
+            stored[point["tags"]["i"]] = point["time_ms"]
+        else:
+            errors.append({"point": point, "error": point["error"]})
+    return errors, stored
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(times=write_times)
+@example(times=_EDGE_TIMES)
+def test_driver_proven_times_match_all_spark_path(spark, tmp_path_factory, times):
+    """engine.write passes int times within ±2**53 straight through as
+    time_ms and sends every other time through Spark: the error list
+    and the stored time_ms match the all-Spark model for ints, bools,
+    floats, ISO strings and the long-range edges."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(
+        spark, str(tmp_path_factory.mktemp("wh_times")), spaces={"default": SpaceConfig(1)}
+    )
+    points = [{"time": t, "value": 1.5, "i": str(i)} for i, t in enumerate(times)]
+    want_errors, want_stored = _all_spark_write_model(spark, points, 1)
+    assert eng.write(points) == want_errors
+    got_stored = {}
+    if any(eng._points_path("default").rglob("*.parquet")):
+        got_stored = {
+            r["tags"]["i"]: r["time_ms"]
+            for r in spark.read.parquet(str(eng._points_path("default"))).collect()
+        }
+    assert got_stored == want_stored
+
+
+def test_time_two_to_the_63_is_invalid_timestamp(engine):
+    errs = engine.write([{"time": 2**63, "value": 1.0, "host": "a"}])
+    assert [e["error"] for e in errs] == ["invalid timestamp"]
+    assert errs[0]["point"]["time_ms"] is None
 
 
 # ------------------------------------------------- rag-chunk model ---

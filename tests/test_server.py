@@ -171,3 +171,69 @@ def test_http_concurrent_reads(port):
         assert status == 200
         (s,) = out["series"]
         assert s["tags"] == {"host": host} and len(s["points"]) == 5
+
+
+def test_http_concurrent_writes_group_commit(spark, tmp_path):
+    """The reference's perf-test shape: concurrent 500-point /writes to
+    one space. Every reply is a 200 (no writer-lock 500s), fewer
+    commits than requests land, one match-all /read returns every
+    point exactly once, and a request carrying one invalid point gets
+    exactly its own error while its group-mates get none."""
+    import concurrent.futures
+    import threading
+
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    engine = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+    srv = serve(engine)
+    http_port = srv.server_address[1]
+    n_threads, writes_each, batch = 8, 2, 500
+    start = threading.Barrier(n_threads)
+    bad = (3, 1)  # (thread, write) whose batch carries one invalid time
+
+    def body(thread, k):
+        base = START + (thread * writes_each + k) * batch
+        pts = [
+            {"time": base + j, "value": float(thread * 1000 + j), "host": f"h{j % 10}"}
+            for j in range(batch)
+        ]
+        if (thread, k) == bad:
+            pts[7]["time"] = 2**63
+        return pts
+
+    def client(thread):
+        start.wait()
+        return [_post(http_port, "/write", body(thread, k)) for k in range(writes_each)]
+
+    try:
+        with concurrent.futures.ThreadPoolExecutor(max_workers=n_threads) as ex:
+            replies = list(ex.map(client, range(n_threads)))
+        for thread, outs in enumerate(replies):
+            for k, (status, out) in enumerate(outs):
+                assert status == 200, out
+                if (thread, k) == bad:
+                    assert [e["error"] for e in out["errors"]] == ["invalid timestamp"]
+                    assert out["errors"][0]["point"]["tags"] == {"host": "h7"}
+                else:
+                    assert out == {"errors": []}
+        commits = len(list(engine._deliveries_path("default").iterdir()))
+        assert commits < n_threads * writes_each
+
+        status, out = _post(http_port, "/read", {"end": START + 10**9})
+        assert status == 200
+        got = [
+            (s["tags"]["host"], t, v) for s in out["series"] for t, v in s["points"]
+        ]
+        want = [
+            (p["host"], p["time"], p["value"])
+            for thread in range(n_threads)
+            for k in range(writes_each)
+            for p in body(thread, k)
+            if p["time"] != 2**63
+        ]
+        assert len(got) == len(want) == n_threads * writes_each * batch - 1
+        assert sorted(got) == sorted(want)
+    finally:
+        srv.shutdown()
+        srv.server_close()

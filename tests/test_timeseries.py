@@ -360,3 +360,44 @@ def test_bollinger_constant_series_and_large_magnitude(spark):
     assert all(1999.0 < r["ma"] < 2003.0 and 0.0 <= r["sd"] < 2.0 for r in big)
     for r in big:
         assert r["upper_band"] >= r["ma"] >= r["lower_band"]
+
+
+def test_sessionization_splits_on_exact_sub_second_gap(spark, tmp_path):
+    """A 1800.5 s gap opens a new session (the oracle compares exact
+    intervals); 1800 s exactly does not. Casting ts to whole seconds
+    before the > 1800 test merged the first user's two sessions."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from orestes_spark.queries import ORACLES, QUERIES
+
+    t0 = dt.datetime(2024, 1, 5)
+    gaps = {1: [1800.5, 1800.0], 2: [1800.0, 0.25], 3: [1799.999999, 1800.000001]}
+    rows = []
+    for user, steps in gaps.items():
+        t = t0
+        rows.append((len(rows), user, t))
+        for s in steps:
+            t = t + dt.timedelta(seconds=s)
+            rows.append((len(rows), user, t))
+    table = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "user_id": pa.array([r[1] for r in rows], pa.int64()),
+            "ts": pa.array([r[2] for r in rows], pa.timestamp("us")),
+        }
+    )
+    pq.write_table(table, tmp_path / "events.parquet")
+
+    got = sorted(tuple(r) for r in QUERIES["events_sessionization"](spark, str(tmp_path))
+                 .select("user_id", "session_id", "n_events").collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    want = sorted(con.execute(
+        f"SELECT user_id, session_id, n_events FROM ({ORACLES['events_sessionization']})"
+    ).fetchall())
+    assert got == want
+    assert got == [(1, 0, 1), (1, 1, 2), (2, 0, 3), (3, 0, 2), (3, 1, 1)]
