@@ -1,5 +1,5 @@
 """Commit backend: the engine's three rename-dependent durability
-protocols behind one small interface (round-7 verdict task).
+protocols behind one small interface.
 
 The engine guarantees exactly-once streaming epochs, single-writer
 mutation, and crash-atomic erasure. On a POSIX filesystem those rest
@@ -21,38 +21,10 @@ on three primitives this module owns:
    bucket directory (live → ``.old_*``, tmp → live, drop ``.old_*``),
    rolled forward/back by ``engine._recover_swaps`` (``swap_partition``).
 
-``PosixCommitBackend`` is the default and the only backend the
-engine constructs itself; ``engine._require_posix_warehouse`` refuses
-object-store warehouses loudly because rename/link are not atomic
-there. At that tier the SAME three protocols map onto a lakehouse
-table format's transaction log — ``DeltaEpochSink`` below prototypes
-the mapping for the streaming-epoch-commit path with Delta Lake OSS
-(public API: https://docs.delta.io), import-gated on ``delta-spark``:
-
-| engine protocol (POSIX)            | Delta equivalent (prototype)    |
-|------------------------------------|---------------------------------|
-| staged files + epoch manifest      | one table commit (snapshot-     |
-| (all-or-nothing read visibility)   | isolated) — ``DeltaEpochSink``  |
-| epoch marker as replay idempotency | ``txnAppId``/``txnVersion``     |
-| key (replayed epoch = no-op)       | idempotent writes — same class  |
-| writer link-lock + lease + fence   | monotonic-fence lease over an   |
-|                                    | idempotent append log —         |
-|                                    | ``TableFormatWriterLease`` +    |
-|                                    | ``DeltaLeaseLog``               |
-| two-phase partition swap           | ``replaceWhere`` overwrite /    |
-| (erasure, compaction, rollup)      | DELETE+VACUUM —                 |
-|                                    | ``DeltaPartitionSwap``          |
-
-All three rows now have code (round-8), and the fence number is
-CARRIED BY DATA COMMITS (round-9): ``LeaseFence`` +
-``fenced_version`` compose an acquired lease's fence into every
-epoch/maintenance commit's idempotency version, so a zombie writer's
-replay is refused by the data table itself — see the
-fencing-arithmetic notes below. The lease/swap protocol LOGIC is
-exercised by the always-on test suite against an in-memory log with
-Delta's exact commit semantics; the thin Delta adapters are
-import-gated and their integration tests skip where delta-spark is
-absent.
+``PosixCommitBackend`` is the only backend; the engine imports the
+shared ``POSIX_BACKEND`` instance. ``engine._require_posix_warehouse``
+refuses object-store warehouses because rename/link are not atomic
+there.
 """
 
 from __future__ import annotations
@@ -60,12 +32,11 @@ from __future__ import annotations
 import json as _json
 import os as _os
 from pathlib import Path
-from typing import Any
 
 
 class PosixCommitBackend:
-    """Default backend: POSIX atomic rename/link primitives. Stateless;
-    one shared instance serves every engine in the process."""
+    """POSIX atomic rename/link primitives. Stateless; one shared
+    instance serves every engine in the process."""
 
     # ---------- protocol 1: epoch commit log ----------
 
@@ -184,858 +155,3 @@ class PosixCommitBackend:
 
 #: process-wide default; engine call sites import this
 POSIX_BACKEND = PosixCommitBackend()
-
-
-class DeltaEpochSink:
-    """PROTOTYPE (import-gated on ``delta-spark``): the streaming
-    epoch-commit protocol mapped onto Delta Lake's transaction log —
-    the shape the engine defers to when `_require_posix_warehouse`
-    refuses an object-store path.
-
-    Replaces stage→rename→manifest with ONE Delta commit per epoch:
-
-    - **Atomic visibility**: a Delta commit is snapshot-isolated by
-      the ``_delta_log`` (readers see all of an epoch or none), so
-      the manifest layer — which exists only because readdir over
-      in-flight renames is racy — has no job left to do.
-    - **Replay idempotency**: ``txnAppId=<stream namespace>`` +
-      ``txnVersion=<epoch id>`` is Delta's idempotent-writes API; a
-      replayed epoch's commit is skipped by the table itself, exactly
-      what the engine's epoch markers enforce on POSIX.
-    - **No writer lock**: Delta's optimistic concurrency serializes
-      commits; conflicting maintenance fails the commit and retries
-      instead of corrupting markers.
-
-    Scope is deliberately ONE path — the streaming epoch commit —
-    per the round-7 plan: enough to demonstrate the mapping is real
-    code, not a docs hand-wave. A full backend would add the rollup
-    partials (same txn options), compaction (OPTIMIZE or
-    dataChange=false rewrites) and erasure (DELETE + VACUUM).
-    """
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError(
-                "DeltaEpochSink requires the delta-spark package"
-            )
-        self.spark = spark
-        self.table_path = table_path
-
-    def commit_epoch(
-        self, df, stream_ns: str, epoch_id: int, fence: int | None = None
-    ) -> None:
-        """One idempotent, snapshot-atomic commit for the epoch's
-        points — the Delta analogue of engine._append's staged moves
-        plus manifest publish.
-
-        ``fence`` (round-9): the writer's acquired lease fence
-        (TableFormatWriterLease handle). When given, the commit's
-        idempotency version becomes ``fenced_version(fence,
-        epoch_id + 1)`` so the DATA table itself refuses a zombie's
-        replayed epoch the moment any higher-fence writer has
-        committed (or claimed, see ``claim_fence``) — the wiring the
-        round-8 mapping table promised in prose. A fenced holder must
-        start from ``resume_epoch_floor(stream_ns) + 1`` (or trust its
-        checkpoint) to keep cross-fence epoch idempotency, and a table
-        is either always-fenced or never-fenced — the two encodings'
-        watermarks are not comparable. See the fencing-arithmetic
-        notes above ``fenced_version``."""
-        version = epoch_id if fence is None else fenced_version(fence, epoch_id + 1)
-        (
-            df.write.format("delta")
-            .mode("append")
-            .option("txnAppId", stream_ns)
-            .option("txnVersion", version)
-            .save(self.table_path)
-        )
-
-    def claim_fence(
-        self, stream_ns: str, fence: int, floor: int, schema: str | None = None
-    ) -> None:
-        """Commit an EMPTY claim at ``fenced_version(fence, floor+1)``
-        right after acquiring the lease and reading the floor: raises
-        the data table's fence watermark while preserving the floor,
-        so every zombie commit is refused from this instant — not just
-        from this holder's first data commit. A zero-row append still
-        carries its SetTransaction action, which is all the claim is.
-
-        ``schema`` (review finding r9): on a BRAND-NEW deployment the
-        table does not exist yet — reading it for its schema would
-        fail exactly inside the window the claim exists to close — so
-        the first-ever claimer passes its batch schema (DDL string)
-        and the empty claim commit creates the table with it. The
-        missing-table case is detected with DeltaTable.isDeltaTable,
-        NOT by catching read errors: a transient read failure on an
-        EXISTING table must propagate (retryable), never be
-        misdiagnosed as "table absent" and papered over with the
-        caller's possibly-drifted DDL."""
-        from delta.tables import DeltaTable
-
-        if DeltaTable.isDeltaTable(self.spark, self.table_path):
-            table_schema = self.visible().schema
-        elif schema is None:
-            raise ValueError(
-                f"no Delta table at {self.table_path} yet; the first-ever"
-                " claim must pass schema= (the stream's batch DDL) so the"
-                " empty claim commit can create the table — reading the"
-                " schema back would fail precisely inside the pre-first-"
-                "commit window the claim closes"
-            )
-        else:
-            table_schema = schema
-        empty = self.spark.createDataFrame([], table_schema)
-        claimed = fenced_version(fence, floor + 1)
-        (
-            empty.write.format("delta")
-            .mode("append")
-            .option("txnAppId", stream_ns)
-            .option("txnVersion", claimed)
-            .save(self.table_path)
-        )
-        # Read-back (round-10 ADVICE): the claim's entire job is the
-        # SetTransaction action a zero-row append carries — if this
-        # Delta version elides empty commits, the claim silently did
-        # nothing and the pre-first-commit zombie window stays open.
-        # Fail loudly instead of assuming.
-        after = self._txn_watermark(stream_ns)
-        if after is None or after < claimed:
-            raise RuntimeError(
-                f"claim_fence({stream_ns!r}, fence={fence}) did not advance"
-                f" the table's transaction watermark (now {after}, claimed"
-                f" {claimed}): this Delta version appears to elide zero-row"
-                " commits' SetTransaction actions, so the fence claim is a"
-                " no-op and a zombie writer can still land one stale commit"
-                " before this holder's first epoch. Upgrade delta-spark or"
-                " replace the empty claim with a 1-row commit to a sentinel"
-                " partition."
-            )
-
-    def _txn_watermark(self, stream_ns: str) -> int | None:
-        """The Delta snapshot's per-app transaction watermark — the
-        number commit_epoch's txnVersion advances. delta-spark exposes
-        no public Python accessor for it, so this goes through the
-        Scala DeltaLog (import-gated, like the rest of this adapter);
-        the always-on protocol tests exercise the identical contract
-        against the in-memory twin's watermark."""
-        jlog = self.spark._jvm.org.apache.spark.sql.delta.DeltaLog.forTable(
-            self.spark._jsparkSession, self.table_path
-        )
-        it = jlog.update().setTransactions().iterator()
-        wm = None
-        while it.hasNext():
-            t = it.next()
-            if t.appId() == stream_ns:
-                v = int(t.version())
-                wm = v if wm is None else max(wm, v)
-        return wm
-
-    def resume_epoch_floor(self, stream_ns: str) -> int:
-        """Highest epoch id any fence ever committed for ``stream_ns``
-        (-1 if none): the floor a NEW fence holder must not re-commit
-        at or below. Decoded from the per-app transaction watermark."""
-        return epoch_floor(self._txn_watermark(stream_ns))
-
-    def visible(self):
-        """Snapshot read — committed epochs only, by construction.
-        The replay watermark itself needs no accessor: Delta tracks it
-        per txnAppId inside the table and enforces it at commit time
-        (txnVersion ≤ watermark → the commit is skipped), which is the
-        property the prototype test pins."""
-        return self.spark.read.format("delta").load(self.table_path)
-
-
-def delta_available() -> bool:
-    import importlib
-
-    return importlib.util.find_spec("delta") is not None
-
-
-# --------------------------------------------------- fencing arithmetic ---
-#
-# A data commit carries its writer's lease fence by COMPOSING the fence
-# into the idempotency version: version = (fence << 32) | seq. Because
-# the fence occupies the high bits, the table's per-app_id monotonic
-# watermark enforces BOTH properties with one number:
-#
-#   - replay idempotency: the same (fence, seq) pair is <= the watermark
-#     the first commit set, so a crashed-and-replayed commit is skipped;
-#   - fencing: once a NEWER fence has committed anything, every version
-#     a zombie at an older fence can produce is below the watermark —
-#     the DATA table itself refuses the zombie's replay, which is the
-#     textbook fencing-token property the lease's fence number exists
-#     for (commit_backend mapping table, row 2; the semantics guarded
-#     are lib/orestes-remover.js:16-53's single-writer delete/compact
-#     cycle).
-#
-# The one thing the composition gives up is AUTOMATIC cross-fence epoch
-# idempotency: a new fence's version for epoch e is always above an old
-# fence's, so a new holder must not blindly re-commit epochs the old
-# holder already landed. The protocol therefore pairs the encoding with
-# ``epoch_floor``: on acquire, the new holder reads the data log's
-# watermark once (it is the unique live writer, so the read cannot
-# race anything except zombies the watermark refuses) and skips epochs
-# <= floor. Streaming restarts get the floor for free from their
-# checkpoint; the explicit read covers the checkpoint-lost case.
-#
-# Per-fence seq 0 is RESERVED for the fence CLAIM (epochs encode as
-# seq = epoch_id + 1): immediately after reading the floor, the new
-# holder commits an EMPTY claim at (fence, floor + 1) — same seq
-# component as the old watermark, so the floor survives, but a higher
-# fence, so from that instant EVERY commit a zombie can produce is
-# refused. Without the claim, a zombie that wakes between the
-# successor's acquire and its first data commit could still land one
-# stale commit (its next epoch is above the old watermark).
-
-FENCE_SHIFT = 32
-_SEQ_MASK = (1 << FENCE_SHIFT) - 1
-
-
-def fenced_version(fence: int, seq: int) -> int:
-    """Compose (fence, per-fence sequence) into one monotonic
-    idempotency version. seq is epoch_id + 1 on the streaming path
-    (0 = the fence claim), a per-lease commit counter on the
-    maintenance path."""
-    fence, seq = int(fence), int(seq)
-    if not (0 < fence < (1 << 30)):
-        raise ValueError(f"fence out of range: {fence}")
-    if not (0 <= seq <= _SEQ_MASK):
-        raise ValueError(f"seq out of range: {seq}")
-    return (fence << FENCE_SHIFT) | seq
-
-
-def epoch_floor(watermark: int | None) -> int:
-    """Highest committed epoch id encoded in a FENCED data-log
-    watermark (epochs commit at seq = epoch_id + 1; a fence claim
-    re-commits the previous floor), or -1 when nothing was ever
-    committed. Valid because holders commit monotonically increasing
-    seqs within a fence and every NEW fence claims at its floor
-    read + 1 before committing floor+2.., so the seq component of the
-    max composite version always decodes to the global max epoch."""
-    return -1 if watermark is None else (int(watermark) & _SEQ_MASK) - 1
-
-
-class LeaseStolenError(RuntimeError):
-    """Release-time fence tripped: a contender judged this lease
-    expired mid-operation and committed a higher fence — the
-    table-format analogue of engine._writer_lock's token-mismatch
-    fence (engine.py release path)."""
-
-
-class TableFormatWriterLease:
-    """PROTOTYPE: the engine's writer lock/lease (protocol 2) as
-    table-format commits — the second row of the mapping table above,
-    now with code behind it.
-
-    Generic over an append-only, snapshot-atomic log with idempotent
-    ``(app_id, version)`` commits — exactly Delta's ``txnAppId`` /
-    ``txnVersion`` contract. ``DeltaLeaseLog`` is the Delta adapter;
-    the test suite drives this SAME protocol class against an
-    in-memory log with identical commit semantics, so the protocol
-    logic is fully tested even where delta-spark is absent.
-
-    The log contract has one more requirement beyond append+read:
-    every committed row is stamped with the log's own monotonic
-    COMMIT SEQUENCE (``_seq`` — Delta's per-commit table version,
-    exposed through the change feed; the memory log's commit
-    counter). The winner tie-break rides on it, because a tie-break
-    over row VALUES (e.g. min owner) is not stable under later
-    same-fence appends: contender B could commit, read back {B},
-    win, and start writing before contender A (a smaller owner)
-    lands its row and computes a different winner from a bigger
-    snapshot — split brain. First-committed-at-the-fence IS stable:
-    once any acquire row exists at fence f, no later commit can
-    precede it.
-
-    Protocol — leadership by monotonic fence number:
-
-    - ``acquire``: read the log; if the highest-fence lease is live
-      (no release row, heartbeat younger than ``lease_ms``) the
-      acquire fails (engine raises ConcurrentWriterError). Otherwise
-      commit an acquire row at ``fence = max + 1`` with
-      ``app_id='lease:<owner>', version=fence`` and read back: among
-      same-fence acquires (two stealers can both land — appends never
-      conflict in Delta) the winner is the FIRST-COMMITTED acquire
-      (min ``_seq``), which every contender computes identically
-      from any snapshot that contains its own row. Losers retry at a
-      higher fence once the winner's lease dies.
-    - ``heartbeat``: an hb row; observers judge liveness against the
-      HOLDER's lease_ms from its acquire row (same rule as the POSIX
-      mtime heartbeat).
-    - ``release``: FENCED — if the log holds a fence above ours, a
-      contender stole the lease mid-operation; raise LeaseStolenError
-      instead of silently "succeeding" (mirrors engine.py's
-      token-mismatch fence).
-
-    What the fence number adds over the POSIX lock: it is a textbook
-    fencing token — downstream data commits CARRY it (round-9,
-    previously prose-only): ``LeaseFence`` composes the fence into
-    every data commit's idempotency version via ``fenced_version``,
-    so a zombie writer's replayed epoch/swap is refused by the DATA
-    table itself the moment a higher fence has committed. What OSS
-    Delta cannot give (documented impossibility, per the round-7
-    verdict's either/or): making the lease-log liveness check and a
-    data commit one atomic unit requires multi-table transactions,
-    which delta-spark's commit protocol does not expose — but with
-    the fence carried in-band the stall-past-lease window now only
-    admits a zombie commit BEFORE the successor's first data commit
-    (ordinary last-write-wins territory), never a replay after it.
-    Reference parity: the semantics being mapped are the
-    single-writer guard around lib/orestes-remover.js:16-53's
-    delete/compact cycle.
-    """
-
-    def __init__(self, log, lease_ms: int, clock=None):
-        import time as _time
-
-        self.log = log
-        self.lease_ms = int(lease_ms)
-        self._clock = clock or (lambda: int(_time.time() * 1000))
-        # heartbeat idempotency versions must be MONOTONIC per holder;
-        # raw wall-clock ms would silently skip every beat after a
-        # backwards NTP step until the clock caught up (a live lease
-        # spuriously expiring mid-operation), so the version is
-        # max(now, last+1) per (owner, fence).
-        self._hb_versions: dict[tuple[str, int], int] = {}
-
-    # ---------- pure judgment (unit-testable without any log) ----------
-
-    @staticmethod
-    def judge(rows: list[dict], now_ms: int) -> dict:
-        """Fold the lease log into its current state:
-        {fence, owner, live}. fence == 0 means never acquired. The
-        winner at a fence is its FIRST-COMMITTED acquire row (min
-        ``_seq``, the log's commit sequence) — stable under later
-        same-fence appends, unlike any tie-break over row values; the
-        lease is live iff the winner has no release row at that fence
-        and its last heartbeat (acquire counts) is younger than the
-        lease_ms RECORDED IN ITS ACQUIRE ROW."""
-        if not rows:
-            return {"fence": 0, "owner": None, "live": False}
-        fence = max(r["fence"] for r in rows)
-        acquires = [r for r in rows if r["fence"] == fence and r["kind"] == "acquire"]
-        if not acquires:  # malformed tail; treat as dead
-            return {"fence": fence, "owner": None, "live": False}
-        winner = min(acquires, key=lambda a: (a["_seq"], a["owner"]))["owner"]
-        lease_ms = min(a["lease_ms"] for a in acquires if a["owner"] == winner)
-        released = any(
-            r["fence"] == fence and r["owner"] == winner and r["kind"] == "release"
-            for r in rows
-        )
-        last_hb = max(
-            r["ts_ms"]
-            for r in rows
-            if r["fence"] == fence and r["owner"] == winner and r["kind"] in ("acquire", "hb")
-        )
-        live = (not released) and (now_ms - last_hb < lease_ms)
-        return {"fence": fence, "owner": winner, "live": live}
-
-    # ---------- protocol ----------
-
-    def acquire(self, owner: str, op: str) -> dict | None:
-        """One acquire attempt. Returns the lease handle
-        {fence, owner} or None (a live holder exists, or a concurrent
-        stealer won the deterministic tie-break). Retry policy —
-        attempts/backoff — is the caller's, same as engine._writer_lock."""
-        now = self._clock()
-        st = self.judge(self.log.read(), now)
-        if st["live"]:
-            return None
-        fence = st["fence"] + 1
-        row = {
-            "fence": fence,
-            "owner": owner,
-            "op": op,
-            "kind": "acquire",
-            "ts_ms": now,
-            "lease_ms": self.lease_ms,
-        }
-        # Idempotent by (app_id, version): a crashed-and-replayed
-        # acquire of the same fence is skipped by the log, never
-        # duplicated — Delta's txn watermark, the same property the
-        # POSIX epoch markers enforce for streaming commits.
-        self.log.append([row], app_id=f"lease:{owner}", version=fence)
-        # Read-back decides by FIRST COMMIT at the fence (min _seq).
-        # This is stable: my snapshot contains my own row, and any
-        # rival row that could beat mine must have committed BEFORE it
-        # — so it is in my snapshot too, and a rival that commits
-        # after my read-back can only lose. A min-OWNER tie-break here
-        # would be split-brain: the earlier committer could win its
-        # own read-back and start writing before a smaller owner lands.
-        after = self.log.read()
-        # Narrowing of the documented zombie window (round-9): if this
-        # caller stalled past lease_ms between its append and this
-        # read-back, a contender may ALREADY have judged fence f dead
-        # and committed f+1 — the snapshot shows the overtake, so
-        # refuse the handle here instead of leaving detection to the
-        # release-time fence.
-        if max(r["fence"] for r in after) > fence:
-            return None
-        acquires = [
-            r for r in after if r["fence"] == fence and r["kind"] == "acquire"
-        ]
-        winner = min(acquires, key=lambda a: (a["_seq"], a["owner"]))["owner"]
-        return {"fence": fence, "owner": owner} if winner == owner else None
-
-    def heartbeat(self, lease: dict) -> None:
-        now = self._clock()
-        row = {
-            "fence": lease["fence"],
-            "owner": lease["owner"],
-            "op": "hb",
-            "kind": "hb",
-            "ts_ms": now,
-            "lease_ms": self.lease_ms,
-        }
-        # version = max(now, last+1): monotonic per holder even across
-        # a backwards clock step (NTP correction), which with a raw
-        # timestamp would make the log's (app_id, version) watermark
-        # silently skip every beat until the clock caught up and let
-        # the live lease be judged dead and stolen mid-operation.
-        key = (lease["owner"], lease["fence"])
-        version = max(now, self._hb_versions.get(key, 0) + 1)
-        self._hb_versions[key] = version
-        self.log.append([row], app_id=f"hb:{lease['owner']}:{lease['fence']}", version=version)
-
-    def release(self, lease: dict) -> None:
-        rows = self.log.read()
-        top = max((r["fence"] for r in rows), default=0)
-        if top > lease["fence"]:
-            raise LeaseStolenError(
-                f"lease fence {lease['fence']} was overtaken by fence {top}:"
-                " this writer stalled past its lease and a contender stole the"
-                " lock mid-operation; writes may have raced — run compact() to"
-                " reconcile (table-format twin of the POSIX release fence)"
-            )
-        row = {
-            "fence": lease["fence"],
-            "owner": lease["owner"],
-            "op": "release",
-            "kind": "release",
-            "ts_ms": self._clock(),
-            "lease_ms": self.lease_ms,
-        }
-        self.log.append([row], app_id=f"rel:{lease['owner']}:{lease['fence']}", version=1)
-
-
-class LeaseFence:
-    """Mints the ``(app_id, version)`` idempotency pairs that carry an
-    acquired lease's fence into DATA commits (round-9: the wiring the
-    round-8 mapping table promised in prose). Two shapes:
-
-    - ``epoch_txn(stream_ns, epoch_id)`` — streaming epoch commits;
-      the version is ``fenced_version(fence, epoch_id + 1)`` (seq 0
-      is the reserved fence-claim slot), so the data table's
-      watermark refuses a zombie's replayed epoch once any
-      higher-fence writer has committed (see DeltaEpochSink.commit_epoch
-      and the fencing-arithmetic notes above fenced_version).
-    - ``next_txn()`` — maintenance commits (the remove/compact cycle,
-      lib/orestes-remover.js:16-53 semantics): a per-lease counter
-      under ``app_id='maint:<space>'``. Each cycle's work is freshly
-      computed from the current snapshot, so cross-fence idempotency
-      is NOT wanted here — the counter restarting at 1 under a higher
-      fence keeps the composite monotone, which is all the fencing
-      needs.
-
-    Usage is acquire → commit-with-fence → release::
-
-        handle = lease.acquire(owner, "compact")
-        f = LeaseFence(space, handle)
-        swap.swap(df, pred, txn=f.next_txn())   # fenced replaceWhere
-        lease.release(handle)                    # raises if overtaken
-    """
-
-    def __init__(self, space: str, handle: dict):
-        self.space = space
-        self.fence = int(handle["fence"])
-        self._seq = 0
-
-    def epoch_txn(self, stream_ns: str, epoch_id: int) -> tuple[str, int]:
-        return stream_ns, fenced_version(self.fence, epoch_id + 1)
-
-    def claim_txn(self, stream_ns: str, floor: int) -> tuple[str, int]:
-        """The empty fence-claim commit's pair (see
-        DeltaEpochSink.claim_fence): same seq component as the old
-        watermark, higher fence — zombies are refused from the claim
-        on, not merely from this holder's first data commit."""
-        return stream_ns, fenced_version(self.fence, floor + 1)
-
-    def next_txn(self) -> tuple[str, int]:
-        self._seq += 1
-        return f"maint:{self.space}", fenced_version(self.fence, self._seq)
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A live lease holder exists (or a concurrent stealer won the
-    tie-break) — the table-format twin of the engine's POSIX
-    ConcurrentWriterError on the link-lock path."""
-
-
-def fenced_maintenance(lease: "TableFormatWriterLease", space: str, owner: str, op: str):
-    """Context manager for the remove/compact cycle
-    (lib/orestes-remover.js:16-53 semantics) on the table-format tier:
-    acquire → yield a LeaseFence whose ``next_txn()`` pairs ride every
-    data commit (DeltaPartitionSwap.swap(txn=...)) → release, which
-    raises LeaseStolenError if a contender overtook the fence
-    mid-cycle. Raises ConcurrentWriterError when the lease is held —
-    retry/backoff policy stays with the caller, same as
-    engine._writer_lock. Usage::
-
-        with fenced_maintenance(lease, "default", "remover-1", "compact") as f:
-            swap.swap(compacted_df, pred, txn=f.next_txn())
-    """
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        handle = lease.acquire(owner, op)
-        if handle is None:
-            raise ConcurrentWriterError(
-                f"writer lease for space '{space}' is held; {owner} must retry"
-            )
-        try:
-            yield LeaseFence(space, handle)
-        except BaseException:
-            # Release even when the body fails (review finding r9):
-            # each cycle recomputes its work from the current snapshot,
-            # so releasing after a failed cycle is safe — while NOT
-            # releasing turns every transient swap error into a
-            # lease_ms-long maintenance outage. The body's exception is
-            # the story: a concurrent LeaseStolenError here is subsumed
-            # (the cycle is aborting either way) and must not mask it.
-            try:
-                lease.release(handle)
-            except Exception:
-                pass
-            raise
-        # clean exit: release AFTER the caller's commits; an overtaken
-        # fence raises LeaseStolenError here so a stalled cycle cannot
-        # report success
-        lease.release(handle)
-
-    return _cm()
-
-
-def cas_append(read_max_seq, try_commit, rows: list[dict], conflict_types, attempts: int = 64):
-    """Stamp ``rows`` with the next values of a PERSISTED monotonic
-    sequence and commit, retrying until the rows actually LAND: read
-    max(seq), attempt an insert-if-absent at seq+1... A rival racing
-    the same seq loses in one of two ways, and the loop must handle
-    BOTH (round-10 ADVICE — the round-9 replaceWhere design handled
-    only the second and silently DELETED the rival's row in the
-    first):
-
-    - rival committed BEFORE the attempt's table snapshot: the
-      insert-if-absent sees the rival's row at the claimed seq and
-      inserts nothing — no transaction overlap, so NO conflict is
-      raised; ``try_commit`` returns False and we retry at a fresh
-      seq;
-    - rival commits BETWEEN the snapshot and our commit: optimistic
-      conflict detection fails our commit (the rival's added file
-      matches our read predicate over the claimed range); the
-      conflict exception lands here and we retry.
-
-    ``try_commit(stamped, claimed_seq) -> bool`` returns True only
-    when the claimed rows are verifiably in the log (read-back, not
-    hope). Extracted as a pure function so the retry/stamping logic
-    is tested always-on with injected losses of both kinds,
-    delta-spark installed or not. Returns the stamped rows."""
-    for _ in range(attempts):
-        nxt = read_max_seq() + 1
-        stamped = [{**r, "seq": nxt + i} for i, r in enumerate(rows)]
-        try:
-            if try_commit(stamped, nxt):
-                return stamped
-        except conflict_types:
-            pass
-    raise RuntimeError("lease-log CAS append: retries exhausted under contention")
-
-
-class DeltaLeaseLog:
-    """Delta adapter for TableFormatWriterLease (import-gated like
-    DeltaEpochSink): the lease log is a tiny Delta table CREATED
-    EAGERLY. Creating the table in the constructor means ``read``
-    never has to guess whether an exception means "not created yet" —
-    a lease log must fail CLOSED (propagate transient read errors)
-    rather than report an empty log and let a second writer in.
-
-    The protocol's commit-order sequence ``_seq`` is a PERSISTED
-    ``seq`` column stamped at append time (round-9, replacing the
-    round-8 change-data-feed read). The CDF design re-read the entire
-    commit history from ``startingVersion 0`` on every judge — a scan
-    that grows with every heartbeat — and broke PERMANENTLY the
-    moment VACUUM removed change files or the delta log's retention
-    expired old commits, i.e. exactly in the long-lived deployment
-    the docstring recommended cleanup for. With ``seq`` in the row a
-    plain snapshot read suffices, so the table can be safely bounded:
-    ``prune(below_fence)`` deletes rows below the current fence
-    (judge/acquire/release only ever consult the TOP fence), after
-    which OPTIMIZE/VACUUM are genuinely safe.
-
-    ``seq`` is minted by compare-and-swap (``cas_append``): read
-    max(seq), then INSERT-IF-ABSENT the row at seq+1 via
-    ``DeltaTable.merge`` with a target-side condition pinned to the
-    claimed seq and ``whenNotMatchedInsert`` only (round-10, replacing
-    the round-9 ``replaceWhere`` overwrite). The merge shape is the
-    load-bearing choice: an append-only log must NEVER be written
-    with an operation that can delete, because the max(seq) read and
-    the write are separate transactions — a rival that commits the
-    claimed seq BEFORE the write transaction's snapshot does not
-    overlap it, Delta raises no conflict, and a ``replaceWhere
-    seq >= claimed`` overwrite would silently DELETE the rival's
-    committed acquire/heartbeat (split-brain: both contenders then
-    win their read-backs at the same fence). With merge the same
-    race is benign by construction:
-
-    - rival committed BEFORE our snapshot → its row MATCHES our
-      source row on seq, the merge inserts nothing, and the
-      post-commit read-back sees a row that is not ours →
-      ``cas_append`` retries at a fresh seq; the rival's row is
-      untouched (merge has no whenMatched clause — it CANNOT delete
-      or update anything, ever);
-    - rival commits BETWEEN our snapshot and our commit → the merge's
-      recorded read predicate (``t.seq = <claimed>``) overlaps the
-      rival's added file, Delta's optimistic conflict detection fails
-      OUR commit (ConcurrentAppendException), and ``cas_append``
-      retries.
-
-    Either way commit order and seq order agree, which is all the
-    first-commit-wins tie-break needs. Success is decided by
-    READ-BACK (the row at the claimed seq is field-identical to
-    ours), never by assuming the commit landed.
-
-    (app_id, version) idempotency is SELF-CARRIED (round-10 review):
-    every row stores its ``app_id``/``app_version``, and ``append``
-    first checks ``max(app_version) where app_id`` — the watermark
-    record IS the row, so it exists iff the commit landed, atomically.
-    The round-10 first draft rode Delta's txnAppId/txnVersion session
-    configs instead, which is wrong in BOTH directions: if a Delta
-    version ignores them for MERGE there is no idempotency at all,
-    and if it honors them a replayed append (same version, fresh
-    claimed seq) is skipped as a duplicate on every retry — the
-    read-back finds nothing and cas_append exhausts and raises on
-    what should be an idempotent no-op; worse, a matched-no-insert
-    race loss could burn the version without landing the row. Run the
-    Delta integration tests against the pinned delta-spark version
-    before relying on this adapter in a deployment (they skip where
-    the package is absent)."""
-
-    SCHEMA = (
-        "seq LONG, fence LONG, owner STRING, op STRING, kind STRING,"
-        " ts_ms LONG, lease_ms LONG, app_id STRING, app_version LONG"
-    )
-    _COLS = (
-        "seq", "fence", "owner", "op", "kind", "ts_ms", "lease_ms",
-        "app_id", "app_version",
-    )
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError("DeltaLeaseLog requires the delta-spark package")
-        from delta import exceptions as _dx
-
-        self.spark = spark
-        self.table_path = table_path
-        self._conflicts = tuple(
-            getattr(_dx, n)
-            for n in (
-                "ConcurrentAppendException",
-                "ConcurrentDeleteReadException",
-                "ConcurrentDeleteDeleteException",
-                "ConcurrentTransactionException",
-                "MetadataChangedException",
-            )
-            if hasattr(_dx, n)
-        )
-        cols = ", ".join(
-            f"{c} {t}" for c, t in (p.split(" ") for p in self.SCHEMA.split(", "))
-        )
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS delta.`{table_path}` ({cols}) USING delta"
-        )
-        # CREATE IF NOT EXISTS silently keeps a pre-existing table's
-        # schema: a log created by the round-8 CDF-based code has no
-        # seq column (and a round-10-draft log no app_id column), and
-        # limping on would brick the first read()/append() (review
-        # findings r9/r10). Fail loudly with the migration instead.
-        live_cols = set(
-            spark.read.format("delta").load(table_path).columns
-        )
-        if "seq" not in live_cols or "app_id" not in live_cols:
-            raise RuntimeError(
-                f"lease log at {table_path} predates the current schema"
-                " (persisted 'seq' + self-carried 'app_id'/'app_version'"
-                " idempotency columns). Migrate with the holder's lease"
-                " HELD: read the old log, keep only rows at the top fence,"
-                " rewrite them under the new schema to a NEW table path,"
-                " and point every writer at it."
-            )
-
-    def read(self) -> list[dict]:
-        out = []
-        for row in self.spark.read.format("delta").load(self.table_path).collect():
-            d = row.asDict()
-            d["_seq"] = d.pop("seq")
-            out.append(d)
-        return out
-
-    def _max_seq(self) -> int:
-        from pyspark.sql import functions as F
-
-        row = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .agg(F.max("seq"))
-            .collect()[0]
-        )
-        return row[0] if row[0] is not None else 0
-
-    def _try_commit(self, stamped: list[dict], claimed_seq: int) -> bool:
-        """One insert-if-absent attempt at the claimed seq. True only
-        when the read-back shows OUR row at that seq (see the class
-        docstring for why merge + read-back, never a replaceWhere
-        overwrite, is the only safe shape here). No txn session
-        configs: idempotency is self-carried by the row's
-        app_id/app_version columns (class docstring)."""
-        from delta.tables import DeltaTable
-
-        row = stamped[0]
-        src = self.spark.createDataFrame(
-            [tuple(row[c] for c in self._COLS)], self.SCHEMA
-        )
-        target = DeltaTable.forPath(self.spark, self.table_path)
-        (
-            target.alias("t")
-            .merge(src.alias("s"), f"t.seq = s.seq AND t.seq = {int(claimed_seq)}")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        got = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .where(f"seq = {int(claimed_seq)}")
-            .collect()
-        )
-        if not got:
-            return False  # rival pruned/raced — claim a fresh seq
-        landed = got[0].asDict()
-        return all(landed[c] == row[c] for c in self._COLS)
-
-    def append(self, rows: list[dict], app_id: str, version: int) -> None:
-        if len(rows) != 1:
-            # The merge mints exactly one seq per transaction; a
-            # multi-row batch could land PARTIALLY when a rival holds
-            # one of the claimed seqs (merge inserts each not-matched
-            # source row independently). The lease protocol only ever
-            # appends single rows, so refuse loudly rather than risk
-            # orphan stamps.
-            raise ValueError("DeltaLeaseLog.append commits exactly one row per call")
-        from pyspark.sql import functions as F
-
-        # self-carried idempotency watermark (review round-10): the
-        # watermark record IS the committed row, so it advances exactly
-        # when the append landed — no dependence on whether a Delta
-        # version honors txn session configs for MERGE
-        wm_row = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .where(F.col("app_id") == app_id)
-            .agg(F.max("app_version"))
-            .collect()[0]
-        )
-        if wm_row[0] is not None and version <= wm_row[0]:
-            return  # idempotent replay: the original commit already landed
-        stamped_rows = [{**r, "app_id": app_id, "app_version": int(version)} for r in rows]
-        cas_append(
-            self._max_seq,
-            self._try_commit,
-            stamped_rows,
-            self._conflicts or (),
-        )
-
-    def prune(self, below_fence: int, attempts: int = 8) -> None:
-        """Bound the log: drop rows below ``below_fence`` (typically
-        the caller's own acquired fence — the protocol only ever
-        consults the top fence). Concurrent appends CAN conflict with
-        this delete (review finding r9): every append is a read-write
-        MERGE transaction whose seq read predicate may span the files
-        the delete rewrites, so Delta may fail one side with a
-        concurrent-delete/append exception — the appender retries via
-        cas_append, and prune retries here; the retry is safe because
-        deleting already-dead fences is idempotent."""
-        from delta.tables import DeltaTable
-
-        for i in range(attempts):
-            try:
-                DeltaTable.forPath(self.spark, self.table_path).delete(
-                    f"fence < {int(below_fence)}"
-                )
-                return
-            except self._conflicts or ():
-                if i == attempts - 1:
-                    raise
-
-
-class DeltaPartitionSwap:
-    """PROTOTYPE (import-gated): the crash-atomic partition swap
-    (protocol 3 — retention erasure, compaction, rollup rebuild) as
-    Delta commits — the third row of the mapping table.
-
-    - ``swap(df, predicate)``: ONE ``overwrite`` commit with
-      ``replaceWhere`` — the replaced partition's removal and the
-      replacement's visibility are a single snapshot transition, so
-      the two-phase .old_*/rename dance AND engine._recover_swaps'
-      roll-forward/back both disappear: an interrupted swap simply
-      never committed, and readers keep the old snapshot.
-    - ``erase(predicate)``: retention/GDPR delete
-      (lib/orestes-remover.js:16-53 semantics). The DELETE commit is
-      the LOGICAL erasure (immediately invisible to every new
-      snapshot); physical bytes persist in unreferenced files until
-      ``vacuum(retention_hours)`` — the honest GDPR contract mirrors
-      PosixCommitBackend.swap_partition's strict-removal rule: a
-      deployment with an erasure SLA must run VACUUM inside it, so
-      ``erase`` returns the vacuum obligation rather than hiding it.
-    """
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError("DeltaPartitionSwap requires the delta-spark package")
-        self.spark = spark
-        self.table_path = table_path
-
-    @staticmethod
-    def bucket_predicate(buckets: list[int], col: str = "bucket") -> str:
-        """replaceWhere/DELETE predicate for a bucket set — validated
-        integers only, so the predicate can never smuggle SQL."""
-        if not buckets:
-            raise ValueError("empty bucket list")
-        ids = ", ".join(str(int(b)) for b in sorted(set(buckets)))
-        return f"{col} IN ({ids})"
-
-    def swap(self, df, predicate: str, txn: tuple[str, int] | None = None) -> None:
-        """One replaceWhere commit. ``txn`` (round-9) is an
-        ``(app_id, version)`` pair from ``LeaseFence.next_txn()``: the
-        maintenance cycle's acquired fence rides the commit, so a
-        zombie's replayed swap is refused by the data table once a
-        higher-fence cycle has committed. A fenced ERASE is a swap of
-        the retained rows (possibly an empty DataFrame) — Delta's
-        DeltaTable.delete() API cannot carry txn options, replaceWhere
-        can."""
-        w = df.write.format("delta").mode("overwrite").option("replaceWhere", predicate)
-        if txn is not None:
-            w = w.option("txnAppId", txn[0]).option("txnVersion", txn[1])
-        w.save(self.table_path)
-
-    def erase(self, predicate: str) -> str:
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(self.spark, self.table_path).delete(predicate)
-        return (
-            "logical erasure committed; physical removal requires "
-            "VACUUM past the table's deletedFileRetentionDuration"
-        )

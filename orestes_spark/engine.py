@@ -213,10 +213,7 @@ def _require_posix_warehouse(warehouse: str) -> None:
     would silently not hold. Refuse LOUDLY instead — at that tier the
     commit log belongs to a lakehouse table format (Delta/Iceberg),
     whose transaction log does this job. The protocols are isolated
-    behind commit_backend.PosixCommitBackend and all three protocols
-    are prototyped on Delta's log (commit_backend.DeltaEpochSink /
-    TableFormatWriterLease / DeltaPartitionSwap, documented in
-    SCALING.md)."""
+    behind commit_backend.PosixCommitBackend."""
     if "://" not in warehouse:
         return
     scheme = warehouse.split("://", 1)[0]
@@ -232,10 +229,7 @@ def _require_posix_warehouse(warehouse: str) -> None:
         " POSIX atomic rename/link, which object stores do not provide —"
         " the guarantees would silently not hold. Use a local/NFS path, or"
         " a lakehouse table format (Delta/Iceberg) whose transaction log"
-        " owns the commit protocol at object-store scale (see"
-        " orestes_spark.commit_backend: DeltaEpochSink for epoch commits,"
-        " TableFormatWriterLease for the writer lease, DeltaPartitionSwap"
-        " for erasure/compaction swaps)."
+        " owns the commit protocol at object-store scale."
     )
 
 
@@ -282,11 +276,10 @@ def _publish_compact_manifest(points_root: Path, part_name: str, tmp: Path) -> N
     _write_manifest(points_root / "_epochs" / f"epoch-{key}", files, "compact")
 
 
-# The manifest commit-log primitives live in commit_backend (the
-# round-7 lakehouse seam): engine code keeps these module names, so
-# every call site and test is unchanged while the POSIX implementation
-# is swappable/inspectable as one unit (see
-# commit_backend.PosixCommitBackend and the DeltaEpochSink prototype).
+# The manifest commit-log primitives live in commit_backend: engine
+# code keeps these module names, so every call site and test is
+# unchanged while the POSIX implementation is inspectable as one unit
+# (see commit_backend.PosixCommitBackend).
 _read_manifest = _BACKEND.read_manifest
 _write_manifest = _BACKEND.publish_manifest
 

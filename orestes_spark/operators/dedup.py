@@ -1378,16 +1378,25 @@ def connected_components(
     BEFORE the probe, so when the graph turns out large the
     distributed loop reuses the probe's computed partitions instead
     of re-executing the upstream pair pipeline (the expensive case
-    paid the probe twice); and a NULL id routes to the distributed
-    path — the driver union-find's min-label resolution would raise
-    on None < int where the joins degrade defined."""
+    paid the probe twice).
+
+    A NULL ``id_a``/``id_b`` raises on both paths: the projection
+    below fails the job on it, where the distributed equi-joins would
+    otherwise drop the edge silently (NULL keys never match)."""
+
+    def non_null(c):
+        return F.coalesce(
+            F.col(c),
+            F.raise_error(
+                F.lit(f"connected_components: NULL id in pair column {c!r}")
+            ).cast(pairs.schema[c].dataType),
+        )
+
     directed = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        non_null(id_a).alias("src"), non_null(id_b).alias("dst")
     ).localCheckpoint(eager=False)
     probe = directed.limit(_DRIVER_CC_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_CC_MAX_EDGES and not any(
-        row[0] is None or row[1] is None for row in probe
-    ):
+    if len(probe) <= _DRIVER_CC_MAX_EDGES:
         parent: dict = {}
 
         def find(x):

@@ -1793,7 +1793,7 @@ ARTIFACT_CONSUMERS = {
     "phash_band_index": ["multimodal_incremental_phash"],
     "video_unit_index": ["multimodal_incremental_video"],
     "audio_unit_index": ["multimodal_incremental_audio"],
-    "semantic_index": ["emb_incremental_semdedup", "emb_incremental_arrow"],
+    "semantic_index": ["emb_incremental_semdedup"],
     "kmeans_cells": ["emb_kmeans_assign", "emb_ivf_trained", "emb_ivf_recall"],
     "bigram_lm": ["doc_lm_perplexity", "doc_ccnet_buckets", "doc_quality_report"],
     "dsir_codebooks": ["doc_dsir_weights", "doc_dsir_bigram", "doc_dsir_sample", "doc_quality_report"],
@@ -4488,38 +4488,6 @@ def emb_incremental_semdedup(spark, sf_dir):
         quantize=1000,
         cents=spark.read.parquet(root + "/cents"),
     )
-
-
-@register("emb_incremental_arrow", oracles.emb_incremental_semdedup_sql())
-def emb_incremental_arrow(spark, sf_dir):
-    """Production kernel twin of emb_incremental_semdedup: the
-    batch-vs-index verify as sliced numpy GEMMs per cell (cogrouped
-    applyInPandas) — the path that survives a Zipf-headed index, where
-    the expression equi-join would evaluate |batch∩cell|×|cell|
-    per-element dots. Integer-exact under quantize (same oracle)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    new = e.where(F.col("vec_id") % 5 == 0)
-    root = _sem_index_for(spark, sf_dir)
-    return similarity.incremental_semantic_dedup_arrow(
-        new,
-        spark.read.parquet(root + "/index"),
-        threshold=0.35,
-        quantize=1000,
-        cents=spark.read.parquet(root + "/cents"),
-    )
-
-
-@register("emb_semantic_arrow", oracles.emb_semantic_dedup_sql())
-def emb_semantic_arrow(spark, sf_dir):
-    """Production SemDeDup kernel: per-cluster numpy GEMM via
-    applyInPandas, ORACLE-CHECKED against the same DuckDB twin as
-    emb_semantic_dedup: with quantize the GEMM runs on exact integer
-    dot/norms, so the only theoretical divergence from the expression
-    path is a cosine landing bit-exactly on a .5e-7 rounding boundary
-    (never observed; path equivalence is additionally test-pinned by
-    test_semantic_dedup_arrow_equals_expression_path)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup_arrow(e, threshold=0.35, quantize=1000)
 
 
 @register("emb_prototypes", oracles.emb_prototypes_sql())
@@ -7283,7 +7251,7 @@ _DRIVER_PRIORITY = [
     "events_time_to_convert",
     "emb_ivf_probe2",
     "emb_ivfpq_topk",
-    "emb_semantic_arrow",
+    "emb_semantic_dedup",
     "ts_asof_forward",
     "doc_novelty",
     "ts_histogram_quantile",

@@ -246,6 +246,20 @@ def test_connected_components_driver_path_matches_distributed(spark, monkeypatch
     assert fast[9] == 2 and fast[22] == 20 and fast[31] == 30
 
 
+def test_connected_components_null_edge_raises_on_both_paths(spark, monkeypatch):
+    """A NULL id is an error, never a silently dropped edge (the
+    distributed loop's equi-joins never match a NULL key): both the
+    driver union-find and the distributed path must refuse it."""
+    from orestes_spark.operators import dedup
+
+    for edges in ([(1, 2), (2, None)], [(1, 2), (None, 3)]):
+        pairs = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
+        for cap in (dedup._DRIVER_CC_MAX_EDGES, 0):  # driver, then distributed
+            monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", cap)
+            with pytest.raises(Exception, match="NULL id in pair column"):
+                dedup.connected_components(pairs).collect()
+
+
 def test_simhash_hot_bucket_cap_bounds_pair_fanout(spark):
     from pyspark.sql import functions as F
 
