@@ -28,7 +28,8 @@ Query semantics preserved from the reference:
   - cross-bucket series dedup on reads (D1,
     /root/reference/lib/orestes-query.js:300-311);
   - only-first-write-creates-metadata dedup on writes (D2, Bubo cache →
-    here an anti-join against the existing series table,
+    here a per-(space, bucket) known-series set for driver commits and
+    an anti-join against the existing series table on the Spark sinks,
     /root/reference/lib/orestes-inserter.js:98-116);
   - retention delete drops whole buckets, never rows (S9,
     /root/reference/lib/orestes-remover.js:16-53).
@@ -44,15 +45,21 @@ at scale.
 
 from __future__ import annotations
 
+import itertools
 import json as _json_mod
+import operator
+import os
 import re as _re
 import shutil
 import threading
 import time as _time
+import uuid
 from contextlib import contextmanager
 from pathlib import Path
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -252,8 +259,6 @@ def _fresh_epoch_key() -> int:
     """Random positive int63 epoch key for compaction manifests —
     collision-free against stream keys (themselves hashes or small
     ints) by birthday bound."""
-    import uuid
-
     return uuid.uuid4().int >> 65
 
 
@@ -468,6 +473,69 @@ def _proven_time_ms(t: Any) -> int | None:
     return None
 
 
+# The file schemas Spark writes for the points and series tables
+# (bucket is the partition directory, not a column).
+_TAGS_ARROW = pa.map_(pa.string(), pa.string())
+_POINTS_ARROW = pa.schema(
+    [
+        ("time_ms", pa.int64()),
+        ("value", pa.float64()),
+        ("tags", _TAGS_ARROW),
+        ("series_id", pa.string()),
+        pa.field("_seq", pa.int64(), nullable=False),
+    ]
+)
+_SERIES_ARROW = pa.schema([("series_id", pa.string()), ("tags", _TAGS_ARROW)])
+# The encodings Spark's parquet writer settles on for these columns
+# (dictionary for the strings and _seq, plain for time_ms and value),
+# and no Arrow schema in the footer: the files come out the size of
+# Spark's.
+_PARQUET_WRITE = {
+    "use_dictionary": ["tags.key_value.key", "tags.key_value.value", "series_id", "_seq"],
+    "store_schema": False,
+}
+
+
+def _driver_points(
+    rows: list[tuple[int, float, dict[str, str]]], granularity: int, seq: int
+) -> dict[int, tuple[list[tuple], pa.Table]]:
+    """The stored rows of a driver-committed delivery, per bucket: the
+    (bucket, series_id, time_ms, value, tags) rows sorted by the first
+    three, and the points file they make. Raises UnicodeEncodeError on
+    a string UTF-8 cannot encode (a lone surrogate)."""
+    keyed = sorted(
+        ((schema.bucket_of(t, granularity), schema.series_id(tags), t, v, tags) for t, v, tags in rows),
+        key=operator.itemgetter(0, 1, 2),
+    )
+    out = {}
+    for b, grp in itertools.groupby(keyed, key=operator.itemgetter(0)):
+        grp = list(grp)
+        _b, sids, times, values, tags = zip(*grp)
+        out[b] = (
+            grp,
+            pa.table(
+                [times, values, [list(t.items()) for t in tags], sids, [seq] * len(grp)],
+                schema=_POINTS_ARROW,
+            ),
+        )
+    return out
+
+
+def _publish_staged(root: Path, stage: Path) -> None:
+    """Move the bucket=B dirs of a staged plain append into ``root``:
+    file by file into a bucket that exists, as the whole dir into one
+    that does not, so a crash never leaves a file-less bucket=*
+    partition. The stage dir is dot-prefixed, invisible to readers."""
+    for bdir in sorted(stage.glob("bucket=*")):
+        tgt = root / bdir.name
+        if tgt.exists():
+            for f in bdir.iterdir():
+                f.rename(tgt / f.name)
+        else:
+            bdir.rename(tgt)
+    shutil.rmtree(stage)
+
+
 class RollupStaleWarning(UserWarning):
     """Rollup tables may diverge from point reads until reconciled
     (cross-delivery overwrites counted per-delivery in the partials)."""
@@ -524,6 +592,10 @@ class OrestesEngine:
         self._commit_mutex = threading.Lock()
         self._commit_queues: dict[str, list[_WriteRequest]] = {}
         self._committing: set[str] = set()
+        # (space, bucket) -> (series file names read, series ids in
+        # them): the driver commit's series dedup (_known_series),
+        # touched only under the space's writer lock.
+        self._series_seen: dict[tuple[str, int], tuple[set[str], set[str]]] = {}
 
     # ---------- single-writer lock ----------
 
@@ -756,18 +828,18 @@ class OrestesEngine:
         """Append ONE marker file per delivery. File creation is
         atomic, so a racing writer cannot lose another's marker the
         way a read-modify-write counter would. (The gate's accounting
-        is race-free; fully concurrent appends to the SAME space are
-        still bounded by the storage layer — Spark's file committer
-        stages all jobs for one table under a shared _temporary dir —
-        so same-space appends are serialized, same as compact():
-        concurrent list writes in this engine are group-committed into
+        is race-free, but same-space appends are still serialized,
+        same as compact(): a Spark-sink append stages its files under
+        a _temporary dir shared by every job writing that table, and
+        a driver commit's series dedup holds only if no other append
+        lands between its listing of the series bucket and its rename.
+        Concurrent list writes in this engine are group-committed into
         one append (_group_commit), and any other writer fails loudly
         on the writer lock.)
         Migrates the earlier single-JSON marker on first write: the
         old count seeds marker files (capped at 2 — only the ≤1 vs >1
         distinction is ever read) and the JSON is removed."""
         import json
-        import uuid
 
         p = self._deliveries_path(space)
         legacy = Path(self.config.warehouse) / space / "_deliveries.json"
@@ -962,10 +1034,13 @@ class OrestesEngine:
             for r in req.rows:
                 # Key on NORMALIZED epoch-ms (validation.time_key_ms),
                 # not the raw representation: 1700000000000 and its
-                # ISO form are the same Cassandra row. Unparseable
-                # times keep a raw-tagged key and flow to the Spark
-                # validation error path untouched.
-                tk = validation.time_key_ms(r["time"])
+                # ISO form are the same Cassandra row. A proven int is
+                # its own key (time_key_ms(t) == t within ±2**53).
+                # Unparseable times keep a raw-tagged key and flow to
+                # the Spark validation error path untouched.
+                tk = _proven_time_ms(r["time"])
+                if tk is None:
+                    tk = validation.time_key_ms(r["time"])
                 raw_keyed = raw_keyed or tk is None
                 k = (tk if tk is not None else ("raw", str(r["time"])), tuple(sorted(r["tags"].items())))
                 prev = merged_rows.get(k)
@@ -975,20 +1050,24 @@ class OrestesEngine:
             last_req.update(dict.fromkeys(merged_rows, i))
         # Rows whose time the driver proves valid carry time_ms and skip
         # Spark validation (validate_raw_rows already checked values
-        # and tags). The rest are normalized and classified in Spark,
-        # and a row a later request overwrote stays in (keep = false)
-        # so it still reports its own error.
+        # and tags); a group of only such rows is committed from the
+        # driver (_append on a list). The rest are normalized and
+        # classified in Spark, and a row a later request overwrote
+        # stays in (keep = false) so it still reports its own error.
         rows = []
-        unproven = 0
+        unproven = False
         for i, merged_rows in enumerate(batches):
             for k, r in merged_rows.items():
                 keep = last_req[k] == i
                 ms = _proven_time_ms(r["time"])
                 if ms is None:
-                    unproven += 1
+                    unproven = True
                 elif not keep:
                     continue
                 rows.append((i, keep, None if ms is not None else r["time"], ms, r["value"], r["tags"]))
+        if not unproven:
+            self._append([r[3:] for r in rows], space)
+            return
         if raw_keyed:
             # A time the driver parser could not key may still
             # parse executor-side (schema.normalize_time_col is
@@ -1003,34 +1082,31 @@ class OrestesEngine:
             rows,
             "req INT, keep BOOLEAN, time STRING, time_ms LONG, value DOUBLE,"
             " tags MAP<STRING,STRING>",
-        )
-        if unproven:
-            df = df.withColumn(
-                "time_ms",
-                F.coalesce(
-                    F.col("time_ms"),
-                    schema.bucketable_time_col(
-                        schema.normalize_time_col(F.col("time")), self._granularity(space)
-                    ),
+        ).withColumn(
+            "time_ms",
+            F.coalesce(
+                F.col("time_ms"),
+                schema.bucketable_time_col(
+                    schema.normalize_time_col(F.col("time")), self._granularity(space)
                 ),
-            )
-            # The adapter already guaranteed the time KEY, so a NULL
-            # time_ms is present-but-unparseable — the reference's
-            # distinct 'invalid timestamp' error, not missing-keys.
-            df, err_df = validation.split_valid(df, validation.ERR_INVALID_TIMESTAMP)
-            df = df.where("keep")
-            # Per-point error reporting (S4). The error rows come from
-            # list input already held in the driver, so collecting all
-            # of them is bounded by the requests themselves.
-            errs = err_df.select("req", "time_ms", "value", "tags", "error").collect()
-            for row in errs:
-                point = row.asDict(recursive=True)
-                group[point.pop("req")].errors.append({"point": point, "error": row["error"]})
-            for req in group:
-                if len(req.errors) > req.max_errors:
-                    total = len(req.errors)
-                    req.errors[req.max_errors:] = [_truncation_entry(total, req.max_errors)]
-        self._append(df.select("time_ms", "value", "tags"), space)
+            ),
+        )
+        # The adapter already guaranteed the time KEY, so a NULL
+        # time_ms is present-but-unparseable — the reference's
+        # distinct 'invalid timestamp' error, not missing-keys.
+        df, err_df = validation.split_valid(df, validation.ERR_INVALID_TIMESTAMP)
+        # Per-point error reporting (S4). The error rows come from
+        # list input already held in the driver, so collecting all
+        # of them is bounded by the requests themselves.
+        errs = err_df.select("req", "time_ms", "value", "tags", "error").collect()
+        for row in errs:
+            point = row.asDict(recursive=True)
+            group[point.pop("req")].errors.append({"point": point, "error": row["error"]})
+        for req in group:
+            if len(req.errors) > req.max_errors:
+                total = len(req.errors)
+                req.errors[req.max_errors:] = [_truncation_entry(total, req.max_errors)]
+        self._append(df.where("keep").select("time_ms", "value", "tags"), space)
 
     def _write_partitions(self, df: DataFrame) -> int:
         """Size-based shuffle width for the points write: one range
@@ -1048,15 +1124,92 @@ class OrestesEngine:
             return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
         return max(floor, -(-size // (128 << 20)))
 
+    def _arrow_points(self, driver: dict[int, tuple[list, pa.Table]], staging: Path) -> None:
+        """Points sink of a driver commit: one parquet file per bucket
+        under ``staging/bucket=B/``, already sorted by (series_id,
+        time_ms) like the Spark sink's range-partitioned layout."""
+        for b, (_rows, table) in driver.items():
+            bdir = staging / f"bucket={b}"
+            bdir.mkdir(parents=True)
+            pq.write_table(table, bdir / f"part-{uuid.uuid4().hex}.parquet", **_PARQUET_WRITE)
+
+    def _arrow_series(self, space: str, driver: dict[int, tuple[list, pa.Table]]) -> None:
+        """Series sink of a driver commit: append the (bucket, series)
+        pairs missing from the known-series set (D2, the reference's
+        Bubo cache in lib/bucket-bubo.js), one file per bucket."""
+        root = self._series_path(space)
+        new: dict[int, dict[str, dict[str, str]]] = {}
+        for b, (rows, _table) in driver.items():
+            known = self._known_series(space, b)
+            fresh: dict[str, dict[str, str]] = {}
+            for _b, sid, _t, _v, tags in rows:
+                if sid not in known:
+                    fresh.setdefault(sid, tags)
+            if fresh:
+                new[b] = fresh
+        if not new:
+            return
+        staging = root / f".append-{uuid.uuid4().hex}"
+        names = {}
+        for b, fresh in new.items():
+            bdir = staging / f"bucket={b}"
+            bdir.mkdir(parents=True)
+            names[b] = f"part-{uuid.uuid4().hex}.parquet"
+            sids = sorted(fresh)
+            table = pa.table(
+                [sids, [list(fresh[s].items()) for s in sids]], schema=_SERIES_ARROW
+            )
+            pq.write_table(table, bdir / names[b], **_PARQUET_WRITE)
+        _publish_staged(root, staging)
+        for b, name in names.items():
+            files, known = self._series_seen[(space, b)]
+            files.add(name)
+            known.update(new[b])
+
+    def _known_series(self, space: str, bucket: int) -> set[str]:
+        """The series ids in ``series/bucket=B``, remembered with the
+        names of the files they were read from. Each call lists the
+        bucket: only files it has not read yet are read (their
+        series_id column), and if a file it read has vanished —
+        delete_series, remove or compact rewrote the bucket — it
+        reloads the whole bucket. Writes by the Spark sink or another
+        process therefore need no hook."""
+        bdir = self._series_path(space) / f"bucket={bucket}"
+        try:
+            names = {
+                n for n in os.listdir(bdir) if n.endswith(".parquet") and n[0] not in "._"
+            }
+        except FileNotFoundError:
+            names = set()
+        files, known = self._series_seen.get((space, bucket), (set(), set()))
+        if not files <= names:
+            files, known = set(), set()
+        for n in sorted(names - files):
+            col = pq.ParquetFile(bdir / n).read(columns=["series_id"]).column(0)
+            known.update(col.to_pylist())
+            files.add(n)
+        self._series_seen[(space, bucket)] = (files, known)
+        return known
+
     def _append(
         self,
-        valid: DataFrame,
+        valid: DataFrame | list[tuple[int, float, dict[str, str]]],
         space: str,
         epoch_id: int | None = None,
         stream_ns: str | None = None,
         stream_seq: int | None = None,
     ) -> None:
         """Commit one batch to the points / series / rollup sinks.
+
+        ``valid`` is a canonical (time_ms, value, tags) DataFrame, or a
+        list of (time_ms, value, tags) rows whose every time is an int
+        within ±2**53 (the group commit of list writes). A list is
+        committed from the driver: pyarrow writes the same files the
+        Spark sinks would (same columns, derived series_id and bucket,
+        one file per bucket sorted by (series_id, time_ms)), and the
+        series sink checks a known-series set instead of running the
+        anti-join. The lock, ``_seq``, the delivery marker and the
+        epoch staging/manifest publish are shared by both.
 
         ``stream_ns`` / ``stream_seq`` (streaming callers only) are
         recorded in the epoch manifest so marker pruning can protect
@@ -1110,26 +1263,76 @@ class OrestesEngine:
             return
         seq = max(int(_time.time() * 1000), self._last_seq + 1)
         self._last_seq = seq
-        stored = schema.with_derived(valid, g).withColumn("_seq", F.lit(seq).cast("long"))
+        step = self._rollup_step(space)
+        driver = None
+        if not isinstance(valid, DataFrame):
+            # List input commits from the driver with pyarrow: no Spark
+            # job. A space with rollup partials, or a string UTF-8
+            # cannot encode, takes the Spark sinks instead.
+            try:
+                driver = None if step else _driver_points(valid, g, seq)
+            except UnicodeEncodeError:
+                pass
+            if driver is None:
+                valid = self.spark.createDataFrame(
+                    valid, "time_ms LONG, value DOUBLE, tags MAP<STRING,STRING>"
+                )
         epoch_moved: list[str] = []  # filled by write_points (streaming)
 
+        if driver is not None:
+
+            def stage_points(staging: Path) -> None:
+                self._arrow_points(driver, staging)
+
+            def append_points() -> None:
+                staging = points_path / f".append-{uuid.uuid4().hex}"
+                stage_points(staging)
+                _publish_staged(points_path, staging)
+
+            def write_series() -> None:
+                self._arrow_series(space, driver)
+
+        else:
+            stored = schema.with_derived(valid, g).withColumn("_seq", F.lit(seq).cast("long"))
+
+            def bucket_files():
+                # Series-clustered layout: RANGE-partition by (bucket,
+                # series_id) so series stay contiguous (row-group
+                # min/max stats prune non-matching series at read time)
+                # while a hot bucket can still split across tasks —
+                # hash partitioning by (bucket, series) interleaves
+                # series across files and tripled write time.
+                laid_out = stored.repartitionByRange(
+                    self._write_partitions(stored), F.col("bucket"), F.col("series_id")
+                ).sortWithinPartitions("bucket", "series_id", "time_ms")
+                return laid_out.write.partitionBy("bucket")
+
+            def stage_points(staging: Path) -> None:
+                bucket_files().mode("overwrite").parquet(str(staging))
+
+            def append_points() -> None:
+                bucket_files().mode("append").parquet(str(points_path))
+
+            def write_series() -> None:
+                # Metadata upsert with write-time dedup (D2): distinct
+                # new (bucket, series) anti-joined against what's
+                # already known.
+                new_series = stored.select("bucket", "series_id", "tags").dropDuplicates(
+                    ["bucket", "series_id"]
+                )
+                existing = self._read_series(space)
+                if existing is not None:
+                    new_series = new_series.join(
+                        existing.select("bucket", "series_id"), ["bucket", "series_id"], "left_anti"
+                    )
+                new_series.write.mode("append").partitionBy("bucket").parquet(str(series_path))
+
         def write_points() -> None:
-            # Series-clustered layout: RANGE-partition by (bucket,
-            # series_id) so series stay contiguous (row-group min/max
-            # stats prune non-matching series at read time) while a hot
-            # bucket can still split across tasks — hash partitioning by
-            # (bucket, series) interleaves series across files and
-            # tripled write time.
-            laid_out = stored.repartitionByRange(
-                self._write_partitions(stored), F.col("bucket"), F.col("series_id")
-            ).sortWithinPartitions("bucket", "series_id", "time_ms")
             if epoch_id is None:
                 if not (points_path / "_epochs").exists():
                     # batch-only space: plain append, zero manifest
                     # overhead (Spark lists + prunes the dir itself)
-                    laid_out.write.mode("append").partitionBy("bucket").parquet(
-                        str(points_path)
-                    )
+                    append_points()
                     return
                 # Mixed batch+stream space (round-7: closes the
                 # documented transient-vanish race): a plain append's
@@ -1153,9 +1356,7 @@ class OrestesEngine:
                 key = _fresh_epoch_key()
                 tag = f"epoch{key}-"
                 staging = points_path / f".staging_epoch={key}"
-                laid_out.write.mode("overwrite").partitionBy("bucket").parquet(
-                    str(staging)
-                )
+                stage_points(staging)
                 moved: list[str] = []
                 renames: list[tuple[Path, Path]] = []
                 for bdir in sorted(staging.glob("bucket=*")):
@@ -1205,7 +1406,7 @@ class OrestesEngine:
                     if not any(bdir.iterdir()):
                         bdir.rmdir()
             staging = points_path / f".staging_epoch={epoch_id}"
-            laid_out.write.mode("overwrite").partitionBy("bucket").parquet(str(staging))
+            stage_points(staging)
             for bdir in staging.glob("bucket=*"):
                 tgt = points_path / bdir.name
                 tgt.mkdir(parents=True, exist_ok=True)
@@ -1222,21 +1423,6 @@ class OrestesEngine:
             # into a bucket dir may transiently MISS unrelated entries
             # (observed as partial-epoch counts in the soak test), and
             # a per-path stat has no such instability.
-
-        def write_series() -> None:
-            # Metadata upsert with write-time dedup (D2): distinct new
-            # (bucket, series) anti-joined against what's already known.
-            new_series = stored.select("bucket", "series_id", "tags").dropDuplicates(
-                ["bucket", "series_id"]
-            )
-            existing = self._read_series(space)
-            if existing is not None:
-                new_series = new_series.join(
-                    existing.select("bucket", "series_id"), ["bucket", "series_id"], "left_anti"
-                )
-            new_series.write.mode("append").partitionBy("bucket").parquet(str(series_path))
-
-        step = self._rollup_step(space)
 
         def write_rollup() -> None:
             # Continuous aggregate (hypertable-rollup analogue): each
@@ -2387,12 +2573,13 @@ def _engine_compact(
     # Decide ONCE, before the marker is reset below: collapse upserts
     # only when reads would merge them too.
     collapse_upserts = self._merge_needed(space)
-    # Orphaned epoch staging dirs (a stream decommissioned after a
-    # crash never replays its uncommitted epoch) are invisible to
-    # readers but leak disk — compaction is the natural sweep point.
+    # Orphaned staging dirs (a stream decommissioned after a crash
+    # never replays its uncommitted epoch; a driver commit that
+    # crashed before its renames) are invisible to readers but leak
+    # disk — compaction is the natural sweep point.
     proot = self._points_path(space)
-    if proot.exists():
-        for stale in proot.glob(".staging_epoch=*"):
+    for root in (proot, self._series_path(space)):
+        for stale in itertools.chain(root.glob(".staging_epoch=*"), root.glob(".append-*")):
             shutil.rmtree(stale)
     # Uncommitted epoch files must not be folded into untagged
     # compacted output (visibility + replay-duplicate hazard); they

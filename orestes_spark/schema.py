@@ -20,6 +20,8 @@ timezone pitfalls; helpers convert at the edges.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,10 +67,26 @@ def series_id_col(tags: Column) -> Column:
     )
 
 
+def series_id(tags: dict[str, str]) -> str:
+    """``series_id_col`` for one driver-side tag dict. Python orders
+    str by code point, which for valid Unicode is the UTF-8 byte order
+    Spark's array_sort uses."""
+    return ",".join(f"{k}={v}" for k, v in sorted(tags.items()))
+
+
 def _bucket_long(time_ms: Column, granularity_days: int) -> Column:
     day = F.floor(time_ms / F.lit(MS_IN_DAY))
     g = F.lit(granularity_days)
     return F.floor(day / g) * g
+
+
+def bucket_of(time_ms: int, granularity_days: int) -> int:
+    """``bucket_col`` for one driver-side int time within ±2**53.
+    Spark's ``/`` is a double division; Python's int ``/`` rounds the
+    exact quotient the same way, so a time a hair below a day boundary
+    lands in the same bucket on both sides."""
+    day = math.floor(time_ms / MS_IN_DAY)
+    return math.floor(day / granularity_days) * granularity_days
 
 
 def bucket_col(time_ms: Column, granularity_days: int) -> Column:

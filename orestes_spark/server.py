@@ -11,9 +11,11 @@ handler threads funnel into Spark's scheduler — the same role Express
 played in front of Cassandra/ES for the reference). Concurrent
 ``/write``s to one space are group-committed by the engine: requests
 that arrive while a commit runs join the next one and are acknowledged
-when it lands, so handler threads never race the writer lock. Other
-writers of the space (another process, a compaction) still fail
-loudly with the lock's 500.
+when it lands, so handler threads never race the writer lock. A group
+whose every time is an int epoch-ms is committed from the driver with
+pyarrow and runs no Spark job; a group with ISO-string times goes
+through the Spark sinks. Other writers of the space (another process,
+a compaction) still fail loudly with the lock's 500.
 
 /read responses stream with chunked transfer-encoding: the 200 status
 commits before Spark runs, each series is flushed as its fetcher

@@ -7,6 +7,8 @@ from __future__ import annotations
 import random
 from collections import defaultdict
 
+import pytest
+
 MS_IN_DAY = 86_400_000
 START = 1_700_000_000_000  # fixed epoch-ms base → deterministic buckets
 
@@ -731,31 +733,49 @@ def test_in_batch_duplicate_across_time_representations(engine):
     assert engine._read_points("default").count() == 1
 
 
-def test_marker_bumps_before_sinks_fail_safe(engine, monkeypatch):
-    """A partially-failed append must leave the merge gate ON (the
-    delivery marker is bumped before the sinks run), so duplicates a
+def _iso(ms):
+    """The ISO-8601 form of an epoch-ms time: the driver cannot prove
+    it, so a write carrying it takes the Spark sinks."""
+    import datetime
+
+    t = datetime.datetime.fromtimestamp(ms / 1000, tz=datetime.timezone.utc)
+    return t.isoformat(timespec="milliseconds").replace("+00:00", "Z")
+
+
+def _assert_failed_sink_leaves_gate_on(engine, monkeypatch, sink, time):
+    """Fail the series sink of the second of two writes of one
+    (series, time) and check the merge gate is left ON (the delivery
+    marker is bumped before the sinks run), so duplicates a
     half-committed delivery left behind are still merged at read."""
-    engine.write([{"time": START, "value": 1.0, "host": "a"}])
-    # Sabotage the series sink: second append raises mid-commit.
     import orestes_spark.engine as eng_mod
 
-    orig = eng_mod.OrestesEngine._read_series
+    engine.write([{"time": time, "value": 1.0, "host": "a"}])
 
-    def boom(self, space):
+    def boom(self, *args):
         raise RuntimeError("transient metadata-store failure")
 
-    monkeypatch.setattr(eng_mod.OrestesEngine, "_read_series", boom)
-    import pytest
-
+    monkeypatch.setattr(eng_mod.OrestesEngine, sink, boom)
     with pytest.raises(RuntimeError):
-        engine.write([{"time": START, "value": 9.0, "host": "a"}])
-    monkeypatch.setattr(eng_mod.OrestesEngine, "_read_series", orig)
+        engine.write([{"time": time, "value": 9.0, "host": "a"}])
+    monkeypatch.undo()
     # gate is ON even though the append failed
     assert engine._merge_needed("default")
     # the points sink may have committed before the series sink died:
     # whatever landed, the read must show ONE row per (series, time)
     rows = engine.read(None, "default", 0, START + 10**9, grouped=False).collect()
     assert len(rows) == 1 and rows[0]["time_ms"] == START
+
+
+def test_marker_bumps_before_sinks_fail_safe(engine, monkeypatch):
+    """A partially-failed Spark-sink append (ISO times) must leave the
+    merge gate ON; the Spark series sink dies reading the series
+    table."""
+    _assert_failed_sink_leaves_gate_on(engine, monkeypatch, "_read_series", _iso(START))
+
+
+def test_marker_bumps_before_sinks_fail_safe_driver_path(engine, monkeypatch):
+    """The same for a driver commit (int times): its series sink dies."""
+    _assert_failed_sink_leaves_gate_on(engine, monkeypatch, "_arrow_series", START)
 
 
 def test_append_only_compaction_preserves_rows(spark, tmp_path):
@@ -1259,30 +1279,44 @@ def test_group_commit_foreign_lock_fails_every_member(spark, tmp_path):
     assert read_as_model(eng) == {"host=z": ({"host": "z"}, [(START, 2.0)])}
 
 
-def test_group_commit_failed_sink_fails_every_member(spark, tmp_path):
-    """A sink that raises fails every member of its group; the writer
-    lock and the commit leadership are released, so the next write
-    commits."""
-    from orestes_spark.config import SpaceConfig
-    from orestes_spark.engine import OrestesEngine
+def _assert_failed_sink_fails_every_member(eng, sink, time):
+    """A points sink that raises fails every member of its group; the
+    writer lock and the commit leadership are released, so the next
+    write commits."""
 
-    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
-
-    def broken_points_sink(df):
+    def broken_points_sink(*args):
         raise RuntimeError("points sink down")
 
-    eng._write_partitions = broken_points_sink
-    batches = [[{"time": START + i, "value": 1.0, "host": str(i)}] for i in range(3)]
+    setattr(eng, sink, broken_points_sink)
+    batches = [[{"time": time(START + i), "value": 1.0, "host": str(i)}] for i in range(3)]
     outcomes, sizes = _write_as_one_group(eng, batches)
     assert sizes == [3]
     for o in outcomes:
         assert isinstance(o, RuntimeError) and "points sink down" in str(o)
-    del eng._write_partitions
+    delattr(eng, sink)
     assert not eng._lock_path("default").exists()
-    assert _write_or_hang(eng, [{"time": START, "value": 2.0, "host": "z"}]) == []
+    assert _write_or_hang(eng, [{"time": time(START), "value": 2.0, "host": "z"}]) == []
     assert read_as_model(eng, {"term": {"host": "z"}}) == {
         "host=z": ({"host": "z"}, [(START, 2.0)])
     }
+
+
+def test_group_commit_failed_sink_fails_every_member(spark, tmp_path):
+    """Spark sinks (ISO times): the points sink's width probe raises."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+    _assert_failed_sink_fails_every_member(eng, "_write_partitions", _iso)
+
+
+def test_group_commit_failed_sink_fails_every_member_driver_path(spark, tmp_path):
+    """Driver commit (int times): the pyarrow points sink raises."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"), spaces={"default": SpaceConfig(1)})
+    _assert_failed_sink_fails_every_member(eng, "_arrow_points", lambda ms: ms)
 
 
 def test_group_commit_later_request_wins_like_serial_writes(spark, tmp_path):
@@ -1308,6 +1342,69 @@ def test_group_commit_later_request_wins_like_serial_writes(spark, tmp_path):
     want = {"host=a": ({"host": "a"}, [(START, 3.0), (START + 1, 1.0)])}
     assert read_as_model(grouped, {"term": {"host": "a"}}) == want
     assert read_as_model(serial) == want
+
+
+@pytest.mark.parametrize(
+    "op", ["delete_series", "remove", "compact", "spark_write", "second_engine"]
+)
+def test_known_series_set_follows_other_series_writers(spark, tmp_path, op):
+    """A driver commit dedups series against a known-series set, not an
+    anti-join. Whatever changes the series table between two driver
+    commits (an erasure, a retention drop, a compaction, a Spark-sink
+    write, another engine on the warehouse), the table afterwards holds
+    every (bucket, series) exactly once, and /series and
+    /select_distinct match a model."""
+    import time
+
+    from orestes_spark.api import handle_request
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    wh = str(tmp_path / "wh")
+    eng = OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)})
+    today = int(time.time() * 1000) // MS_IN_DAY * MS_IN_DAY
+    days = (today - 10 * MS_IN_DAY, today)  # remove(keep_days=5) drops the first
+    model: set[tuple[int, str]] = set()  # (day, host)
+
+    def write(e, hosts, iso=False):
+        pts = [
+            {"time": _iso(t) if iso else t, "value": 1.0, "host": h} for t in days for h in hosts
+        ]
+        assert e.write(pts) == []
+        model.update((t, h) for t in days for h in hosts)
+
+    write(eng, "ab")
+    write(eng, "bc")  # two series files per bucket
+    if op == "delete_series":
+        assert eng.delete_series({"term": {"host": "a"}}) == 1
+        model -= {(t, "a") for t in days}
+    elif op == "remove":
+        assert eng.remove(keep_days=5) == [days[0] // MS_IN_DAY]
+        model -= {(days[0], h) for h in "abc"}
+    elif op == "compact":
+        eng.compact()
+    elif op == "spark_write":
+        write(eng, "cd", iso=True)
+    else:
+        write(OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)}), "de")
+    write(eng, "abde")
+    counts = eng._read_series("default").groupBy("bucket", "series_id").count().collect()
+    assert all(r["count"] == 1 for r in counts)
+    assert sorted((r["bucket"], r["series_id"]) for r in counts) == sorted(
+        (t // MS_IN_DAY, f"host={h}") for t, h in model
+    )
+    hosts = sorted({h for _t, h in model})
+    span = {"start": days[0], "end": days[1] + MS_IN_DAY}
+    assert sorted(s["host"] for s in handle_request(eng, "series", span)["series"]) == hosts
+    assert sorted(r["host"] for r in handle_request(eng, "select_distinct", {"keys": ["host"]})) == hosts
+
+
+def test_unencodable_tag_takes_spark_sinks(engine):
+    """A lone surrogate (a JSON "\\ud800" escape) has no UTF-8 form, so
+    pyarrow cannot write it: that write commits through the Spark sinks,
+    which store U+FFFD, as every list write did before driver commits."""
+    assert engine.write([{"time": START, "value": 1.0, "host": "\ud800"}]) == []
+    assert read_as_model(engine) == {"host=\ufffd": ({"host": "\ufffd"}, [(START, 1.0)])}
 
 
 def test_config_preserves_reference_client_knobs(tmp_path):

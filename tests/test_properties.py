@@ -336,6 +336,179 @@ def test_time_two_to_the_63_is_invalid_timestamp(engine):
     assert errs[0]["point"]["time_ms"] is None
 
 
+# ------------------------------- driver-committed derived columns ---
+
+_DAY_MS = 86_400_000
+# Code points whose UTF-16 order differs from their UTF-8 byte order
+# (U+E000 and U+FFFF sort after an astral character in UTF-16), the
+# separators of the series id, and plain ASCII. No lone surrogates:
+# UTF-8 cannot encode them, so such a write takes the Spark sinks
+# (tests/test_engine.py::test_unencodable_tag_takes_spark_sinks).
+_TAG_CHARS = st.one_of(
+    st.sampled_from(["a", "b", "Z", " ", "=", ",", "\u00e9", "\ue000", "\uffff", "\U0001f600"]),
+    st.characters(codec="utf-8"),
+)
+_tag_text = st.text(_TAG_CHARS, max_size=4)
+_day_edges = st.integers(-(2**53) // _DAY_MS, 2**53 // _DAY_MS).flatmap(
+    lambda k: st.sampled_from([k * _DAY_MS - 1, k * _DAY_MS, k * _DAY_MS + 1])
+)
+_derived_cases = st.lists(
+    st.tuples(
+        st.dictionaries(_tag_text, _tag_text, min_size=1, max_size=4),
+        st.one_of(st.integers(-(2**53), 2**53), _day_edges).filter(lambda t: abs(t) <= 2**53),
+    ),
+    min_size=1,
+    max_size=20,
+)
+_PINNED_TIMES = [
+    2**53, -(2**53), 2**53 // _DAY_MS * _DAY_MS - 1, 2**53 // _DAY_MS * _DAY_MS,
+    -(2**53 // _DAY_MS) * _DAY_MS - 1, -(2**53 // _DAY_MS) * _DAY_MS, -1, 0,
+    -_DAY_MS, -_DAY_MS - 1, -7 * _DAY_MS + 1,
+]
+
+
+@settings(max_examples=25, deadline=None)
+@given(cases=_derived_cases)
+@example(cases=[({"k": "v", "a=b": "c,d"}, t) for t in _PINNED_TIMES])
+@example(cases=[({"\ue000": "1", "\U0001f600": "2", "\u00e9": "=", "\uffff": ","}, -1)])
+def test_driver_series_id_and_bucket_match_spark(spark, cases):
+    """The driver commit's series id and bucket equal
+    schema.series_id_col and schema.bucket_col evaluated in Spark, for
+    non-ASCII tags, separators inside keys and values, every
+    granularity 1-7 and times across ±2**53 (day edges included)."""
+    from pyspark.sql import functions as F
+
+    from orestes_spark import schema
+
+    df = spark.createDataFrame(
+        [(i, tags, t) for i, (tags, t) in enumerate(cases)], "i INT, tags MAP<STRING,STRING>, t LONG"
+    )
+    rows = df.select(
+        "i",
+        schema.series_id_col(F.col("tags")).alias("sid"),
+        *[schema.bucket_col(F.col("t"), g).alias(f"b{g}") for g in range(1, 8)],
+    ).collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        tags, t = cases[r["i"]]
+        assert schema.series_id(tags) == r["sid"]
+        assert [schema.bucket_of(t, g) for g in range(1, 8)] == [r[f"b{g}"] for g in range(1, 8)]
+
+
+# ------------------------------------ driver vs Spark commit parity ---
+
+_PARITY_T0 = 1_700_000_000_000
+_PARITY_STEP_MS = 9_876_543  # 25 steps span ~3 day buckets; ms fractions
+_parity_points = st.lists(
+    st.tuples(
+        st.integers(0, 24),
+        st.integers(-3, 3),
+        st.sampled_from(["a", "b", "\u00fc"]),
+        st.sampled_from([None, "x", "y,z"]),
+    ),
+    min_size=1,
+    max_size=6,
+)
+_parity_requests = st.lists(_parity_points, min_size=1, max_size=4)
+
+
+def _iso_ms(ms):
+    import datetime
+
+    t = datetime.datetime.fromtimestamp(ms / 1000, tz=datetime.timezone.utc)
+    return t.isoformat(timespec="milliseconds").replace("+00:00", "Z")
+
+
+def _parity_answers(eng, space):
+    """What a client sees of ``space`` through the HTTP surface, in a
+    canonical order, then the stored rows after compact()."""
+    import json
+
+    from orestes_spark.api import handle_request
+
+    def canon(items):
+        return sorted(items, key=lambda x: json.dumps(x, sort_keys=True))
+
+    span = {"start": _PARITY_T0, "end": _PARITY_T0 + 3 * _DAY_MS}
+    out = {
+        "read": canon(handle_request(eng, "read", span, space)["series"]),
+        "read_term": canon(
+            handle_request(eng, "read", {**span, "query": {"term": {"host": "a"}}}, space)["series"]
+        ),
+        "count": canon(
+            handle_request(eng, "read", {**span, "aggregations": [{"type": "count"}]}, space)["series"]
+        ),
+        "series": canon(handle_request(eng, "series", span, space)["series"]),
+        "select_distinct": canon(
+            handle_request(eng, "select_distinct", {"keys": ["host", "dc"]}, space)
+        ),
+    }
+    eng.compact(space)
+    out["compacted_points"] = sorted(
+        (r["bucket"], r["series_id"], r["time_ms"], r["value"], sorted(r["tags"].items()))
+        for r in eng._read_points(space).collect()
+    )
+    out["compacted_series"] = sorted(
+        (r["bucket"], r["series_id"], sorted(r["tags"].items()))
+        for r in eng._read_series(space).collect()
+    )
+    return out
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(requests=_parity_requests)
+@example(
+    requests=[
+        [(0, 1, "a", None), (0, 2, "a", None), (9, 1, "b", "x"), (20, 0, "\u00fc", "y,z")],
+        [(0, -1, "a", None), (9, 3, "b", "x"), (24, 1, "a", "x")],
+        [(0, -2, "a", None), (24, -3, "a", "x"), (24, 3, "a", "x")],
+    ]
+)
+def test_driver_commit_matches_spark_sinks(spark, tmp_path_factory, requests):
+    """One request stream written with int times (driver commits) and
+    with the same instants as ISO strings (Spark sinks) answers /read,
+    /count, /series and /select_distinct identically and compacts to
+    the same rows. Also for a space whose requests alternate between
+    the two (both kinds of file in one bucket), and for a driver-written
+    space that has streamed before (_epochs: staged, manifest-published
+    batches)."""
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    spaces = ["iso", "int", "mixed", "epochs"]
+    eng = OrestesEngine(
+        spark,
+        str(tmp_path_factory.mktemp("wh_parity")),
+        spaces={s: SpaceConfig(1) for s in spaces},
+    )
+    # A streamed epoch of one point makes the space publish every later
+    # batch through the _epochs manifests; the other spaces get the
+    # same point as a first write.
+    eng._append(
+        spark.createDataFrame([(_PARITY_T0, 0.5, {"host": "s"})], "time_ms LONG, value DOUBLE, tags MAP<STRING,STRING>"),
+        "epochs",
+        epoch_id=1,
+    )
+    assert (eng._points_path("epochs") / "_epochs").exists()
+    for s in ("iso", "int", "mixed"):
+        t = _iso_ms(_PARITY_T0) if s == "iso" else _PARITY_T0
+        assert eng.write([{"time": t, "value": 0.5, "host": "s"}], s) == []
+    for i, req in enumerate(requests):
+        for s in spaces:
+            iso = s == "iso" or (s == "mixed" and i % 2 == 1)
+            pts = []
+            for step, v, host, dc in req:
+                t = _PARITY_T0 + step * _PARITY_STEP_MS
+                p = {"time": _iso_ms(t) if iso else t, "value": float(v), "host": host}
+                if dc is not None:
+                    p["dc"] = dc
+                pts.append(p)
+            assert eng.write(pts, s) == []
+    want = _parity_answers(eng, "iso")
+    for s in ("int", "mixed", "epochs"):
+        assert _parity_answers(eng, s) == want, s
+
+
 # ------------------------------------------------- rag-chunk model ---
 
 _WORDS = ["alpha", "Beta", "g", "δ", "12"]
