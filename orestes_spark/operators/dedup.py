@@ -30,7 +30,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from orestes_spark.plans.parallelism import ensure_min_parallelism
@@ -472,147 +472,138 @@ def minhash_band_index(
 
     ``buckets`` (round-10, completing the span index's treatment for
     the LSH side): adds ``hb = pmod(xxhash64(band, bval), buckets)``
-    plus the self-describing modulus ``nb`` (see ``band_bucketize``).
+    plus the self-describing modulus ``nb`` (``bucketize``).
     Write the index ``partitionBy("hb")``; ``incremental_neardup``
     then partition-prunes its candidate scan to the buckets the
     batch's band keys land in, and ``band_bloom`` adds the per-bucket
     pre-filter on top."""
     arrays = token_shingle_arrays(docs, id_col, text_col, shingle_size)
     idx = minhash_band_rows(minhash_signatures(arrays, num_hashes), num_hashes, rows_per_band)
-    if buckets:
-        idx = band_bucketize(idx, buckets)
-    return idx
+    return bucketize(idx, _band_key_hash(), buckets) if buckets else idx
 
 
-def _validated_nb(index, what: str, buckets: int | None = None) -> int | None:
-    """ONE home for the self-describing bucket-modulus contract
-    (review round-10: four hand-rolled copies had already diverged).
-    Returns the index's single nb (None when the index carries none),
-    raising on a mixed-modulus frame and on an explicit ``buckets``
-    that disagrees — pruning with the wrong modulus silently drops
-    genuine hits, the one failure a decontamination gate must never
-    have."""
-    return _validated_layout(index, what, buckets)
+# ------------------------------------------- bucketed-index layout ---
+# Five persisted index families — MinHash bands, SimHash/dHash bands,
+# aligned media units, spans and winnow prints — share ONE layout
+# contract: each row carries ``hb = pmod(key, nb)::int`` and the
+# self-describing modulus ``nb`` (plus ``kg``/``wn``/``slt`` where the
+# family has them), the index is written ``partitionBy("hb")``, and a
+# probe scans only the buckets its batch's keys touch. Only the key
+# expression differs per family, and it is defined next to its family
+# (_band_key_hash, multimodal._unit_key_hash, span ``h``, winnow
+# ``fp``). Pruning with the wrong modulus, or joining a different
+# k/w/salt's key space, silently drops genuine hits — the one failure
+# a dedup or decontamination gate must never have — so every build,
+# probe and store gate goes through the functions below.
 
 
-def _validated_layout(
+def _bucket_of(key, nb: int) -> Column:
+    """The one hash-range bucket expression: ``pmod(key, nb)::int``
+    (``key``: a column name or a Column)."""
+    return F.pmod(key, F.lit(int(nb))).cast("int")
+
+
+def bucketize(idx: DataFrame, key, buckets: int) -> DataFrame:
+    """Add ``hb`` (the bucket of the family's 64-bit ``key``) and the
+    self-describing modulus ``nb`` to index rows. Everything that
+    writes bucketed index rows — the family builders and compaction's
+    rebucket path — goes through here."""
+    return idx.withColumn("hb", _bucket_of(key, buckets)).withColumn(
+        "nb", F.lit(int(buckets))
+    )
+
+
+def touched_buckets(keys: DataFrame, key, nb: int) -> list[int]:
+    """The distinct buckets a batch's keys land in — the literal list a
+    probe filters ``hb IN (...)`` with, so a ``partitionBy("hb")``
+    index is partition-pruned at the scan. ``keys`` is batch-sized
+    (checkpointed where it has other consumers); the pmod runs
+    executor-side and at most ``nb`` ids reach the driver — bounded
+    by the layout, never by the batch (guide §5)."""
+    return [r[0] for r in keys.select(_bucket_of(key, nb)).distinct().collect()]
+
+
+def check_layout(
     index,
     what: str,
     buckets: int | None = None,
     k: int | None = None,
     w: int | None = None,
     salt: str | None = None,
-) -> int | None:
-    """One-pass validation of a persisted index's self-describing
-    layout columns: the bucket modulus ``nb`` (the _validated_nb
-    contract) and — round-12, ADVICE r11 — the k-gram size ``kg``.
-    The kg check closes the silent-drop failure the nb discipline
-    exists to prevent but the k=n contract only documented: a
-    span_index built with k != the probe's n joins on DISJOINT
-    xxhash64 keys and reports containment 0 for every probe — an
-    under-reporting decontamination gate. Both columns are read in
-    ONE distinct-collect (column-pruned, RLE-constant); a mixed frame
-    or a caller/index disagreement raises on either. Indexes that
-    predate the kg column (or external h-only frames) validate by
-    docstring contract as before — absence is legal, disagreement is
-    not. The winnow index extends the same discipline to its window
-    size ``wn`` and hash salt ``slt`` (either disagreeing likewise
-    yields disjoint fingerprint spaces and a silent zero). Returns
-    the index's nb (None when it carries none)."""
+) -> dict:
+    """Validate a persisted index's self-described layout against the
+    caller's settings and return it as {"nb", "kg", "wn", "slt"}:
+    ``nb`` is the pruning modulus (None: scan unpruned), the others
+    the self-described k-gram size, window and salt (None when the
+    index lacks the column). ``nb``/``kg``/``wn``/``slt`` are
+    read in ONE distinct-collect (column-pruned, RLE-constant; no job
+    when the index carries none of them). A frame mixing values of
+    any of them raises — it was assembled from different builds — and
+    so does a caller setting that disagrees: a wrong modulus prunes
+    away genuine hits, and k-grams or prints of different k/w/salt
+    never match, so the join would report zero hits for every probe.
+    Absence is legal (pre-kg indexes, external h-only frames validate
+    by docstring contract), disagreement is not. An index with ``hb``
+    but no ``nb`` predates the self-describing modulus: the caller's
+    ``buckets`` is trusted as its modulus."""
     cols = [c for c in ("nb", "kg", "wn", "slt") if c in index.columns]
-    if not cols:
-        return None
     vals: dict[str, set] = {c: set() for c in cols}
-    for r in index.select(*cols).distinct().collect():
-        for c in cols:
-            if r[c] is not None:
-                vals[c].add(r[c] if c == "slt" else int(r[c]))
-    if len(vals.get("nb", ())) > 1:
-        raise ValueError(
-            f"{what} mixes bucket moduli {sorted(vals['nb'])}: it was"
-            " assembled from differently-bucketed builds — rebucket it"
-            " through one compaction/build before using it"
-        )
-    if len(vals.get("kg", ())) > 1:
-        raise ValueError(
-            f"{what} mixes k-gram sizes {sorted(vals['kg'])}: it was"
-            " assembled from builds with different k — k-gram hashes of"
-            " different sizes never match, so probing any of it with one"
-            " k silently reports zero hits; rebuild it with one k"
-        )
-    nb = next(iter(vals["nb"])) if vals.get("nb") else None
-    if buckets and nb is not None and int(buckets) != nb:
-        raise ValueError(
-            f"{what} was built with buckets={nb} but the caller asked for"
-            f" buckets={int(buckets)}: pruning with the wrong modulus"
-            " silently drops genuine hits"
-        )
-    kg = next(iter(vals["kg"])) if vals.get("kg") else None
-    if k is not None and kg is not None and int(k) != kg:
-        raise ValueError(
-            f"{what} was built with k={kg} but the probe asked for"
-            f" k={int(k)}: k-gram hashes of different sizes never match,"
-            " so the join would silently report zero hits for every"
-            " probe — rebuild the index with the probe's k"
-        )
-    for col_name, asked, label in (("wn", w, "w"), ("slt", salt, "salt")):
-        if len(vals.get(col_name, ())) > 1:
+    if cols:
+        for r in index.select(*cols).distinct().collect():
+            for c in cols:
+                if r[c] is not None:
+                    vals[c].add(r[c] if c == "slt" else int(r[c]))
+    have: dict = {}
+    for c, label, plural, asked in (
+        ("nb", "buckets", "bucket moduli", buckets or None),
+        ("kg", "k", "k-gram sizes", k),
+        ("wn", "w", "w values", w),
+        ("slt", "salt", "salt values", salt),
+    ):
+        v = vals.get(c, ())
+        if len(v) > 1:
             raise ValueError(
-                f"{what} mixes {label} values {sorted(vals[col_name])}:"
-                " it was assembled from builds with different"
-                f" {label} — rebuild it with one"
+                f"{what} mixes {plural} {sorted(v)}: it was assembled from"
+                f" builds with different {label}, and probing any of it"
+                " with one setting silently drops genuine hits — rebuild"
+                " or rebucket it through one build/compaction"
             )
-        have = next(iter(vals[col_name])) if vals.get(col_name) else None
-        if asked is not None and have is not None and asked != have:
+        have[c] = next(iter(v)) if v else None
+        if asked is not None and c != "slt":
+            asked = int(asked)
+        if asked is not None and have[c] is not None and asked != have[c]:
             raise ValueError(
-                f"{what} was built with {label}={have!r} but the probe"
-                f" asked for {label}={asked!r}: fingerprints from"
-                " different configurations never match, so the join"
-                " would silently report zero hits for every probe"
+                f"{what} was built with {label}={have[c]!r} but the caller"
+                f" asked for {label}={asked!r}: pruning with another modulus,"
+                " or joining k-grams/prints of another configuration,"
+                " silently drops genuine hits"
             )
-    return nb
+    if have["nb"] is None and buckets and "hb" in index.columns:
+        have["nb"] = int(buckets)
+    return have
 
 
-def _probe_nb_and_touched(
-    keys: DataFrame, index: DataFrame, what: str
-) -> tuple[int | None, list[int] | None]:
-    """Probe-side layout read for the simhash/aligned incremental
-    probes (round-13): validates the index's self-described bucket
-    modulus (``_validated_nb`` — a mixed-modulus index raises; pruning
-    with the wrong modulus silently drops genuine hits, the one
-    failure a dedup gate must never have) and collects the hash-range
-    buckets the batch's probe keys land in. ``keys`` is a one-column
-    long frame of the batch's key hashes over ALREADY-CHECKPOINTED
-    batch data, so the touched collect reads cached blocks; the pmod
-    runs executor-side and at most ``nb`` bucket ids ever reach the
-    driver — bounded by the layout, never by the batch (guide §5)."""
-    nb = _validated_nb(index, what)
-    if not nb:
-        return None, None
-    touched = [
-        r[0]
-        for r in keys.select(
-            F.pmod(F.col(keys.columns[0]), F.lit(nb)).cast("int").alias("hb")
+def check_tree_bucketing(
+    tree: DataFrame, buckets: int | None, what: str, remedy: str, error=ValueError
+) -> None:
+    """Store-gate guard, schema only (no job): an epoch tree appended
+    under one ``buckets`` setting must stay all-bucketed or
+    all-unbucketed — a mixed tree is unprunable. The modulus itself
+    is checked by the probe (check_layout) before the epoch writes."""
+    if bool(buckets) != ("hb" in tree.columns):
+        raise error(
+            f"{what} is {'' if 'hb' in tree.columns else 'un'}bucketed but"
+            f" the gate's buckets={buckets}: a mixed layout is unprunable —"
+            f" {remedy}"
         )
-        .distinct()
-        .collect()
-    ]
-    return nb, touched
 
 
 def _band_key_hash() -> Column:
-    """ONE home for the LSH index's bucket/Bloom key: the 64-bit hash
-    of the (band, bval) composite. Build and probe must agree on it
-    exactly, or pruning would silently drop genuine candidates."""
+    """The LSH and SimHash/dHash band indexes' bucket/Bloom key: the
+    64-bit hash of the (band, bval) composite. Build and probe must
+    agree on it exactly, or pruning would silently drop genuine
+    candidates."""
     return F.xxhash64(F.col("band"), F.col("bval"))
-
-
-def band_bucketize(idx: DataFrame, buckets: int) -> DataFrame:
-    """Hash-range bucket contract of the LSH band index — the
-    ``span_bucketize`` twin over the composite (band, bval) key."""
-    return idx.withColumn(
-        "hb", F.pmod(_band_key_hash(), F.lit(int(buckets))).cast("int")
-    ).withColumn("nb", F.lit(int(buckets)))
 
 
 def band_bloom(index: DataFrame, bits: int = 1 << 20, hashes: int = 4) -> DataFrame:
@@ -621,7 +612,7 @@ def band_bloom(index: DataFrame, bits: int = 1 << 20, hashes: int = 4) -> DataFr
     (hb, nb, mbits, kh, blob), same exactness argument: the sidecar
     only pre-filters the BATCH's band keys; the candidate equi-join
     and exact-Jaccard verify still decide every pair."""
-    nb = _validated_nb(index, "band index") if "hb" in index.columns else None
+    nb = check_layout(index, "band index")["nb"] if "hb" in index.columns else None
     if nb is not None:
         src = index.select(_band_key_hash().alias("h"), "hb")
     else:
@@ -656,7 +647,7 @@ def incremental_neardup(
     ``minhash_lsh_dedup(new_docs)``'s job, not this operator's.
 
     ``buckets`` / ``bloom`` (round-10 — the span probe's two pruning
-    tiers applied to the LSH side): with a ``band_bucketize``d index
+    tiers applied to the LSH side): with a bucketed index
     written partitionBy("hb"), the candidate scan partition-prunes to
     the buckets the batch's band keys touch; a ``band_bloom`` sidecar
     then pre-filters the batch's band keys BEFORE any index byte is
@@ -675,11 +666,8 @@ def incremental_neardup(
     new_banded = minhash_band_rows(
         minhash_signatures(new_arrays, num_hashes), num_hashes, rows_per_band
     )
-    prune_nb = _validated_nb(index, "band index", buckets)
-    if "nb" in index.columns:
-        index = index.drop("nb")
-    elif buckets and "hb" in index.columns:
-        prune_nb = int(buckets)  # pre-nb index: trust the caller
+    prune_nb = check_layout(index, "band index", buckets)["nb"]
+    index = index.drop("nb")
     if prune_nb or bloom is not None:
         new_banded = new_banded.localCheckpoint(eager=False)
     keys = new_banded.select(_band_key_hash().alias("h"), "band", "bval").distinct()
@@ -696,13 +684,7 @@ def incremental_neardup(
         # hb-without-nb index + an nb=1 corpus-wide sidecar would
         # otherwise prune to hb=0 alone and drop genuine pairs)
     if prune_nb:
-        touched = [
-            r[0]
-            for r in keys.select(
-                F.pmod(F.col("h"), F.lit(prune_nb)).cast("int").alias("hb")
-            ).distinct().collect()
-        ]
-        index = index.where(F.col("hb").isin(touched))
+        index = index.where(F.col("hb").isin(touched_buckets(keys, "h", prune_nb)))
     cands = (
         new_banded.alias("n")
         .join(index.alias("i"), ["band", "bval"])
@@ -1101,7 +1083,7 @@ def simhash_band_index(
 
     ``buckets`` (round-13, VERDICT r12 #1 — the LAST index family
     without the hb discipline): adds ``hb = pmod(xxhash64(band, bval),
-    buckets)`` plus the self-describing modulus ``nb`` (band_bucketize
+    buckets)`` plus the self-describing modulus ``nb`` (``bucketize``
     — the same key hash the LSH index uses). Write the index
     ``partitionBy("hb")``; ``incremental_simhash_pairs`` then
     partition-prunes its scan to the buckets the batch's band keys
@@ -1115,9 +1097,7 @@ def simhash_band_index(
     idx = sig.select(
         "_id", "simhash", F.expr(f"stack({bands}, {stack_args}) as (band, bval)")
     )
-    if buckets:
-        idx = band_bucketize(idx, buckets)
-    return idx
+    return bucketize(idx, _band_key_hash(), buckets) if buckets else idx
 
 
 def incremental_simhash_pairs(
@@ -1127,6 +1107,7 @@ def incremental_simhash_pairs(
     bits: int = 64,
     band_bits: int = 16,
     max_bucket: int = 10_000,
+    buckets: int | None = None,
 ) -> DataFrame:
     """(id_new, id_corpus, hamming) — per-ingest near-dup detection
     for simhash-family signatures against a PERSISTED
@@ -1139,7 +1120,11 @@ def incremental_simhash_pairs(
     stop-key; a corpus-side hot bucket is the index builder's
     concern). This is the 100-TB ingest shape for perceptual image /
     video-frame dedup: a re-encoded copy of an already-indexed image
-    surfaces without ever rescanning the corpus."""
+    surfaces without ever rescanning the corpus.
+
+    ``buckets`` is the caller's expected modulus of a bucketed index
+    (the neardup/span/winnow probes' keyword): an index built with a
+    different one raises before the probe reads it."""
     bands = bits // band_bits
     if bands <= max_hamming:
         raise ValueError(
@@ -1178,22 +1163,16 @@ def incremental_simhash_pairs(
     # Round-13 (VERDICT r12 #1, guide §6/§3.2): when the index
     # self-describes a bucket layout (simhash_band_index's ``buckets``,
     # written partitionBy("hb")), prune the scan to the hash-range
-    # buckets the batch's band keys actually land in — the span/
-    # minhash probes' partition-pruning discipline applied to the last
-    # index family that scanned corpus-sized bytes per batch. The
-    # The probe (_probe_nb_and_touched) validates the layout and
-    # collects the touched buckets over the checkpointed banding. The
-    # checkpoint stays EAGER: the cap observation only reports through
-    # the checkpoint's own SQL action (a lazy checkpoint truncates the
+    # buckets the batch's band keys actually land in. The touched
+    # collect reads the checkpointed banding. The checkpoint stays
+    # EAGER: the cap observation only reports through the
+    # checkpoint's own SQL action (a lazy checkpoint truncates the
     # plan, so no later query carries the CollectMetrics node — pinned
     # by the drop-log test); the probe then reads cached blocks.
     banded = banded.localCheckpoint()
-    prune_nb = touched = None
-    if "nb" in index.columns:  # unbucketed index: no probe job at all
-        prune_nb, touched = _probe_nb_and_touched(
-            banded.select(_band_key_hash().alias("h")), index, "simhash band index"
-        )
+    prune_nb = check_layout(index, "simhash band index", buckets)["nb"]
     if prune_nb:
+        touched = touched_buckets(banded, _band_key_hash(), prune_nb)
         index = index.where(F.col("hb").isin(touched))
     index = index.drop("hb", "nb")
     if obs is not None and (obs.get.get("max_bucket_seen") or 0) > max_bucket:
@@ -1724,18 +1703,10 @@ def shingle_containment(
         # checkpoint so the tokenize+explode runs once (batch-sized).
         # round-12: lazy — the touched-bucket collect materializes it
         ph = p.select("_id", F.xxhash64("sh").alias("h")).localCheckpoint(eager=False)
-        nb = _validated_layout(index, "containment index", k=n)
+        nb = check_layout(index, "containment index", k=n)["nb"]
         hits = index
         if nb:
-            touched = [
-                r[0]
-                for r in ph.select(
-                    F.pmod(F.col("h"), F.lit(nb)).cast("int").alias("hb")
-                )
-                .distinct()
-                .collect()
-            ]
-            hits = hits.where(F.col("hb").isin(touched))
+            hits = hits.where(F.col("hb").isin(touched_buckets(ph, "h", nb)))
         # span_index rows are globally distinct h by construction, so
         # the left join cannot fan a probe shingle out.
         j = ph.join(hits.select("h").withColumn("_hit", F.lit(1)), "h", "left")
@@ -2031,14 +2002,9 @@ def winnow_index(
         .withColumn("wn", F.lit(int(w)))
         .withColumn("slt", F.lit(salt))
     )
-    if buckets:
-        # fp is the md5-prefix long (uniform in [0, 2^32)), so pmod
-        # range-buckets it directly — the span_bucketize contract
-        # keyed on fp instead of h.
-        idx = idx.withColumn(
-            "hb", F.pmod(F.col("fp"), F.lit(int(buckets))).cast("int")
-        ).withColumn("nb", F.lit(int(buckets)))
-    return idx
+    # fp is the md5-prefix long (uniform in [0, 2^32)), so it is its
+    # own bucket key
+    return bucketize(idx, "fp", buckets) if buckets else idx
 
 
 def incremental_winnow_pairs(
@@ -2085,9 +2051,7 @@ def incremental_winnow_pairs(
     ids (batch id already indexed) self-match on every print; the
     id_new != id_corpus guard drops exact self-pairs, mirroring
     incremental_simhash_pairs."""
-    prune_nb = _validated_layout(index, "winnow index", buckets, k=k, w=w, salt=salt)
-    if prune_nb is None and buckets and "hb" in index.columns:
-        prune_nb = int(buckets)  # pre-nb index: trust the caller
+    prune_nb = check_layout(index, "winnow index", buckets, k=k, w=w, salt=salt)["nb"]
     # ONE winnow pass over the batch text, df cut included, in ONE
     # materialized job (round-12): the shuffle-free print build has no
     # reusable exchange, so any second consumer would re-run it; the
@@ -2107,15 +2071,7 @@ def incremental_winnow_pairs(
     # the touched-bucket collect below materializes it in its own job
     idx = index
     if prune_nb:
-        touched = [
-            r[0]
-            for r in batch_fps.select(
-                F.pmod(F.col("fp"), F.lit(prune_nb)).cast("int").alias("hb")
-            )
-            .distinct()
-            .collect()
-        ]
-        idx = idx.where(F.col("hb").isin(touched))
+        idx = idx.where(F.col("hb").isin(touched_buckets(batch_fps, "fp", prune_nb)))
     # ONE broadcast of the batch-sized print frame into the pruned
     # index scan (round-12: the previous two-step — semi-join the
     # index to batch keys, then broadcast the HIT frame back — built
@@ -2502,21 +2458,7 @@ def span_index(
         .distinct()
         .withColumn("kg", F.lit(int(k)))
     )
-    if buckets:
-        idx = span_bucketize(idx, buckets)
-    return idx
-
-
-def span_bucketize(idx: DataFrame, buckets: int) -> DataFrame:
-    """ONE home for the span index's hash-range bucket contract
-    (review finding r9 — compaction had a second inline copy):
-    ``hb = pmod(h, buckets)`` plus the self-describing modulus ``nb``.
-    Everything that writes span-index rows — span_index itself and
-    compact_corpus_store's rebucket path — must go through here so
-    the probe's pruning/validation sees one consistent encoding."""
-    return idx.withColumn(
-        "hb", F.pmod(F.col("h"), F.lit(int(buckets))).cast("int")
-    ).withColumn("nb", F.lit(int(buckets)))
+    return bucketize(idx, "h", buckets) if buckets else idx
 
 
 def _bloom_positions(h: Column, m: int, hashes: int) -> Column:
@@ -2558,7 +2500,7 @@ def span_bloom(index: DataFrame, bits: int = 1 << 20, hashes: int = 4) -> DataFr
     positions, integer bit_or per (hb, word) — output bounded by
     nb·bits/64 rows regardless of corpus size — then per-bucket blob
     assembly over those word rows via applyInPandas."""
-    nb = _validated_nb(index, "span index") if "hb" in index.columns else None
+    nb = check_layout(index, "span index")["nb"] if "hb" in index.columns else None
     if nb is not None:
         src = index.select("h", "hb")
     else:
@@ -2631,12 +2573,7 @@ def _bloom_prefilter(kg_hashes: DataFrame, bloom: DataFrame, expect_nb: int | No
         # their blob. The touched list is computed with the index's
         # modulus; if the sidecar's own nb disagrees we raise before
         # any pruning decision is acted on.
-        touched = [
-            r[0]
-            for r in kg_hashes.select(
-                F.pmod(F.col("h"), F.lit(int(expect_nb))).cast("int").alias("hb")
-            ).distinct().collect()
-        ]
+        touched = touched_buckets(kg_hashes, "h", expect_nb)
         rows = bloom.select(
             "nb",
             "mbits",
@@ -2668,12 +2605,7 @@ def _bloom_prefilter(kg_hashes: DataFrame, bloom: DataFrame, expect_nb: int | No
                 "rebuild it in one span_bloom pass"
             )
         bnb, m, kk = int(meta[0]["nb"]), int(meta[0]["mbits"]), int(meta[0]["kh"])
-        touched = [
-            r[0]
-            for r in kg_hashes.select(
-                F.pmod(F.col("h"), F.lit(bnb)).cast("int").alias("hb")
-            ).distinct().collect()
-        ]
+        touched = touched_buckets(kg_hashes, "h", bnb)
         blobs = {
             int(r["hb"]): bytes(r["blob"])
             for r in bloom.where(F.col("hb").isin(touched)).select("hb", "blob").collect()
@@ -2763,15 +2695,8 @@ def incremental_repeated_spans(
     absent sidecar degrades to the round-9 behavior, never to a
     wrong answer."""
     kg = _kgram_starts(new_docs, id_col, text_col, k)
-    # DISTINCT nb/kg, not first() (see _validated_layout): a
-    # mixed-modulus or mixed-k index must fail loudly — pruning any
-    # of it with one arbitrary epoch's modulus (or joining a
-    # different k's hash space) silently drops genuine hits.
-    prune_nb = _validated_layout(index, "span index", buckets, k=k)
-    if "nb" in index.columns:
-        index = index.drop("nb")
-    elif buckets and "hb" in index.columns:
-        prune_nb = int(buckets)  # pre-nb index: trust the caller
+    prune_nb = check_layout(index, "span index", buckets, k=k)["nb"]
+    index = index.drop("nb")
     if prune_nb or bloom is not None:
         # one tokenize pass feeds the touched-bucket collect AND both
         # joins. Round-12: LAZY — the first collect below materializes
@@ -2788,15 +2713,7 @@ def incremental_repeated_spans(
         # prune_nb stays as established from the index/caller only —
         # never adopted from the sidecar (see incremental_neardup)
     if prune_nb:
-        touched = [
-            r[0]
-            for r in batch_hashes.select(
-                F.pmod(F.col("h"), F.lit(prune_nb)).cast("int").alias("hb")
-            )
-            .distinct()
-            .collect()
-        ]
-        index = index.where(F.col("hb").isin(touched))
+        index = index.where(F.col("hb").isin(touched_buckets(batch_hashes, "h", prune_nb)))
     hits = index.select("h").join(F.broadcast(batch_hashes), "h", "left_semi")
     flagged = kg.join(F.broadcast(hits), "h", "left_semi").select("_id", "pos")
     return _merge_flagged_spans(flagged, id_col, k)

@@ -1013,30 +1013,27 @@ def audio_near_pairs(
     return aligned_near_pairs(env, "win_idx", "rms", min_windows, max_bucket)
 
 
-def _unit_key_hash(idx_col: str, sig_col: str) -> F.Column:
-    """ONE home for the aligned-unit index's bucket key: the 64-bit
-    hash of the (idx, sig) composite — build (unit_bucketize) and
-    probe (incremental_aligned_pairs) must agree on it exactly, or
-    pruning would silently drop genuine matches (the dedup module's
-    _band_key_hash contract, applied to the unit families)."""
-    return F.xxhash64(F.col(idx_col), F.col(sig_col))
+def _unit_key_hash(idx, sig) -> F.Column:
+    """The aligned-unit index's bucket key: the 64-bit hash of the
+    (idx, sig) composite (names or columns). xxhash64 hashes INT and
+    LONG differently, so the probe hashes its keys cast to the
+    index's own column types — a build and a probe that agree on the
+    values then agree on the bucket."""
+    return F.xxhash64(idx, sig)
 
 
 def unit_bucketize(
     units: DataFrame, idx_col: str, sig_col: str, buckets: int
 ) -> DataFrame:
-    """Hash-range bucket contract of a persisted aligned-unit index
-    (video frame dHashes, audio envelope windows) — dedup's
-    band_bucketize over the (idx, sig) composite key: adds ``hb =
-    pmod(xxhash64(idx, sig), buckets)`` plus the self-describing
-    modulus ``nb``. Write the index ``partitionBy("hb")`` and
+    """Bucket a persisted aligned-unit index (video frame dHashes,
+    audio envelope windows) on its (idx, sig) key — dedup.bucketize's
+    ``hb``/``nb`` layout. Write the index ``partitionBy("hb")`` and
     ``incremental_aligned_pairs`` partition-prunes each batch's probe
     to the buckets the batch's unit keys land in (round-13, VERDICT
-    r12 #1 — the last per-modality index family that scanned the full
-    corpus index per batch)."""
-    return units.withColumn(
-        "hb", F.pmod(_unit_key_hash(idx_col, sig_col), F.lit(int(buckets))).cast("int")
-    ).withColumn("nb", F.lit(int(buckets)))
+    r12 #1)."""
+    from orestes_spark.operators.dedup import bucketize
+
+    return bucketize(units, _unit_key_hash(idx_col, sig_col), buckets)
 
 
 def incremental_aligned_pairs(
@@ -1046,6 +1043,7 @@ def incremental_aligned_pairs(
     sig_col: str,
     min_matched: int = 2,
     max_bucket: int = 10_000,
+    buckets: int | None = None,
 ) -> DataFrame:
     """(id_new, id_corpus, n_matched) — per-ingest near-dup detection
     for aligned-unit signatures (video frame dHashes, audio envelope
@@ -1066,7 +1064,11 @@ def incremental_aligned_pairs(
     corpus-side hot bucket is the index builder's concern). The
     id_new != id_corpus guard drops exact self-pairs from re-delivered
     ids; within-batch dups are ``aligned_near_pairs(new_units)``'s
-    job, the module's standard incremental split."""
+    job, the module's standard incremental split.
+
+    ``buckets`` is the caller's expected modulus of a bucketed index
+    (``unit_bucketize``): an index built with a different one raises
+    before the probe reads it."""
     # Round-12 opt: the cap is a count window + a CollectMetrics
     # observation baked into the ONE checkpoint materialization (the
     # incremental_simhash_pairs shape) — the decode kernel runs once
@@ -1093,25 +1095,22 @@ def incremental_aligned_pairs(
             .drop("_bn")
         )
     # Round-13: partition-prune a unit_bucketize'd index (written
-    # partitionBy("hb")) to the batch's touched hash-range buckets.
-    # The probe (dedup._probe_nb_and_touched) validates the layout and
-    # collects the touched buckets over the checkpointed units; the
-    # checkpoint stays EAGER — the cap observation only reports
-    # through the checkpoint's own SQL action (a lazy checkpoint
-    # truncates the plan away from the CollectMetrics node); a
-    # mixed-modulus index raises.
-    from orestes_spark.operators.dedup import _probe_nb_and_touched
+    # partitionBy("hb")) to the batch's touched hash-range buckets,
+    # collected over the checkpointed units; the checkpoint stays
+    # EAGER — the cap observation only reports through the
+    # checkpoint's own SQL action (a lazy checkpoint truncates the
+    # plan away from the CollectMetrics node).
+    from orestes_spark.operators.dedup import check_layout, touched_buckets
 
     f = f.localCheckpoint()
-    prune_nb = touched = None
-    if "nb" in index.columns:  # unbucketed index: no probe job at all
-        prune_nb, touched = _probe_nb_and_touched(
-            f.select(_unit_key_hash(idx_col, sig_col).alias("h")),
-            index,
-            "aligned unit index",
-        )
+    prune_nb = check_layout(index, "aligned unit index", buckets)["nb"]
     if prune_nb:
-        index = index.where(F.col("hb").isin(touched))
+        # try_cast: a LONG key outside INT range matches no INT row,
+        # so its null-keyed bucket cannot drop a match
+        key = _unit_key_hash(
+            *(F.col(c).try_cast(index.schema[c].dataType) for c in (idx_col, sig_col))
+        )
+        index = index.where(F.col("hb").isin(touched_buckets(f, key, prune_nb)))
     if obs is not None and (obs.get.get("max_bucket_seen") or 0) > max_bucket:
         import logging
 

@@ -1687,33 +1687,19 @@ def build_shared_artifacts(spark, sf_dir, invalidate: bool = True) -> dict[str, 
     if invalidate:
         _NEARDUP_PAIRS.pop(sf_dir, None)
         _NEARDUP_COMPONENTS.pop(sf_dir, None)
-        old = _BAND_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SPAN_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SPAN_BLOOMS.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _CONTAINMENT_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _WINNOW_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _PHASH_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _VIDEO_SIG_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _AUDIO_ENV_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SEM_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
+        # persisted artifacts: each path sits in its own mkdtemp dir,
+        # except the semantic index, whose path IS that dir
+        for cache in (
+            _BAND_INDEXES, _SPAN_INDEXES, _SPAN_BLOOMS, _CONTAINMENT_INDEXES,
+            _WINNOW_INDEXES, _PHASH_INDEXES, _VIDEO_SIG_INDEXES,
+            _AUDIO_ENV_INDEXES, _SEM_INDEXES,
+        ):
+            old = cache.pop(sf_dir, None)
+            if old:
+                shutil.rmtree(
+                    old if cache is _SEM_INDEXES else os.path.dirname(old),
+                    ignore_errors=True,
+                )
         _KMEANS_CELLS.pop(sf_dir, None)
         _BIGRAM_LMS.pop(sf_dir, None)
         _DSIR_WQS.pop((sf_dir, False), None)

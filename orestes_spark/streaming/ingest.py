@@ -965,15 +965,12 @@ def make_corpus_batch_processor(
                 )
             if kfs.exists(kbase):
                 kdf = spark.read.parquet(kgrams_path)
-                if bool(span_buckets) != ("hb" in kdf.columns):
-                    raise RuntimeError(
-                        f"kgrams tree at {kgrams_path} is"
-                        f" {'bucketed' if 'hb' in kdf.columns else 'unbucketed'}"
-                        f" but span_buckets={span_buckets}: a mixed layout is"
-                        " unreadable. Stop the stream and run"
-                        " compact_corpus_store(span_buckets=...) to migrate"
-                        " the tree, then restart with matching settings."
-                    )
+                _d.check_tree_bucketing(
+                    kdf, span_buckets, f"kgrams tree at {kgrams_path}",
+                    "stop the stream and run compact_corpus_store(span_buckets=...)"
+                    " to migrate the tree, then restart with matching settings",
+                    error=RuntimeError,
+                )
                 kindex = kdf.filter(F.col("epoch") != epoch_id).select(
                     *[c for c in ("h", "hb", "nb") if c in kdf.columns]
                 )
@@ -1297,19 +1294,16 @@ def make_media_batch_processor(
         fs, base = _fs_and_path(spark, bands_path)
         if fs.exists(base):
             index = spark.read.parquet(bands_path).filter(F.col("epoch") != epoch_id)
-            if bool(index_buckets) != ("hb" in index.columns):
-                raise ValueError(
-                    f"phash band index at {bands_path} is"
-                    f" {'un' if 'hb' not in index.columns else ''}bucketed"
-                    f" but index_buckets={index_buckets}: a mixed layout is"
-                    " unprunable — keep the setting stable per store"
-                )
+            _d.check_tree_bucketing(
+                index, index_buckets, f"phash band index at {bands_path}",
+                "keep index_buckets stable per store",
+            )
             # same-id re-delivery first (at-least-once upstream)
             kept_sig = kept_sig.join(
                 index.select("_id").distinct(), "_id", "left_anti"
             )
             pairs = _d.incremental_simhash_pairs(
-                kept_sig, index, max_hamming, bits, band_bits
+                kept_sig, index, max_hamming, bits, band_bits, buckets=index_buckets
             )
             kept_sig = kept_sig.join(
                 pairs.select(F.col("id_new").alias("_id")).distinct(),
@@ -1351,6 +1345,7 @@ def _make_aligned_media_processor(
     are the image path's contract verbatim. At 100 TB of video the
     unit index is |frames| x 16 B — TB-scale corpus, tens-of-GB-scale
     index, partitionable by epoch exactly like the band trees."""
+    from orestes_spark.operators import dedup as _d
     from orestes_spark.operators import multimodal as _mm
 
     idx_col, sig_col = (
@@ -1385,19 +1380,17 @@ def _make_aligned_media_processor(
             index = spark.read.parquet(units_path).filter(
                 F.col("epoch") != epoch_id
             )
-            if bool(index_buckets) != ("hb" in index.columns):
-                raise ValueError(
-                    f"unit index at {units_path} is"
-                    f" {'un' if 'hb' not in index.columns else ''}bucketed"
-                    f" but index_buckets={index_buckets}: a mixed layout is"
-                    " unprunable — keep the setting stable per store"
-                )
+            _d.check_tree_bucketing(
+                index, index_buckets, f"unit index at {units_path}",
+                "keep index_buckets stable per store",
+            )
             # same-id re-delivery first (at-least-once upstream)
             kept_units = kept_units.join(
                 index.select("media_id").distinct(), "media_id", "left_anti"
             )
             pairs = _mm.incremental_aligned_pairs(
-                kept_units, index, idx_col, sig_col, min_matched
+                kept_units, index, idx_col, sig_col, min_matched,
+                buckets=index_buckets,
             )
             kept_units = kept_units.join(
                 pairs.select(F.col("id_new").alias("media_id")).distinct(),
@@ -1957,36 +1950,27 @@ def compact_corpus_store(
     out = {"docs": n_docs, "bands": n_bands}
     mapping = {"docs": docs_path, "bands": bands_path}
     if has_kgrams:
+        from orestes_spark.operators import dedup as _d
+
         kg_src = spark.read.parquet(kgrams_path)
         kgrams = kg_src.select("h").distinct().localCheckpoint()
-        if "kg" in kg_src.columns:
-            # preserve the self-describing k-gram size (round-12): the
-            # compacted baseline must keep validating probes' k. A
-            # mid-migration tree may hold pre-kg epochs (nulls) — one
-            # surviving value is the stream's k; two distinct ones is
-            # real corruption and must raise, not compact.
-            kgs = sorted(
-                r[0] for r in kg_src.select("kg").distinct().collect() if r[0] is not None
-            )
-            if len(kgs) > 1:
-                raise ValueError(
-                    f"corpus store kgrams tree mixes k-gram sizes {kgs};"
-                    " it cannot be compacted into one probe-able baseline"
-                )
-            if kgs:
-                kgrams = kgrams.withColumn("kg", F.lit(int(kgs[0])))
+        # preserve the self-describing k-gram size (round-12): the
+        # compacted baseline must keep validating probes' k. A
+        # mid-migration tree may hold pre-kg epochs (nulls) — one
+        # surviving value is the stream's k; two distinct ones is real
+        # corruption and raises, not compacts. The tree's moduli are
+        # not checked: compaction is the rebucket path.
+        kg = _d.check_layout(kg_src.drop("nb"), "corpus store kgrams tree")["kg"]
+        if kg is not None:
+            kgrams = kgrams.withColumn("kg", F.lit(kg))
         if span_buckets:
             # migration/rebucket path (round-9): the compacted baseline
             # is written hash-range-bucketed with the self-describing
-            # modulus (dedup.span_bucketize — the one home of the
-            # hb/nb contract), so a stream restarted with
-            # span_buckets=N probes it partition-pruned — and an
-            # unbucketed (or differently bucketed) tree becomes
-            # consistent in one compaction.
-            from orestes_spark.operators.dedup import span_bucketize
-
+            # modulus, so a stream restarted with span_buckets=N probes
+            # it partition-pruned — and an unbucketed (or differently
+            # bucketed) tree becomes consistent in one compaction.
             (
-                span_bucketize(kgrams, span_buckets)
+                _d.bucketize(kgrams, "h", span_buckets)
                 .write.partitionBy("hb")
                 .parquet(f"{tmp}/kgrams/epoch=-1")
             )

@@ -1241,6 +1241,62 @@ def test_neardup_recall_probe_caught_subset_of_truth(spark):
     assert (1, 2) in caught_set  # 8-hash/4-band LSH catches a 0.8-Jaccard pair
 
 
+@pytest.mark.parametrize(
+    "family,key,layout",
+    [
+        ("minhash", "xxhash64(band, bval)", {}),
+        ("simhash", "xxhash64(band, bval)", {}),
+        ("unit", "xxhash64(frame_idx, simhash)", {}),
+        ("span", "h", {"kg": 6}),
+        ("winnow", "fp", {"kg": 5, "wn": 4, "slt": "winnow"}),
+    ],
+)
+def test_bucketed_index_layout_is_pinned(spark, family, key, layout):
+    """The on-disk layout of every bucketed index family: each row's
+    ``hb`` is ``pmod(<family key>, nb)`` as an INT, ``nb`` is the
+    build's modulus and the self-described kg/wn/slt are the build's
+    settings. Persisted indexes and streaming stores are probed with
+    these values, so a change to any of them would silently re-bucket
+    (and under-report against) every stored index."""
+    from orestes_spark.operators import multimodal
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(40))) for i in range(8)],
+        "doc_id LONG, text STRING",
+    )
+    build = {
+        "minhash": lambda: dedup.minhash_band_index(docs, "doc_id", "text", buckets=8),
+        "simhash": lambda: dedup.simhash_band_index(
+            spark.createDataFrame(
+                [(100 + i, 0x1234567812345678 + (i << 32)) for i in range(8)],
+                "_id LONG, simhash LONG",
+            ),
+            buckets=8,
+        ),
+        "unit": lambda: multimodal.unit_bucketize(
+            spark.createDataFrame(
+                [(v, f, (v << 8) | f) for v in range(6) for f in range(4)],
+                "media_id LONG, frame_idx INT, simhash LONG",
+            ),
+            "frame_idx",
+            "simhash",
+            8,
+        ),
+        "span": lambda: dedup.span_index(docs, "doc_id", "text", k=6, buckets=8),
+        "winnow": lambda: dedup.winnow_index(docs, "doc_id", "text", k=5, w=4, buckets=8),
+    }
+    idx = build[family]()
+    assert dict(idx.dtypes)["hb"] == "int" and dict(idx.dtypes)["nb"] == "int"
+    rows = idx.select(
+        "hb", "nb", F.expr(f"cast(pmod({key}, 8) as int)").alias("want"),
+        *layout,
+    ).collect()
+    assert rows
+    for r in rows:
+        assert r["hb"] == r["want"] and r["nb"] == 8
+        assert {c: r[c] for c in layout} == layout
+
+
 def test_incremental_simhash_pairs_bucketized_index_parity(spark, tmp_path):
     """Round-13 (VERDICT r12 #1): a bucketized simhash band index
     (written partitionBy("hb")) returns EXACTLY the plain index's

@@ -455,3 +455,41 @@ def test_incremental_aligned_pairs_bucketized_index_parity(spark, tmp_path):
     )
     assert m, plan  # pruned scan, not full index
     assert len(m.group(1).split(",")) <= 4  # 4 batch unit keys
+
+
+@pytest.mark.parametrize("built,probed", [("INT", "LONG"), ("LONG", "INT")])
+def test_incremental_aligned_pairs_key_dtype_independent(spark, tmp_path, built, probed):
+    """xxhash64 hashes INT and LONG differently, so a probe whose unit
+    key columns differ in integer width from the index's must still
+    land in the buckets the build wrote: an INT-built index probed
+    with LONG keys (and the reverse) returns the same-dtype probe's
+    pairs, through the same pruned scan."""
+    import re
+
+    rows = [(v, f, (v << 8) | f) for v in range(6) for f in range(4)]
+    p = str(tmp_path / "units")
+    multimodal.unit_bucketize(
+        spark.createDataFrame(rows, f"media_id LONG, frame_idx {built}, simhash LONG"),
+        "frame_idx",
+        "simhash",
+        8,
+    ).write.partitionBy("hb").parquet(p)
+    idx = spark.read.parquet(p)
+
+    def probe(dtype):
+        batch = spark.createDataFrame(
+            [(100, f, f) for f in range(4)],
+            f"media_id LONG, frame_idx {dtype}, simhash LONG",
+        )
+        return multimodal.incremental_aligned_pairs(
+            batch, idx, "frame_idx", "simhash", min_matched=2
+        )
+
+    want = {tuple(r) for r in probe(built).collect()}
+    got_df = probe(probed)
+    assert want == {(100, 0, 4)}
+    assert {tuple(r) for r in got_df.collect()} == want
+    plan = got_df._sc._jvm.PythonSQLUtils.explainString(
+        got_df._jdf.queryExecution(), "formatted"
+    )
+    assert re.search(r"PartitionFilters: \[hb", plan), plan

@@ -4,8 +4,10 @@ same points; plus watermark/rollup semantics."""
 
 from __future__ import annotations
 
+import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from orestes_spark.streaming import start_ingest, streaming_rollup
@@ -2423,3 +2425,43 @@ def test_media_ingest_bucketized_index_same_decisions(spark, tmp_path):
             for r in spark.read.parquet(f"{store}/media").collect()
         )
     assert kept_by_mode[None] == kept_by_mode[8] == [1, 2]
+
+
+@pytest.mark.parametrize(
+    "modality,tree", [("image", "phash_bands"), ("video", "unit_sigs"), ("audio", "unit_sigs")]
+)
+def test_media_ingest_reopen_with_other_modulus_raises_before_write(
+    spark, tmp_path, modality, tree
+):
+    """A media store built with index_buckets=8 and reopened with 16
+    must refuse the next batch inside the probe, before the epoch
+    writes anything: the tree keeps nb={8} alone (a second modulus
+    would make every later probe raise), and the store still commits
+    under its own setting."""
+    from orestes_spark.operators import multimodal as mm
+    from orestes_spark.streaming.ingest import make_media_batch_processor
+
+    synth = {
+        "image": mm.synth_ppm_img,
+        "video": mm.synth_video,
+        "audio": mm.synth_wav_segments,
+    }[modality]
+    ddl = "media_id LONG, content BINARY"
+    store = str(tmp_path / f"{modality}_store")
+    make_media_batch_processor(store, modality=modality, index_buckets=8)(
+        spark.createDataFrame([(1, synth("first item")), (2, synth("second item"))], ddl), 0
+    )
+    reopened = make_media_batch_processor(store, modality=modality, index_buckets=16)
+    with pytest.raises(ValueError, match="was built with buckets=8"):
+        reopened(spark.createDataFrame([(3, synth("third item"))], ddl), 1)
+    for sink in ("media", tree):
+        assert not os.path.exists(f"{store}/{sink}/epoch=1")
+    nbs = {r["nb"] for r in spark.read.parquet(f"{store}/{tree}").select("nb").distinct().collect()}
+    assert nbs == {8}
+
+    make_media_batch_processor(store, modality=modality, index_buckets=8)(
+        spark.createDataFrame([(3, synth("third item"))], ddl), 1
+    )
+    assert os.path.exists(f"{store}/{tree}/epoch=1")
+    kept = sorted(r["media_id"] for r in spark.read.parquet(f"{store}/media").collect())
+    assert kept == [1, 2, 3]
