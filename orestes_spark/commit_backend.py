@@ -18,8 +18,13 @@ on three primitives this module owns:
    fencing — lives in ``engine._writer_lock``; only the atomic
    primitives live here.
 3. **Partition swap** — crash-atomic two-phase replace of a live
-   bucket directory (live → ``.old_*``, tmp → live, drop ``.old_*``),
-   rolled forward/back by ``engine._recover_swaps`` (``swap_partition``).
+   bucket directory (live → ``.old_*``, tmp → live, drop ``.old_*``)
+   (``swap_partition``). Every engine bucket rewrite (compact,
+   delete_series, rebuild_rollup) goes through it via
+   ``engine._rewrite_bucket``. ``engine._recover_swaps`` rolls a crashed
+   swap forward or back; it runs inside ``engine._writer_lock`` right
+   after each acquisition, so every writer recovers before it touches
+   a bucket, and on reads when no live writer holds the space.
 
 ``PosixCommitBackend`` is the only backend; the engine imports the
 shared ``POSIX_BACKEND`` instance. ``engine._require_posix_warehouse``

@@ -69,16 +69,82 @@ from orestes_spark.config import MS_IN_DAY, EngineConfig, SpaceConfig
 
 
 
-def _pad_rollup_schema(df):
-    """Schema-adapt a rollup frame written before the sum_sq moment
-    column existed (pre-round-4 warehouses): merging partials with
-    F.sum("sum_sq") would otherwise fail UNRESOLVED_COLUMN. NULL
-    partials sum to NULL, so stddev over a padded legacy slot reads as
-    NULL (unknown) rather than wrong; rebuild_rollup upgrades the
-    table in place."""
-    if "sum_sq" not in df.columns:
-        df = df.withColumn("sum_sq", F.lit(None).cast("decimal(38,12)"))
-    return df
+def _with_seq(pts: DataFrame) -> DataFrame:
+    """Pad a points frame written before the ``_seq`` delivery stamp
+    existed (pre-upsert warehouse: one delivery, stamp 0)."""
+    if "_seq" not in pts.columns:
+        pts = pts.withColumn("_seq", F.lit(0).cast("long"))
+    return pts
+
+
+def _last_write_wins(pts: DataFrame, *keys: str) -> DataFrame:
+    """One row per ``keys``: the later delivery (greater ``_seq``) wins
+    and equal stamps fall to the greater value — the reference's
+    Cassandra PRIMARY KEY (attrs, offset) upsert, with Cassandra's
+    write-timestamp and same-timestamp rules
+    (reference lib/orestes-settings.js:9-24). Output: ``keys``, value,
+    tags and the winning ``_seq``."""
+    return (
+        _with_seq(pts)
+        .groupBy(*keys)
+        .agg(
+            F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"),
+            F.max("_seq").alias("_seq"),
+        )
+        .select(*keys, "_m.value", "_m.tags", "_seq")
+    )
+
+
+def _slot(step: int) -> F.Column:
+    """The rollup slot of a point: its time floored to ``step``."""
+    return (F.floor(F.col("time_ms") / step) * step).cast("long").alias("slot_ms")
+
+
+def _rollup_partials(pts: DataFrame, step: int, *keys: str) -> DataFrame:
+    """Per-(``keys``, slot) partial moments of raw points: n, sum, sum
+    of squares, min, max. Sums are DECIMAL, so partials merge
+    associatively with no float drift: any merge order (appends,
+    compaction, read groupings) yields the identical value — the same
+    exactness the query oracles rely on."""
+    v6 = F.col("value").cast("decimal(18,6)")
+    return pts.groupBy(*keys, _slot(step)).agg(
+        F.first("tags").alias("tags"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(28,10)")).alias("sum_value"),
+        F.sum(v6 * v6).alias("sum_sq"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    )
+
+
+def _merge_rollup_partials(partials: DataFrame) -> DataFrame:
+    """Fold rollup partials to one row per (series, slot): counts and
+    sums add, min/max fold. A table written before the sum_sq column
+    existed (pre-round-4 warehouses) is padded with NULL partials, so
+    stddev over a legacy slot reads as NULL (unknown) rather than
+    wrong; rebuild_rollup upgrades the table in place."""
+    if "sum_sq" not in partials.columns:
+        partials = partials.withColumn("sum_sq", F.lit(None).cast("decimal(38,12)"))
+    return partials.groupBy("series_id", "slot_ms").agg(
+        F.first("tags").alias("tags"),
+        F.sum("n").alias("n"),
+        F.sum("sum_value").alias("sum_value"),
+        F.sum("sum_sq").alias("sum_sq"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
+    )
+
+
+def _hist_partials(pts: DataFrame, step: int, hist: tuple, *keys: str) -> DataFrame:
+    """Per-(``keys``, slot, bin) point counts at the fixed value bins of
+    ``hist`` = (width, nbins), out-of-range values clamped into the end
+    bins: the mergeable sketch read_rollup_quantile serves quantiles
+    from. Counts are associative, so every merge order is exact."""
+    width, nbins = hist
+    b = F.least(F.greatest(F.floor(F.col("value") / width), F.lit(0)), F.lit(nbins - 1))
+    return pts.groupBy(*keys, _slot(step), b.cast("int").alias("bin")).agg(
+        F.first("tags").alias("tags"), F.count(F.lit(1)).alias("cnt")
+    )
 
 
 def _cap_points_per_series(pts: DataFrame, cap: int) -> DataFrame:
@@ -279,6 +345,62 @@ def _publish_compact_manifest(points_root: Path, part_name: str, tmp: Path) -> N
         f.rename(tmp / name)
         files.append(f"{part_name}/{name}")
     _write_manifest(points_root / "_epochs" / f"epoch-{key}", files, "compact")
+
+
+# Hidden prefix a bucket rewrite stages under (_rewrite_bucket), then
+# the prefixes earlier versions staged under, which recovery still
+# accepts (_recover_swaps).
+_STAGED = (".rewrite_", ".delete_", ".rebuild_", ".compact_")
+
+
+def _rewrite_bucket(part: Path, df: DataFrame, partition_by: str | None = None) -> None:
+    """Replace the bucket dir ``part`` (absent: a rollup bootstrap) by
+    ``df``, crash-atomically — the one rewrite of compact,
+    delete_series and rebuild_rollup. The whole new bucket is written
+    under a hidden staging name (Spark's ``_SUCCESS`` marks it
+    complete), its compact manifest is published in an ``_epochs``
+    space, and swap_partition swaps it in (live → .old_, staged → live,
+    drop .old_). A crash at any step leaves a state _recover_swaps
+    turns into the old bucket or the new one."""
+    tmp = part.parent / f"{_STAGED[0]}{part.name}"
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(str(tmp))
+    if (part.parent / "_epochs").exists():
+        _publish_compact_manifest(part.parent, part.name, tmp)
+    _BACKEND.swap_partition(part, tmp)
+
+
+_COMPACT_TARGET_BYTES = 128 << 20  # healthy parquet file size
+
+
+def _compact_width(files: list[Path], target_bytes: int = _COMPACT_TARGET_BYTES) -> int:
+    """Output-file count for a bucket rewrite: one range partition per
+    ~target on-disk bytes. Compressed input size is the best available
+    predictor of compressed output size, so a TB-scale bucket rewrites
+    as thousands of parallel size-targeted tasks — never the one-task
+    `.coalesce(1)` straggler/OOM a naive compaction would be."""
+    total = sum(f.stat().st_size for f in files)
+    return max(1, -(-total // target_bytes))
+
+
+def _merge_partial_partitions(spark, root: Path, buckets, build_df) -> None:
+    """Shared compaction scaffold for epoch-keyed partial tables
+    (rollup, rollup_hist): per bucket partition, skip the already-
+    canonical shape (≤1 file, all under epoch=-1) and otherwise
+    rewrite it as ``build_df``'s merged partials under epoch=-1."""
+    if not root.exists():
+        return
+    for part in sorted(root.glob("bucket=*")):
+        if buckets is not None and int(part.name.split("=", 1)[1]) not in buckets:
+            continue
+        files = list(part.rglob("*.parquet"))
+        epochs = sorted(d.name for d in part.glob("epoch=*"))
+        if len(files) <= 1 and epochs in ([], ["epoch=-1"]):
+            continue
+        df = build_df(spark.read.parquet(str(part))).withColumn("epoch", F.lit(-1))
+        _rewrite_bucket(part, df, "epoch")
 
 
 # The manifest commit-log primitives live in commit_backend: engine
@@ -718,6 +840,11 @@ class OrestesEngine:
         beater.start()
         body_raised = False
         try:
+            # Crash recovery, once per acquisition: every writer finds
+            # each bucket old or new — never parked at .old_ or staged —
+            # before it touches one (see _recover_swaps).
+            for root in self._tables(space).values():
+                self._recover_swaps(root)
             yield
         except BaseException:
             body_raised = True
@@ -779,6 +906,15 @@ class OrestesEngine:
 
     def _hist_path(self, space: str) -> Path:
         return Path(self.config.warehouse) / space / "rollup_hist"
+
+    def _tables(self, space: str) -> dict[str, Path]:
+        """The four bucketed tables of a space, by name."""
+        return {
+            "points": self._points_path(space),
+            "series": self._series_path(space),
+            "rollup": self._rollup_path(space),
+            "rollup_hist": self._hist_path(space),
+        }
 
     def _granularity(self, space: str) -> int:
         return self.config.space(space).granularity_days
@@ -1424,29 +1560,12 @@ class OrestesEngine:
             # (observed as partial-epoch counts in the soak test), and
             # a per-path stat has no such instability.
 
-        def write_rollup() -> None:
-            # Continuous aggregate (hypertable-rollup analogue): each
-            # batch appends its PARTIAL per-(series, slot) stats —
-            # append-only, no upsert — and read_rollup merges partials
-            # (sums add, min/max fold). The batch-local groupBy is one
-            # small shuffle of the batch, never a read-modify-write of
-            # the rollup table.
-            slot = (F.floor(F.col("time_ms") / step) * step).cast("long")
-            # sums are DECIMAL: partials merge associatively with NO
-            # float drift, so any merge order (appends, compaction,
-            # read groupings) yields the identical value — the same
-            # exactness discipline the query oracles rely on.
-            partial = stored.groupBy("bucket", "series_id", slot.alias("slot_ms")).agg(
-                F.first("tags").alias("tags"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).alias("sum_value"),
-                F.sum(F.col("value").cast("decimal(18,6)") * F.col("value").cast("decimal(18,6)")).alias("sum_sq"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            ).withColumn("epoch", F.lit(-1 if epoch_id is None else epoch_id))
-            writer = partial.write.partitionBy("bucket", "epoch")
+        def write_partials(partial: DataFrame, root: Path) -> None:
+            writer = partial.withColumn(
+                "epoch", F.lit(-1 if epoch_id is None else epoch_id)
+            ).write.partitionBy("bucket", "epoch")
             if epoch_id is None:
-                writer.mode("append").parquet(str(self._rollup_path(space)))
+                writer.mode("append").parquet(str(root))
             else:
                 # Replay-idempotent: dynamic overwrite replaces ONLY
                 # the (bucket, epoch) partitions present in this batch
@@ -1454,34 +1573,28 @@ class OrestesEngine:
                 # instead of appending a second copy.
                 writer.mode("overwrite").option(
                     "partitionOverwriteMode", "dynamic"
-                ).parquet(str(self._rollup_path(space)))
+                ).parquet(str(root))
+
+        def write_rollup() -> None:
+            # Continuous aggregate (hypertable-rollup analogue): each
+            # batch appends its PARTIAL per-(series, slot) stats —
+            # append-only, no upsert — and read_rollup merges partials
+            # (sums add, min/max fold). The batch-local groupBy is one
+            # small shuffle of the batch, never a read-modify-write of
+            # the rollup table.
+            write_partials(
+                _rollup_partials(stored, step, "bucket", "series_id"), self._rollup_path(space)
+            )
 
         hist = self.config.space(space).rollup_hist
 
         def write_hist() -> None:
-            # Histogram partials: per-(series, slot, bin) counts at
-            # fixed value bins — the mergeable sketch that makes
-            # QUANTILES servable from pre-aggregated state
-            # (read_rollup_quantile). Counts are associative, so every
-            # merge order (appends, replays, compaction) is exact; the
-            # same epoch-keyed replay idempotency as the main rollup.
-            width, nbins = hist
-            slot = (F.floor(F.col("time_ms") / step) * step).cast("long")
-            b = F.least(
-                F.greatest(F.floor(F.col("value") / width), F.lit(0)), F.lit(nbins - 1)
-            ).cast("int")
-            partial = (
-                stored.groupBy("bucket", "series_id", slot.alias("slot_ms"), b.alias("bin"))
-                .agg(F.first("tags").alias("tags"), F.count(F.lit(1)).alias("cnt"))
-                .withColumn("epoch", F.lit(-1 if epoch_id is None else epoch_id))
+            # Histogram partials (the quantile sketch, see
+            # _hist_partials), with the same epoch-keyed replay
+            # idempotency as the main rollup.
+            write_partials(
+                _hist_partials(stored, step, hist, "bucket", "series_id"), self._hist_path(space)
             )
-            writer = partial.write.partitionBy("bucket", "epoch")
-            if epoch_id is None:
-                writer.mode("append").parquet(str(self._hist_path(space)))
-            else:
-                writer.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).parquet(str(self._hist_path(space)))
 
         # The sinks are independent reads of the same input; submit
         # all jobs concurrently so their stages interleave across the
@@ -1572,71 +1685,88 @@ class OrestesEngine:
     def _recover(self, space: str, root: Path) -> None:
         """Reader-side crash recovery entry point: runs _recover_swaps
         ONLY when no live writer holds the space (a live writer's
-        staged tmp/.old dirs are in-flight state, not crash debris —
-        acting on them would corrupt the erasure in progress)."""
+        staged and .old_ dirs are in-flight state, not crash debris —
+        acting on them would corrupt the rewrite in progress)."""
         if not self._writer_active(space):
             # The initial check narrows but cannot close the
             # check-then-act window (a writer can acquire the lock
-            # between it and the glob), so recovery re-checks before
+            # between it and the listing), so recovery re-checks before
             # EVERY mutating action and aborts the sweep the moment a
             # live writer appears. Residual same-machine race: a writer
             # acquiring the lock in the sub-millisecond gap between a
             # re-check and its single rename/rmtree — acceptable
-            # because the writer's own entry points re-run
-            # _recover_swaps under the lock, restoring any state a
+            # because _writer_lock runs _recover_swaps over every table
+            # right after each acquisition, restoring any state a
             # lost-race reader action touched before the writer stages
             # new work.
             self._recover_swaps(root, abort=lambda: self._writer_active(space))
 
     @staticmethod
     def _recover_swaps(root: Path, abort=None) -> None:
-        """Crash recovery for delete_series' two-phase bucket swap
-        (write tmp → rename live→.old → rename tmp→live → drop .old).
-        Idempotent and one hidden-prefix glob per call; every reader
-        of the root runs it (gated on no-live-writer, see _recover),
-        so an erasure interrupted between the renames can never lose a
-        bucket. Roll FORWARD when the rewrite had committed (tmp
-        complete — the first rename only happens after a successful
-        write — and live renamed away), roll BACK (discard tmp, keep
-        live) otherwise. Two recoverers racing each other (double
-        crash + two fresh readers) tolerate lost races: every action
+        """Crash recovery for _rewrite_bucket's staged write and
+        two-phase swap (write staged → rename live→.old_ → rename
+        staged→live → drop .old_), and for remove()'s renamed-away
+        .drop_ dirs. One directory listing per call; idempotent. Per
+        bucket, with "staged" any of the _STAGED prefixes:
+
+        ========  =======  ====  ==========================================
+        staged    .old_    live  action
+        ========  =======  ====  ==========================================
+        any       yes      yes   drop the backup (the swap completed)
+        yes       yes      no    roll the staged dir forward (it was
+                                 complete: the first rename follows the
+                                 whole write)
+        no        yes      no    restore the backup
+        yes       no       yes   discard the staged dir (never committed)
+        yes       no       no    roll forward if it holds Spark's
+                                 ``_SUCCESS`` (a complete rewrite of an
+                                 absent bucket), else discard
+        ========  =======  ====  ==========================================
+
+        Writers run it under the lock right after acquiring it, readers
+        when no live writer holds the space (see _recover). Two
+        recoverers racing each other tolerate lost races: every action
         is one rename/delete, so FileNotFoundError means the other
-        recoverer already did it. ``abort``: optional callable checked
-        immediately before each mutating action; True stops the sweep
-        (reader-side recovery passes a live-writer probe so a writer
-        that acquires the lock mid-sweep is not raced — see
-        _recover)."""
-        if not root.exists():
+        already did it. ``abort``: optional callable checked immediately
+        before each mutating action; True stops the sweep (reader-side
+        recovery passes a live-writer probe so a writer that acquires
+        the lock mid-sweep is not raced)."""
+        try:
+            names = sorted(os.listdir(root))
+        except FileNotFoundError:
             return
-        for old in root.glob(".old_bucket=*"):
+        staged = [(p, n) for n in names for p in _STAGED if n.startswith(p + "bucket=")]
+        for n in names:
+            if not n.startswith((".old_bucket=", ".drop_bucket=")):
+                continue
             if abort is not None and abort():
                 return
-            name = old.name[len(".old_") :]
-            live = root / name
-            tmp = root / f".delete_{name}"
+            if n.startswith(".drop_"):
+                shutil.rmtree(root / n, ignore_errors=True)  # remove() committed
+                continue
+            old, live = root / n, root / n[len(".old_") :]
+            mine = [root / (p + live.name) for p in _STAGED if p + live.name in names]
             try:
                 if live.exists():
-                    shutil.rmtree(old)  # swap completed; drop the backup
-                elif tmp.exists():
-                    tmp.rename(live)  # died between the renames: the
-                    shutil.rmtree(old)  # rewrite was complete — commit it
+                    shutil.rmtree(old)
+                elif mine:
+                    mine[0].rename(live)
+                    shutil.rmtree(old)
                 else:
-                    old.rename(live)  # tmp gone: restore the original
+                    old.rename(live)
             except FileNotFoundError:
                 pass  # a concurrent recoverer won the race; state is valid
-        for tmp in root.glob(".delete_bucket=*"):
+        for p, n in staged:
             if abort is not None and abort():
                 return
-            # Live partition still present ⇒ the rewrite never
-            # committed and may be partial — discard it.
-            shutil.rmtree(tmp, ignore_errors=True)
-        for tmp in root.glob(".rebuild_bucket=*"):
-            if abort is not None and abort():
-                return
-            # rebuild_rollup staging: never the roll-forward source
-            # (its .old restore above re-ran the stale-but-valid
-            # partition), so leftovers are always safe to discard.
-            shutil.rmtree(tmp, ignore_errors=True)
+            tmp, live = root / n, root / n[len(p) :]
+            try:
+                if not live.exists() and (tmp / "_SUCCESS").exists():
+                    tmp.rename(live)
+                else:
+                    shutil.rmtree(tmp, ignore_errors=True)
+            except FileNotFoundError:
+                pass
 
     def _read_points(self, space: str) -> DataFrame | None:
         p = self._points_path(space)
@@ -1646,11 +1776,7 @@ class OrestesEngine:
         if not p.exists() or not any(p.glob("bucket=*")):
             return None
         df = self._visible_points(p)
-        if df is None:
-            return None
-        if "_seq" not in df.columns:  # pre-upsert warehouse: one epoch
-            df = df.withColumn("_seq", F.lit(0).cast("long"))
-        return df
+        return None if df is None else _with_seq(df)
 
     def _visible_points(self, p: Path) -> DataFrame | None:
         """Epoch-consistent point listing (read committed at EPOCH
@@ -1823,10 +1949,8 @@ class OrestesEngine:
         pts = self.matching_points(es_filter, space, start_ms, end_ms)
         if not self._merge_needed(space):
             return pts.select("series_id", "tags", "time_ms", "value")
-        return (
-            pts.groupBy("series_id", "bucket", "time_ms")
-            .agg(F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"))
-            .select("series_id", F.col("_m.tags").alias("tags"), "time_ms", F.col("_m.value").alias("value"))
+        return _last_write_wins(pts, "series_id", "bucket", "time_ms").select(
+            "series_id", "tags", "time_ms", "value"
         )
 
     def _bucket_range_pred(self, start_ms: int, end_ms: int, g: int) -> F.Column:
@@ -1957,17 +2081,7 @@ class OrestesEngine:
         (series, bucket, time) exactly as in flat reads."""
         pts = self.matching_points(es_filter, space, start_ms, end_ms)
         if self._merge_needed(space):
-            pts = (
-                pts.groupBy("series_id", "bucket", "time_ms")
-                .agg(F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"))
-                .select(
-                    "series_id",
-                    "bucket",
-                    F.col("_m.tags").alias("tags"),
-                    "time_ms",
-                    F.col("_m.value").alias("value"),
-                )
-            )
+            pts = _last_write_wins(pts, "series_id", "bucket", "time_ms")
         return (
             pts.groupBy("series_id", "bucket")
             .agg(
@@ -2017,22 +2131,13 @@ class OrestesEngine:
             )
         g = self._granularity(space)
         rl = (
-            _pad_rollup_schema(self.spark.read.parquet(str(rp)))
+            self.spark.read.parquet(str(rp))
             .where(self._bucket_range_pred(start_ms, end_ms, g))
             .where((F.col("slot_ms") >= start_ms) & (F.col("slot_ms") < end_ms))
             .where(pred)
         )
-        return (
-            rl.groupBy("series_id", "slot_ms")
-            .agg(
-                F.first("tags").alias("tags"),
-                F.sum("n").alias("n"),
-                F.sum("sum_value").alias("sum_value"),
-                F.sum("sum_sq").alias("sum_sq"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
-            .select("series_id", "tags", "slot_ms", "n", "sum_value", "sum_sq", "min_value", "max_value")
+        return _merge_rollup_partials(rl).select(
+            "series_id", "tags", "slot_ms", "n", "sum_value", "sum_sq", "min_value", "max_value"
         )
 
     def read_rollup_quantile(
@@ -2150,22 +2255,9 @@ class OrestesEngine:
         )
         if aligned_end >= end_ms:
             return rolled
-        tail = (
-            self._merged_points(es_filter, space, max(start_ms, aligned_end), end_ms)
-            .groupBy(
-                "series_id",
-                (F.floor(F.col("time_ms") / step) * step).cast("long").alias("slot_ms"),
-            )
-            .agg(
-                F.first("tags").alias("tags"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).alias("sum_value"),
-                F.sum(F.col("value").cast("decimal(18,6)") * F.col("value").cast("decimal(18,6)")).alias("sum_sq"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            .select("series_id", "tags", "slot_ms", "n", "sum_value", "sum_sq", "min_value", "max_value")
-        )
+        tail = _rollup_partials(
+            self._merged_points(es_filter, space, max(start_ms, aligned_end), end_ms), step, "series_id"
+        ).select("series_id", "tags", "slot_ms", "n", "sum_value", "sum_sq", "min_value", "max_value")
         # sum_value/sum_sq precisions differ (merged partials widen) —
         # align before the union so the schema is stable.
         dec, dsq = "decimal(38,10)", "decimal(38,12)"
@@ -2349,23 +2441,23 @@ class OrestesEngine:
         g = self._granularity(space)
         today = int(_time.time() * 1000) // MS_IN_DAY
         dropped: list[int] = []
-        roots = [self._points_path(space), self._series_path(space)]
+        tables = self._tables(space)
+        roots = [tables["points"], tables["series"]]
         if not keep_rollup:
-            roots.append(self._rollup_path(space))
-            roots.append(self._hist_path(space))
+            roots += [tables["rollup"], tables["rollup_hist"]]
         with self._writer_lock(space, "remove"):
             for root in roots:
                 if not root.exists():
                     continue
-                # A bucket parked at .old_bucket=N by a crashed
-                # delete_series must be restored BEFORE the sweep: it
-                # both belongs in the retention decision and must not
-                # be missed by the gate-disarm empty check below.
-                self._recover_swaps(root)
                 for part in sorted(root.glob("bucket=*")):
                     bucket = int(part.name.split("=", 1)[1])
                     if min(bucket + g - 1, today) <= today - keep_days:
-                        shutil.rmtree(part)
+                        # The rename is the drop: a crash mid-delete
+                        # leaves a hidden dir recovery deletes, never
+                        # a half-deleted live bucket.
+                        gone = root / f".drop_{part.name}"
+                        part.rename(gone)
+                        shutil.rmtree(gone)
                         if bucket not in dropped:
                             dropped.append(bucket)
             # A sweep that emptied the space leaves nothing to merge —
@@ -2379,10 +2471,10 @@ class OrestesEngine:
             # the truth ("False is a guarantee of agreement"). The
             # armed gate is cheap here: the merge path over an empty
             # points table does no work.
-            if not any(self._points_path(space).glob("bucket=*")):
+            if not any(tables["points"].glob("bucket=*")):
                 rollup_retained = keep_rollup and (
-                    any(self._rollup_path(space).glob("bucket=*"))
-                    or any(self._hist_path(space).glob("bucket=*"))
+                    any(tables["rollup"].glob("bucket=*"))
+                    or any(tables["rollup_hist"].glob("bucket=*"))
                 )
                 if not rollup_retained:
                     self._clear_deliveries(space)
@@ -2424,19 +2516,17 @@ class OrestesEngine:
             # plan reads the series files the loop below replaces.
             doomed_ids = doomed.select("series_id").distinct().localCheckpoint(eager=True)
             n_removed = doomed_ids.count()
-            for root, range_cols, part_cols in (
-                (self._points_path(space), ["series_id", "time_ms"], []),
-                (self._series_path(space), ["series_id"], []),
-                (self._rollup_path(space), ["series_id", "slot_ms"], ["epoch"]),
-                (self._hist_path(space), ["series_id", "slot_ms"], ["epoch"]),
+            proot = self._points_path(space)
+            # Same rule as compact: never fold an uncommitted epoch's
+            # (invisible) files into rewritten output.
+            _sweep_uncommitted_epoch_files(proot)
+            tables = self._tables(space)
+            for root, range_cols, partition_by in (
+                (proot, ["series_id", "time_ms"], None),
+                (tables["series"], ["series_id"], None),
+                (tables["rollup"], ["series_id", "slot_ms"], "epoch"),
+                (tables["rollup_hist"], ["series_id", "slot_ms"], "epoch"),
             ):
-                if not root.exists():
-                    continue
-                self._recover_swaps(root)
-                if root == self._points_path(space):
-                    # Same rule as compact: never fold an uncommitted
-                    # epoch's (invisible) files into rewritten output.
-                    _sweep_uncommitted_epoch_files(root)
                 for bucket in buckets:
                     part = root / f"bucket={bucket}"
                     if not part.exists():
@@ -2452,22 +2542,7 @@ class OrestesEngine:
                         .repartitionByRange(width, *[F.col(c) for c in range_cols])
                         .sortWithinPartitions(*range_cols)
                     )
-                    tmp = part.parent / f".delete_{part.name}"
-                    writer = kept.write.mode("overwrite")
-                    if part_cols:
-                        writer = writer.partitionBy(*part_cols)
-                    writer.parquet(str(tmp))
-                    if root == self._points_path(space) and (
-                        root / "_epochs"
-                    ).exists():
-                        _publish_compact_manifest(root, part.name, tmp)
-                    # Crash-atomic two-phase swap (see _recover_swaps):
-                    # after the full tmp write, live→.old, tmp→live, drop
-                    # .old. A crash at any point either rolls back (tmp
-                    # discarded) or rolls forward (tmp committed) on the
-                    # next read — the bucket is never lost.
-                    _BACKEND.swap_partition(part, tmp)
-            proot = self._points_path(space)
+                    _rewrite_bucket(part, kept, partition_by)
             if proot.exists():
                 # Frequent erasures without compactions would otherwise
                 # accumulate one kind=compact manifest per (bucket,
@@ -2475,6 +2550,243 @@ class OrestesEngine:
                 # superseded ones here, same as compact() does.
                 _prune_epoch_markers(proot)
         return n_removed
+
+    # ---------- maintenance ----------
+
+    def compact(
+        self,
+        space: str = "default",
+        target_bytes: int = _COMPACT_TARGET_BYTES,
+        buckets: list[int] | None = None,
+    ) -> dict[int, int]:
+        """Compact each bucket partition to its size-targeted file count —
+        streaming ingest appends a file (or more) per micro-batch, and at
+        scale the small-files problem is the first thing that kills scan
+        throughput. Each bucket's points are rewritten range-partitioned
+        and sorted by (series_id, time_ms) — the same series-clustered
+        layout ``_append`` writes, restored across the whole bucket, in
+        ~128 MB files (N > 1 when the bucket outgrows the target; at 100 TB
+        a bucket is TBs and the rewrite stays a wide parallel job).
+        ``buckets`` limits the rewrite to the named partitions (the
+        compact_if policy path). Returns {bucket: files_before}."""
+        with self._writer_lock(space, "compact"):
+            before: dict[int, int] = {}
+            # Decide ONCE, before the marker is reset below: collapse upserts
+            # only when reads would merge them too.
+            collapse_upserts = self._merge_needed(space)
+            # Orphaned staging dirs (a stream decommissioned after a crash
+            # never replays its uncommitted epoch; a driver commit that
+            # crashed before its renames) are invisible to readers but leak
+            # disk — compaction is the natural sweep point.
+            proot = self._points_path(space)
+            for root in (proot, self._series_path(space)):
+                for stale in itertools.chain(root.glob(".staging_epoch=*"), root.glob(".append-*")):
+                    shutil.rmtree(stale)
+            # Uncommitted epoch files must not be folded into untagged
+            # compacted output (visibility + replay-duplicate hazard); they
+            # are debris the epoch's replay fully re-delivers — sweep them.
+            _sweep_uncommitted_epoch_files(proot)
+            for root, range_cols in (
+                (proot, ["series_id", "time_ms"]),
+                (self._series_path(space), ["series_id"]),
+            ):
+                if not root.exists():
+                    continue
+                for part in sorted(root.glob("bucket=*")):
+                    bucket = int(part.name.split("=", 1)[1])
+                    if buckets is not None and bucket not in buckets:
+                        continue
+                    files = list(part.glob("*.parquet"))
+                    if len(files) <= 1:
+                        continue
+                    if root == proot:
+                        before[bucket] = len(files)
+                    df = self.spark.read.parquet(str(part))
+                    if root == proot and collapse_upserts:
+                        # Collapse cross-delivery upserts physically (the
+                        # rule reads apply), so post-compaction reads take
+                        # the merge-free plan again: the LSM compaction half
+                        # of the merge-on-read cycle (see _merged_points).
+                        # GATED on the same merge decision reads use: when
+                        # the gate is off (single delivery, or a declared
+                        # append_only space) reads preserve every stored
+                        # row, and a maintenance call must never change what
+                        # a query returns.
+                        df = _last_write_wins(df, "series_id", "time_ms")
+                    n = _compact_width(files, target_bytes)
+                    df = df.repartitionByRange(n, *[F.col(c) for c in range_cols])
+                    _rewrite_bucket(part, df.sortWithinPartitions(*range_cols))
+            # rollup partitions: compaction also MERGES the append partials
+            # (one row per (series, slot) afterwards) — the continuous
+            # aggregate's state stays bounded regardless of micro-batch count.
+            # Partials live under bucket=*/epoch=* (the streaming-replay
+            # idempotency key); the merge collapses every epoch into the
+            # canonical epoch=-1 partition. Run compaction only when no
+            # streaming epoch is in flight for the space (single-writer
+            # maintenance, same caveat as any lakehouse OPTIMIZE): compacting
+            # an epoch whose replay is still pending would let the replay
+            # re-add partials the merge already folded in.
+            #
+            # orderBy, not a fixed repartitionByRange width: the groupBy
+            # MERGES partials, so pre-merge input bytes (_compact_width's
+            # predictor) overestimate the output by the replay factor and
+            # would fragment the rewrite into many tiny files. A global sort
+            # keeps the clustering and lets AQE size range partitions from
+            # post-merge bytes.
+            _merge_partial_partitions(
+                self.spark, self._rollup_path(space), buckets,
+                lambda df: _merge_rollup_partials(df).orderBy("series_id", "slot_ms"),
+            )
+            _merge_partial_partitions(
+                self.spark, self._hist_path(space), buckets,
+                lambda df: df.groupBy("series_id", "slot_ms", "bin")
+                .agg(F.first("tags").alias("tags"), F.sum("cnt").alias("cnt"))
+                .orderBy("series_id", "slot_ms", "bin"),
+            )
+            # A FULL points compaction that actually collapsed upserts lets
+            # the merge gate drop back to the fast path. Partial
+            # (bucket-scoped) compactions keep the marker — other buckets may
+            # still hold duplicates — and a gate-off compaction (append_only
+            # space) must not rewrite history the marker describes.
+            if buckets is None and collapse_upserts and proot.exists():
+                # The rollup partials counted EVERY delivery of an overwritten
+                # point; the points are now physically collapsed, so recompute
+                # the rollup from them — compact() is the single reconciliation
+                # call, and a disarmed gate (rollup_stale() False) must
+                # guarantee rollup/point agreement. One extra scan of the
+                # points table, on the maintenance path only. Order matters:
+                # the rebuild runs BEFORE the marker reset, so a crash between
+                # the two leaves the gate armed (rollup_stale() still True)
+                # rather than falsely certifying an unreconciled rollup.
+                if self._rollup_step(space) is not None:
+                    self.rebuild_rollup(space)
+                self._reset_deliveries(space)
+            if proot.exists():
+                _prune_epoch_markers(proot)
+            return before
+
+    def compact_if(
+        self,
+        space: str = "default",
+        max_files: int = 16,
+        target_bytes: int = _COMPACT_TARGET_BYTES,
+    ) -> dict[int, int]:
+        """Auto-compaction policy: rewrite only the buckets whose file
+        count (any of points/series/rollup) exceeds ``max_files`` —
+        stats() is pure listing metadata, so the common no-op case costs
+        one directory walk and zero Spark jobs. This is the hook streaming
+        ingest calls after each committed epoch so the small-files problem
+        self-heals instead of waiting on a manual maintenance window.
+        Returns compact()'s {bucket: files_before} for the rewritten
+        buckets ({} when nothing crossed the threshold)."""
+        st = self.stats(space)
+        offenders = sorted(
+            {
+                b
+                for table in st.values()
+                for b, info in table.items()
+                if info["files"] > max_files
+            }
+        )
+        if not offenders:
+            return {}
+        return self.compact(space, target_bytes, buckets=offenders)
+
+    def rebuild_rollup(self, space: str = "default", buckets: list[int] | None = None) -> list[int]:
+        """Recompute rollup partitions from the points table. Streaming
+        replays are already idempotent (epoch-keyed partials, see
+        ``_append``), so this is no longer required for crash repair; it
+        remains the bootstrap/repair path for enabling rollup on a space
+        with pre-existing points, recovering from manual file surgery, or
+        reconciling after the documented points-duplication window (the
+        rebuilt aggregate always equals the points table exactly).
+        ``buckets`` limits the rebuild to the affected partitions
+        (default: all). Returns the buckets rebuilt."""
+        step = self._rollup_step(space)
+        if step is None:
+            raise ValueError(f"space {space!r} has no rollup_step_ms configured")
+        hist = self.config.space(space).rollup_hist
+        with self._writer_lock(space, "rebuild_rollup"):
+            proot = self._points_path(space)
+            if not proot.exists():
+                return []
+            rebuilt: list[int] = []
+            for part in sorted(proot.glob("bucket=*")):
+                bucket = int(part.name.split("=", 1)[1])
+                if buckets is not None and bucket not in buckets:
+                    continue
+                raw = self.spark.read.parquet(str(part))
+                if self._merge_needed(space):
+                    # Rebuild from MERGED rows (last delivery wins), not
+                    # deliveries: the append-only partials count every
+                    # delivery, so after a cross-delivery overwrite the
+                    # rollup over-counts until this rebuild reconciles
+                    # it. Gated exactly like reads: when the merge gate
+                    # is off the rollup must keep matching the unmerged
+                    # rows reads serve.
+                    raw = _last_write_wins(raw, "series_id", "time_ms")
+                # Global sort, not sortWithinPartitions: the groupBy
+                # output is hash-partitioned, which would write
+                # shuffle-partitions-many unclustered files; the repair
+                # must restore the same range-clustered layout _append
+                # and compact() maintain, with AQE sizing partitions
+                # from the merged bytes. Rebuilt partials land in the
+                # canonical epoch=-1 partition.
+                df = _rollup_partials(raw, step, "series_id").orderBy("series_id", "slot_ms")
+                df = df.withColumn("epoch", F.lit(-1))
+                _rewrite_bucket(self._rollup_path(space) / part.name, df, "epoch")
+                if hist is not None:
+                    # The histogram partials are rebuilt from the SAME
+                    # (possibly merged) source: counts have no _seq to
+                    # collapse at read time, so rebuild is their only
+                    # upsert repair.
+                    hdf = _hist_partials(raw, step, hist, "series_id").orderBy(
+                        "series_id", "slot_ms", "bin"
+                    )
+                    hdf = hdf.withColumn("epoch", F.lit(-1))
+                    _rewrite_bucket(self._hist_path(space) / part.name, hdf, "epoch")
+                rebuilt.append(bucket)
+            return rebuilt
+
+    def stats(self, space: str = "default") -> dict[str, dict[int, dict]]:
+        """Operational table stats: per-bucket file count and on-disk bytes
+        for the points / series / rollup tables — the numbers that drive
+        compaction scheduling (many small files → compact()) and retention
+        review (bytes per bucket over time). Pure filesystem metadata, no
+        Spark job, no data scan; at cluster scale the same walk runs
+        against the object store listing. Shape:
+        {"points": {bucket: {"files": n, "bytes": b}}, "series": {...},
+        "rollup": {...}, "rollup_hist": {...}} (tables absent from the
+        warehouse are empty)."""
+        out: dict[str, dict[int, dict]] = {}
+        for name, root in self._tables(space).items():
+            table: dict[int, dict] = {}
+            if root.exists():
+                for part in sorted(root.glob("bucket=*")):
+                    # rglob: rollup files nest under epoch=* subpartitions
+                    files = list(part.rglob("*.parquet"))
+                    table[int(part.name.split("=", 1)[1])] = {
+                        "files": len(files),
+                        "bytes": sum(f.stat().st_size for f in files),
+                    }
+            out[name] = table
+        return out
+
+    def read_fetchers(
+        self,
+        es_filter: dict | None = None,
+        space: str = "default",
+        start_ms: int = 0,
+        end_ms: int | None = None,
+    ):
+        """Iterate per-series fetchers — the embedded ``read`` callback
+        surface. Series stream from executors incrementally via
+        toLocalIterator (one partition in flight), so the driver never
+        holds the full result set."""
+        grouped = self.read(es_filter, space, start_ms, end_ms, grouped=True)
+        for row in grouped.toLocalIterator():
+            points = [(p["time_ms"], p["value"]) for p in row["points"]]
+            yield SeriesFetcher(dict(row["tags"]), points)
 
 
 class SeriesFetcher:
@@ -2495,386 +2807,3 @@ class SeriesFetcher:
         chunk = self._points[self._pos : self._pos + n]
         self._pos += n
         return {"points": chunk, "eof": self._pos >= len(self._points)}
-
-
-def _engine_read_fetchers(
-    self: "OrestesEngine",
-    es_filter: dict | None = None,
-    space: str = "default",
-    start_ms: int = 0,
-    end_ms: int | None = None,
-):
-    """Iterate per-series fetchers — the embedded ``read`` callback
-    surface. Series stream from executors incrementally via
-    toLocalIterator (one partition in flight), so the driver never
-    holds the full result set."""
-    grouped = self.read(es_filter, space, start_ms, end_ms, grouped=True)
-    for row in grouped.toLocalIterator():
-        points = [(p["time_ms"], p["value"]) for p in row["points"]]
-        yield SeriesFetcher(dict(row["tags"]), points)
-
-
-OrestesEngine.read_fetchers = _engine_read_fetchers
-
-
-_COMPACT_TARGET_BYTES = 128 << 20  # healthy parquet file size
-
-
-def _compact_width(files: list[Path], target_bytes: int = _COMPACT_TARGET_BYTES) -> int:
-    """Output-file count for a bucket rewrite: one range partition per
-    ~target on-disk bytes. Compressed input size is the best available
-    predictor of compressed output size, so a TB-scale bucket rewrites
-    as thousands of parallel size-targeted tasks — never the one-task
-    `.coalesce(1)` straggler/OOM a naive compaction would be."""
-    total = sum(f.stat().st_size for f in files)
-    return max(1, -(-total // target_bytes))
-
-
-def _merge_partial_partitions(spark, root: Path, buckets, build_df) -> None:
-    """Shared compaction scaffold for epoch-keyed partial tables
-    (rollup, rollup_hist): per bucket partition, skip the already-
-    canonical shape (≤1 file, all under epoch=-1), merge partials via
-    ``build_df``, and atomically swap the rewritten partition in. One
-    place for the skip condition and the tmp-write/rmtree/rename
-    crash-safety dance, instead of a copy per table."""
-    if not root.exists():
-        return
-    for part in sorted(root.glob("bucket=*")):
-        if buckets is not None and int(part.name.split("=", 1)[1]) not in buckets:
-            continue
-        files = list(part.rglob("*.parquet"))
-        epochs = sorted(d.name for d in part.glob("epoch=*"))
-        if len(files) <= 1 and epochs in ([], ["epoch=-1"]):
-            continue
-        df = build_df(spark.read.parquet(str(part))).withColumn("epoch", F.lit(-1))
-        tmp = part.parent / f".compact_{part.name}"
-        df.write.mode("overwrite").partitionBy("epoch").parquet(str(tmp))
-        shutil.rmtree(part)
-        tmp.rename(part)
-
-
-def _engine_compact(
-    self: "OrestesEngine",
-    space: str = "default",
-    target_bytes: int = _COMPACT_TARGET_BYTES,
-    buckets: list[int] | None = None,
-) -> dict[int, int]:
-    """Compact each bucket partition to its size-targeted file count —
-    streaming ingest appends a file (or more) per micro-batch, and at
-    scale the small-files problem is the first thing that kills scan
-    throughput. Each bucket's points are rewritten range-partitioned
-    and sorted by (series_id, time_ms) — the same series-clustered
-    layout ``_append`` writes, restored across the whole bucket, in
-    ~128 MB files (N > 1 when the bucket outgrows the target; at 100 TB
-    a bucket is TBs and the rewrite stays a wide parallel job).
-    ``buckets`` limits the rewrite to the named partitions (the
-    compact_if policy path). Returns {bucket: files_before}."""
-    before: dict[int, int] = {}
-    # Decide ONCE, before the marker is reset below: collapse upserts
-    # only when reads would merge them too.
-    collapse_upserts = self._merge_needed(space)
-    # Orphaned staging dirs (a stream decommissioned after a crash
-    # never replays its uncommitted epoch; a driver commit that
-    # crashed before its renames) are invisible to readers but leak
-    # disk — compaction is the natural sweep point.
-    proot = self._points_path(space)
-    for root in (proot, self._series_path(space)):
-        for stale in itertools.chain(root.glob(".staging_epoch=*"), root.glob(".append-*")):
-            shutil.rmtree(stale)
-    # Uncommitted epoch files must not be folded into untagged
-    # compacted output (visibility + replay-duplicate hazard); they
-    # are debris the epoch's replay fully re-delivers — sweep them.
-    _sweep_uncommitted_epoch_files(proot)
-    for root, range_cols in (
-        (self._points_path(space), ["series_id", "time_ms"]),
-        (self._series_path(space), ["series_id"]),
-    ):
-        if not root.exists():
-            continue
-        for part in sorted(root.glob("bucket=*")):
-            bucket = int(part.name.split("=", 1)[1])
-            if buckets is not None and bucket not in buckets:
-                continue
-            files = list(part.glob("*.parquet"))
-            if len(files) <= 1:
-                continue
-            if root == self._points_path(space):
-                before[bucket] = len(files)
-            n = _compact_width(files, target_bytes)
-            df = self.spark.read.parquet(str(part))
-            if root == self._points_path(space) and collapse_upserts:
-                # Collapse cross-delivery upserts physically (last
-                # delivery wins, ties to the greater value — the same
-                # rule reads apply), so post-compaction reads take the
-                # merge-free plan again: the LSM compaction half of
-                # the merge-on-read cycle (see _merged_points).
-                # GATED on the same merge decision reads use: when the
-                # gate is off (single delivery, or a declared
-                # append_only space) reads preserve every stored row,
-                # and a maintenance call must never change what a
-                # query returns.
-                if "_seq" not in df.columns:
-                    df = df.withColumn("_seq", F.lit(0).cast("long"))
-                df = (
-                    df.groupBy("series_id", "time_ms")
-                    .agg(
-                        F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"),
-                        F.max("_seq").alias("_seq"),
-                    )
-                    .select(
-                        "series_id",
-                        "time_ms",
-                        F.col("_m.value").alias("value"),
-                        F.col("_m.tags").alias("tags"),
-                        "_seq",
-                    )
-                )
-            df = df.repartitionByRange(n, *[F.col(c) for c in range_cols]).sortWithinPartitions(
-                *range_cols
-            )
-            tmp = part.parent / f".compact_{part.name}"
-            df.write.mode("overwrite").parquet(str(tmp))
-            if root == proot and (proot / "_epochs").exists():
-                _publish_compact_manifest(proot, part.name, tmp)
-            shutil.rmtree(part)
-            tmp.rename(part)
-    # rollup partitions: compaction also MERGES the append partials
-    # (one row per (series, slot) afterwards) — the continuous
-    # aggregate's state stays bounded regardless of micro-batch count.
-    # Partials live under bucket=*/epoch=* (the streaming-replay
-    # idempotency key); the merge collapses every epoch into the
-    # canonical epoch=-1 partition. Run compaction only when no
-    # streaming epoch is in flight for the space (single-writer
-    # maintenance, same caveat as any lakehouse OPTIMIZE): compacting
-    # an epoch whose replay is still pending would let the replay
-    # re-add partials the merge already folded in.
-    def merge_rollup(df):
-        return (
-            _pad_rollup_schema(df)
-            .groupBy("series_id", "slot_ms")
-            .agg(
-                F.first("tags").alias("tags"),
-                F.sum("n").alias("n"),
-                F.sum("sum_value").alias("sum_value"),
-                F.sum("sum_sq").alias("sum_sq"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
-            # orderBy, not a fixed repartitionByRange width: the
-            # groupBy MERGES partials, so pre-merge input bytes
-            # (_compact_width's predictor) overestimate the output by
-            # the replay factor and would fragment the rewrite into
-            # many tiny files. A global sort keeps the clustering and
-            # lets AQE size range partitions from post-merge bytes;
-            # merged partials land in the canonical epoch=-1 partition.
-            .orderBy("series_id", "slot_ms")
-        )
-
-    def merge_hist(df):
-        return (
-            df.groupBy("series_id", "slot_ms", "bin")
-            .agg(F.first("tags").alias("tags"), F.sum("cnt").alias("cnt"))
-            .orderBy("series_id", "slot_ms", "bin")
-        )
-
-    _merge_partial_partitions(self.spark, self._rollup_path(space), buckets, merge_rollup)
-    _merge_partial_partitions(self.spark, self._hist_path(space), buckets, merge_hist)
-    # A FULL points compaction that actually collapsed upserts lets
-    # the merge gate drop back to the fast path. Partial
-    # (bucket-scoped) compactions keep the marker — other buckets may
-    # still hold duplicates — and a gate-off compaction (append_only
-    # space) must not rewrite history the marker describes.
-    if buckets is None and collapse_upserts and self._points_path(space).exists():
-        # The rollup partials counted EVERY delivery of an overwritten
-        # point; the points are now physically collapsed, so recompute
-        # the rollup from them — compact() is the single reconciliation
-        # call, and a disarmed gate (rollup_stale() False) must
-        # guarantee rollup/point agreement. One extra scan of the
-        # points table, on the maintenance path only. Order matters:
-        # the rebuild runs BEFORE the marker reset, so a crash between
-        # the two leaves the gate armed (rollup_stale() still True)
-        # rather than falsely certifying an unreconciled rollup.
-        if self._rollup_step(space) is not None:
-            self.rebuild_rollup(space)
-        self._reset_deliveries(space)
-    if proot.exists():
-        _prune_epoch_markers(proot)
-    return before
-
-
-def _locked(fn, op: str):
-    """Wrap a maintenance entry point in the per-space writer lock
-    (reentrant — compact() calls rebuild_rollup() under its own)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, space: str = "default", *args, **kwargs):
-        with self._writer_lock(space, op):
-            return fn(self, space, *args, **kwargs)
-
-    return wrapper
-
-
-OrestesEngine.compact = _locked(_engine_compact, "compact")
-
-
-def _engine_compact_if(
-    self: "OrestesEngine",
-    space: str = "default",
-    max_files: int = 16,
-    target_bytes: int = _COMPACT_TARGET_BYTES,
-) -> dict[int, int]:
-    """Auto-compaction policy: rewrite only the buckets whose file
-    count (any of points/series/rollup) exceeds ``max_files`` —
-    stats() is pure listing metadata, so the common no-op case costs
-    one directory walk and zero Spark jobs. This is the hook streaming
-    ingest calls after each committed epoch so the small-files problem
-    self-heals instead of waiting on a manual maintenance window.
-    Returns compact()'s {bucket: files_before} for the rewritten
-    buckets ({} when nothing crossed the threshold)."""
-    st = self.stats(space)
-    offenders = sorted(
-        {
-            b
-            for table in st.values()
-            for b, info in table.items()
-            if info["files"] > max_files
-        }
-    )
-    if not offenders:
-        return {}
-    return self.compact(space, target_bytes, buckets=offenders)
-
-
-OrestesEngine.compact_if = _engine_compact_if
-
-
-def _engine_rebuild_rollup(
-    self: "OrestesEngine", space: str = "default", buckets: list[int] | None = None
-) -> list[int]:
-    """Recompute rollup partitions from the points table. Streaming
-    replays are already idempotent (epoch-keyed partials, see
-    ``_append``), so this is no longer required for crash repair; it
-    remains the bootstrap/repair path for enabling rollup on a space
-    with pre-existing points, recovering from manual file surgery, or
-    reconciling after the documented points-duplication window (the
-    rebuilt aggregate always equals the points table exactly).
-    ``buckets`` limits the rebuild to the affected partitions
-    (default: all). Returns the buckets rebuilt."""
-    step = self._rollup_step(space)
-    if step is None:
-        raise ValueError(f"space {space!r} has no rollup_step_ms configured")
-    proot = self._points_path(space)
-    if not proot.exists():
-        return []
-    rebuilt: list[int] = []
-    for part in sorted(proot.glob("bucket=*")):
-        bucket = int(part.name.split("=", 1)[1])
-        if buckets is not None and bucket not in buckets:
-            continue
-        slot = (F.floor(F.col("time_ms") / step) * step).cast("long")
-        raw = self.spark.read.parquet(str(part))
-        if self._merge_needed(space):
-            # Rebuild from MERGED rows (last delivery wins), not
-            # deliveries: the continuous aggregate's append-only
-            # partials count every delivery, so after a cross-delivery
-            # overwrite the rollup over-counts until this rebuild (or
-            # a compaction + rebuild) reconciles it — the documented
-            # repair path for the upsert corner the incremental
-            # partials cannot express. Gated exactly like reads: when
-            # the merge gate is off the rollup must keep matching the
-            # unmerged rows reads serve.
-            if "_seq" not in raw.columns:
-                raw = raw.withColumn("_seq", F.lit(0).cast("long"))
-            raw = (
-                raw.groupBy("series_id", "time_ms")
-                .agg(F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"))
-                .select("series_id", "time_ms", F.col("_m.value").alias("value"), F.col("_m.tags").alias("tags"))
-            )
-        df = (
-            raw
-            .groupBy("series_id", slot.alias("slot_ms"))
-            .agg(
-                F.first("tags").alias("tags"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).alias("sum_value"),
-                F.sum(F.col("value").cast("decimal(18,6)") * F.col("value").cast("decimal(18,6)")).alias("sum_sq"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            # Global sort, not sortWithinPartitions: the groupBy
-            # output is hash-partitioned, which would write
-            # shuffle-partitions-many unclustered files; the repair
-            # must restore the same (series_id, slot_ms)
-            # range-clustered layout _append and compact() maintain,
-            # with AQE sizing partitions from the merged bytes.
-            .orderBy("series_id", "slot_ms")
-            .withColumn("epoch", F.lit(-1))  # canonical rebuilt partition
-        )
-        target = self._rollup_path(space) / part.name
-        tmp = self._rollup_path(space) / f".rebuild_{part.name}"
-        df.write.mode("overwrite").partitionBy("epoch").parquet(str(tmp))
-        # Same crash-safe two-phase swap as delete_series: a crash
-        # between the renames parks the old partition at .old_* and
-        # the next reader's _recover_swaps restores it (a stale rollup
-        # bucket is recoverable state; a deleted one is not).
-        _BACKEND.swap_partition(target, tmp)
-        hist = self.config.space(space).rollup_hist
-        if hist is not None:
-            # The histogram partials are rebuilt from the SAME
-            # (possibly merged) source — quantiles get the identical
-            # repair/bootstrap path as the moment partials, including
-            # the cross-delivery-upsert reconciliation (counts have no
-            # _seq to collapse at read time, so rebuild is their only
-            # repair).
-            width, nbins = hist
-            b = F.least(
-                F.greatest(F.floor(F.col("value") / width), F.lit(0)), F.lit(nbins - 1)
-            ).cast("int")
-            hdf = (
-                raw.groupBy("series_id", slot.alias("slot_ms"), b.alias("bin"))
-                .agg(F.first("tags").alias("tags"), F.count(F.lit(1)).alias("cnt"))
-                .orderBy("series_id", "slot_ms", "bin")
-                .withColumn("epoch", F.lit(-1))
-            )
-            htarget = self._hist_path(space) / part.name
-            htmp = self._hist_path(space) / f".rebuild_{part.name}"
-            hdf.write.mode("overwrite").partitionBy("epoch").parquet(str(htmp))
-            _BACKEND.swap_partition(htarget, htmp)
-        rebuilt.append(bucket)
-    return rebuilt
-
-
-OrestesEngine.rebuild_rollup = _locked(_engine_rebuild_rollup, "rebuild_rollup")
-
-
-def _engine_stats(self: "OrestesEngine", space: str = "default") -> dict[str, dict[int, dict]]:
-    """Operational table stats: per-bucket file count and on-disk bytes
-    for the points / series / rollup tables — the numbers that drive
-    compaction scheduling (many small files → compact()) and retention
-    review (bytes per bucket over time). Pure filesystem metadata, no
-    Spark job, no data scan; at cluster scale the same walk runs
-    against the object store listing. Shape:
-    {"points": {bucket: {"files": n, "bytes": b}}, "series": {...},
-    "rollup": {...}} (tables absent from the warehouse are empty)."""
-    out: dict[str, dict[int, dict]] = {}
-    for name, root in (
-        ("points", self._points_path(space)),
-        ("series", self._series_path(space)),
-        ("rollup", self._rollup_path(space)),
-        ("rollup_hist", self._hist_path(space)),
-    ):
-        table: dict[int, dict] = {}
-        if root.exists():
-            for part in sorted(root.glob("bucket=*")):
-                # rglob: rollup files nest under epoch=* subpartitions
-                files = list(part.rglob("*.parquet"))
-                table[int(part.name.split("=", 1)[1])] = {
-                    "files": len(files),
-                    "bytes": sum(f.stat().st_size for f in files),
-                }
-        out[name] = table
-    return out
-
-
-OrestesEngine.stats = _engine_stats

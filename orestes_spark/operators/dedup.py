@@ -43,14 +43,6 @@ def normalize_text(col: F.Column) -> F.Column:
 # --------------------------------------------------------- array prep ---
 
 
-def token_arrays(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(_id, toks ARRAY<STRING>) — whitespace tokens, with multiplicity."""
-    return docs.select(
-        F.col(id_col).alias("_id"),
-        F.split(normalize_text(F.col(text_col)), r"\s+").alias("toks"),
-    )
-
-
 def bind(expr: F.Column, fn) -> F.Column:
     """Evaluate ``expr`` ONCE and pass it to ``fn`` as a bound lambda
     variable: element_at(transform(array(expr), fn), 1).
@@ -152,20 +144,6 @@ def explode_col(df: DataFrame, array_col: str, out: str, *keep: str) -> DataFram
 def token_shingles(docs: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     return explode_col(
         token_shingle_arrays(docs, id_col, text_col, n), "shingles", "sh", "_id"
-    )
-
-
-def char_ngrams(docs: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
-    return explode_col(
-        char_ngram_arrays(docs, id_col, text_col, n), "grams", "sh", "_id"
-    )
-
-
-def tokens_with_pos(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, tok) — one row per whitespace token."""
-    return docs.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(normalize_text(F.col(text_col)), r"\s+")).alias("pos", "tok"),
     )
 
 

@@ -75,19 +75,6 @@ def _lang_score_structs(toks: F.Column) -> F.Column:
     )
 
 
-def lang_scores(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, lang, score): marker-word hit count per candidate language.
-    Single corpus scan: all language scores come out of one bound token
-    array and are exploded to long form (the previous unionAll-of-
-    4-frames formulation scanned — and tokenized — the corpus once per
-    language)."""
-    pairs = bind(_tokens(F.col(text_col)), _lang_score_structs)
-    return (
-        ensure_min_parallelism(docs).select(F.col(id_col).alias("_id"), F.explode(pairs).alias("_p"))
-        .select("_id", F.col("_p.lang").alias("lang"), F.col("_p.score").alias("score"))
-    )
-
-
 def lang_id(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Argmax language with deterministic tiebreak (score desc, lang
     asc). Output (id, pred_lang, score).

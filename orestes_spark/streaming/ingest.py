@@ -972,7 +972,7 @@ def make_corpus_batch_processor(
                     error=RuntimeError,
                 )
                 kindex = kdf.filter(F.col("epoch") != epoch_id).select(
-                    *[c for c in ("h", "hb", "nb") if c in kdf.columns]
+                    *[c for c in ("h", "hb", "nb", "kg") if c in kdf.columns]
                 )
                 spans = _d.incremental_repeated_spans(
                     kept, kindex, id_col, text_col, k=span_k, buckets=span_buckets

@@ -1734,6 +1734,35 @@ def test_corpus_ingest_span_buckets_layout_mismatch_raises(spark, tmp_path):
     assert kept == [1]
 
 
+def test_corpus_ingest_span_k_mismatch_raises_before_write(spark, tmp_path):
+    """Reopening a span_k=6 store with span_k=5 must raise inside the
+    probe, before the epoch writes anything: the kgrams tree keeps only
+    kg=6, the docs sink gains no epoch, and compact_corpus_store still
+    succeeds on the untouched store (a kg=5 epoch beside kg=6 would make
+    it raise "mixes k-gram sizes")."""
+    from orestes_spark.streaming.ingest import (
+        compact_corpus_store,
+        make_corpus_batch_processor,
+    )
+
+    ddl = "doc_id LONG, text STRING"
+    store = str(tmp_path / "span_k_reopen")
+    a_toks = [f"a{i}" for i in range(30)]
+    k6 = make_corpus_batch_processor(store, span_k=6, span_max_frac=0.5)
+    k6(spark.createDataFrame([(1, " ".join(a_toks))], ddl), 0)
+
+    k5 = make_corpus_batch_processor(store, span_k=5, span_max_frac=0.5)
+    copier = " ".join(a_toks[5:21] + [f"b{i}" for i in range(10)])
+    with pytest.raises(ValueError, match="k=6"):
+        k5(spark.createDataFrame([(2, copier)], ddl), 1)
+    kgs = {r[0] for r in spark.read.parquet(f"{store}/kgrams").select("kg").distinct().collect()}
+    assert kgs == {6}
+    assert not os.path.exists(f"{store}/kgrams/epoch=1")
+    assert not os.path.exists(f"{store}/docs/epoch=1")
+
+    assert compact_corpus_store(spark, store)["docs"] == 1
+
+
 def test_late_point_policy_bounded_lateness(spark, engine, tmp_path):
     """Round-10 verdict #5: the bounded-lateness stance. Epoch 0's max
     event time sets the watermark for LATER epochs (lagging, so a
