@@ -17,14 +17,15 @@ on three primitives this module owns:
    ``remove_lock``). The *policy* — lease judgment, steal/retry,
    fencing — lives in ``engine._writer_lock``; only the atomic
    primitives live here.
-3. **Partition swap** — crash-atomic two-phase replace of a live
-   bucket directory (live → ``.old_*``, tmp → live, drop ``.old_*``)
-   (``swap_partition``). Every engine bucket rewrite (compact,
-   delete_series, rebuild_rollup) goes through it via
-   ``engine._rewrite_bucket``. ``engine._recover_swaps`` rolls a crashed
-   swap forward or back; it runs inside ``engine._writer_lock`` right
-   after each acquisition, so every writer recovers before it touches
-   a bucket, and on reads when no live writer holds the space.
+3. **Swap set** — crash-atomic replace of several directories: an
+   intent manifest lists the ``(live, staged)`` pairs, then live →
+   ``.old_*``, staged → live, drop the backups, drop the intent
+   (``swap_set`` / ``recover_swap_set``). Every engine bucket rewrite,
+   erasure and retention drop, and every streaming-store offline job
+   swaps through it. ``engine._recover_swaps`` rolls a space's intent
+   forward before its per-bucket table, in ``engine._writer_lock``
+   right after each acquisition and on reads when no live writer
+   holds the space; a store recovers when it is opened.
 
 ``PosixCommitBackend`` is the only backend; the engine imports the
 shared ``POSIX_BACKEND`` instance. ``engine._require_posix_warehouse``
@@ -36,7 +37,10 @@ from __future__ import annotations
 
 import json as _json
 import os as _os
+import shutil
 from pathlib import Path
+
+SWAP_INTENT = "_swap_intent"  # one per space dir / streaming store
 
 
 class PosixCommitBackend:
@@ -133,29 +137,50 @@ class PosixCommitBackend:
     def remove_lock(path: Path) -> None:
         path.unlink(missing_ok=True)
 
-    # ---------- protocol 3: crash-atomic partition swap ----------
+    # ---------- protocol 3: intent-logged swap set ----------
 
     @staticmethod
-    def swap_partition(live: Path, tmp: Path) -> None:
-        """Two-phase replace of a (possibly absent — rollup bootstrap)
-        live partition dir with a fully written ``tmp``: live →
-        .old_<name>, tmp → live, drop .old. A crash at any point is
-        converged by engine._recover_swaps (roll forward when tmp had
-        committed, roll back otherwise) — the partition is never
-        lost. The backup removal is STRICT: an undeletable ``.old``
-        (NFS silly-rename held open by a reader, EACCES) must raise,
-        because for the erasure path "success" with the replaced bytes
-        still on disk would be a silent GDPR violation — callers
-        retry, and _recover_swaps converges the parked state."""
-        import shutil
+    def swap_set(root: Path, pairs: list) -> None:
+        """Swap the fully written ``(live, staged)`` pairs (relative to
+        ``root``; ``staged=None`` drops ``live``) as one crash-atomic
+        set: the intent published first is the commit point. Backup
+        drops are STRICT — an erasure reporting success with the old
+        bytes on disk would be a silent GDPR violation."""
+        PosixCommitBackend.publish_manifest(root / SWAP_INTENT, pairs, "swap")
+        PosixCommitBackend.recover_swap_set(root)
 
-        old = live.parent / f".old_{live.name}"
-        if live.exists():
-            live.rename(old)
-            tmp.rename(live)
-            shutil.rmtree(old)
-        else:
-            tmp.rename(live)
+    @staticmethod
+    def recover_swap_set(root: Path, abort=None) -> bool:
+        """Roll the set pending under ``root`` forward: per pair live →
+        .old_<name> (.drop_ for a drop), staged → live; drop the
+        backups, then the intent. Idempotent; FileNotFoundError means
+        a concurrent recoverer went first. False when ``abort()``,
+        checked before each mutating action, stopped it."""
+        pairs, _, _ = PosixCommitBackend.read_manifest(root / SWAP_INTENT)
+        if pairs is None:
+            return True
+        backups = []
+        for live, staged in pairs:
+            live = root / live
+            backups.append(live.with_name((".drop_" if staged is None else ".old_") + live.name))
+            if staged is not None and not (root / staged).exists():
+                continue
+            if abort is not None and abort():
+                return False
+            try:
+                if live.exists():
+                    live.rename(backups[-1])
+                if staged is not None:
+                    (root / staged).rename(live)
+            except FileNotFoundError:
+                pass
+        for backup in backups:
+            if abort is not None and abort():
+                return False
+            if backup.exists():
+                shutil.rmtree(backup)
+        (root / SWAP_INTENT).unlink(missing_ok=True)
+        return True
 
 
 #: process-wide default; engine call sites import this

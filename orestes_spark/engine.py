@@ -277,8 +277,8 @@ def _grouped_read_series_estimate(
 
 def _require_posix_warehouse(warehouse: str) -> None:
     """The engine's durability protocols — single-writer lock
-    (os.link create-with-content), delete_series' two-phase bucket
-    swap (Path.rename), and streaming's staged-epoch file moves
+    (os.link create-with-content), the bucket swap sets (Path.rename),
+    and streaming's staged-epoch file moves
     (_append) — assume POSIX atomic rename/link on a filesystem both
     driver and executors can reach (local, NFS, or a FUSE mount).
     Object stores (s3a/gs/abfss/...) provide NONE of that: rename is
@@ -347,21 +347,17 @@ def _publish_compact_manifest(points_root: Path, part_name: str, tmp: Path) -> N
     _write_manifest(points_root / "_epochs" / f"epoch-{key}", files, "compact")
 
 
-# Hidden prefix a bucket rewrite stages under (_rewrite_bucket), then
+# Hidden prefix a bucket rewrite stages under (_stage_bucket), then
 # the prefixes earlier versions staged under, which recovery still
 # accepts (_recover_swaps).
 _STAGED = (".rewrite_", ".delete_", ".rebuild_", ".compact_")
 
 
-def _rewrite_bucket(part: Path, df: DataFrame, partition_by: str | None = None) -> None:
-    """Replace the bucket dir ``part`` (absent: a rollup bootstrap) by
-    ``df``, crash-atomically — the one rewrite of compact,
-    delete_series and rebuild_rollup. The whole new bucket is written
-    under a hidden staging name (Spark's ``_SUCCESS`` marks it
-    complete), its compact manifest is published in an ``_epochs``
-    space, and swap_partition swaps it in (live → .old_, staged → live,
-    drop .old_). A crash at any step leaves a state _recover_swaps
-    turns into the old bucket or the new one."""
+def _stage_bucket(part: Path, df: DataFrame, partition_by: str | None = None) -> tuple[str, str]:
+    """Write ``df`` as the whole new bucket ``part`` under a hidden
+    staging name (Spark's ``_SUCCESS`` marks it complete), publish its
+    compact manifest in an ``_epochs`` space, and return the
+    ``(live, staged)`` swap_set pair, relative to the space dir."""
     tmp = part.parent / f"{_STAGED[0]}{part.name}"
     writer = df.write.mode("overwrite")
     if partition_by is not None:
@@ -369,7 +365,13 @@ def _rewrite_bucket(part: Path, df: DataFrame, partition_by: str | None = None) 
     writer.parquet(str(tmp))
     if (part.parent / "_epochs").exists():
         _publish_compact_manifest(part.parent, part.name, tmp)
-    _BACKEND.swap_partition(part, tmp)
+    return f"{part.parent.name}/{part.name}", f"{part.parent.name}/{tmp.name}"
+
+
+def _rewrite_bucket(part: Path, df: DataFrame, partition_by: str | None = None) -> None:
+    """Replace the bucket dir ``part`` (absent: a rollup bootstrap) by
+    ``df`` as a one-pair swap_set — compact's and rebuild_rollup's."""
+    _BACKEND.swap_set(part.parent.parent, [_stage_bucket(part, df, partition_by)])
 
 
 _COMPACT_TARGET_BYTES = 128 << 20  # healthy parquet file size
@@ -1685,29 +1687,25 @@ class OrestesEngine:
     def _recover(self, space: str, root: Path) -> None:
         """Reader-side crash recovery entry point: runs _recover_swaps
         ONLY when no live writer holds the space (a live writer's
-        staged and .old_ dirs are in-flight state, not crash debris —
-        acting on them would corrupt the rewrite in progress)."""
+        intent, staged and .old_ dirs are in-flight state, not crash
+        debris — acting on them would corrupt the rewrite in progress)."""
         if not self._writer_active(space):
-            # The initial check narrows but cannot close the
-            # check-then-act window (a writer can acquire the lock
-            # between it and the listing), so recovery re-checks before
-            # EVERY mutating action and aborts the sweep the moment a
-            # live writer appears. Residual same-machine race: a writer
-            # acquiring the lock in the sub-millisecond gap between a
-            # re-check and its single rename/rmtree — acceptable
-            # because _writer_lock runs _recover_swaps over every table
-            # right after each acquisition, restoring any state a
-            # lost-race reader action touched before the writer stages
-            # new work.
+            # The check cannot close the check-then-act window, so
+            # recovery re-checks before EVERY mutating action (abort).
+            # A writer that wins the lock between a re-check and its
+            # rename/rmtree is covered: _writer_lock runs _recover_swaps
+            # over every table right after each acquisition.
             self._recover_swaps(root, abort=lambda: self._writer_active(space))
 
     @staticmethod
     def _recover_swaps(root: Path, abort=None) -> None:
-        """Crash recovery for _rewrite_bucket's staged write and
-        two-phase swap (write staged → rename live→.old_ → rename
-        staged→live → drop .old_), and for remove()'s renamed-away
-        .drop_ dirs. One directory listing per call; idempotent. Per
-        bucket, with "staged" any of the _STAGED prefixes:
+        """Crash recovery of one table: first the space's pending swap
+        set is rolled forward (while one is pending, "staged + live" is
+        committed, not debris), then the table below settles what no
+        intent covers — a staged write that never reached its intent,
+        and dirs earlier versions left. One directory listing per call;
+        idempotent. Per bucket, with "staged" any of the _STAGED
+        prefixes:
 
         ========  =======  ====  ==========================================
         staged    .old_    live  action
@@ -1731,6 +1729,8 @@ class OrestesEngine:
         before each mutating action; True stops the sweep (reader-side
         recovery passes a live-writer probe so a writer that acquires
         the lock mid-sweep is not raced)."""
+        if not _BACKEND.recover_swap_set(root.parent, abort):
+            return
         try:
             names = sorted(os.listdir(root))
         except FileNotFoundError:
@@ -2446,20 +2446,18 @@ class OrestesEngine:
         if not keep_rollup:
             roots += [tables["rollup"], tables["rollup_hist"]]
         with self._writer_lock(space, "remove"):
+            # One swap set over every table: a crash never leaves a
+            # bucket's points dropped and its series live.
+            pairs = []
             for root in roots:
-                if not root.exists():
-                    continue
                 for part in sorted(root.glob("bucket=*")):
                     bucket = int(part.name.split("=", 1)[1])
                     if min(bucket + g - 1, today) <= today - keep_days:
-                        # The rename is the drop: a crash mid-delete
-                        # leaves a hidden dir recovery deletes, never
-                        # a half-deleted live bucket.
-                        gone = root / f".drop_{part.name}"
-                        part.rename(gone)
-                        shutil.rmtree(gone)
+                        pairs.append((f"{root.name}/{part.name}", None))
                         if bucket not in dropped:
                             dropped.append(bucket)
+            if pairs:
+                _BACKEND.swap_set(tables["points"].parent, pairs)
             # A sweep that emptied the space leaves nothing to merge —
             # disarm the gate so subsequent appends start on the
             # merge-free fast path instead of paying the upsert
@@ -2521,6 +2519,8 @@ class OrestesEngine:
             # (invisible) files into rewritten output.
             _sweep_uncommitted_epoch_files(proot)
             tables = self._tables(space)
+            # One swap set over every table: the erasure lands whole.
+            pairs = []
             for root, range_cols, partition_by in (
                 (proot, ["series_id", "time_ms"], None),
                 (tables["series"], ["series_id"], None),
@@ -2542,7 +2542,8 @@ class OrestesEngine:
                         .repartitionByRange(width, *[F.col(c) for c in range_cols])
                         .sortWithinPartitions(*range_cols)
                     )
-                    _rewrite_bucket(part, kept, partition_by)
+                    pairs.append(_stage_bucket(part, kept, partition_by))
+            _BACKEND.swap_set(proot.parent, pairs)
             if proot.exists():
                 # Frequent erasures without compactions would otherwise
                 # accumulate one kind=compact manifest per (bucket,

@@ -57,11 +57,15 @@ behavior (append mode drops events later than the watermark).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import shutil
+from pathlib import Path
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from orestes_spark import schema, validation
+from orestes_spark.commit_backend import POSIX_BACKEND, SWAP_INTENT
 from orestes_spark.engine import OrestesEngine
 
 # Raw input contract for file sources: reference-style points with a
@@ -647,12 +651,8 @@ def text_gate_retrain_if(
 
     Retrain config (buckets/salt/bigrams/vocab_size) is read from
     the EXISTING artifact's self-describing columns, so a retrain can
-    never silently change featurization. Swap discipline =
-    ``_swap_trees``: each new artifact is fully written under
-    ``<store>/.gate_retrain/<name>``, then renamed over the live path
-    with a ``*.old`` backup — a crash leaves complete old state,
-    complete new state, or an ``.old`` to rename back, never a
-    half-trained gate (the requantize_embedding_store contract).
+    never silently change featurization. The new artifacts are written
+    under ``<store>/.gate_retrain`` and swap in as one ``swap_set``.
     POSIX-local store required, single-writer (stream stopped /
     between epochs), like every offline job here.
 
@@ -663,6 +663,7 @@ def text_gate_retrain_if(
     triggered=True with reason="no_scored_docs" instead of a healthy
     default (ADVICE r11: n=0 must surface drift, not mask it); it is
     never retrained, since the collapse is upstream of the gate."""
+    _recover_store(spark, store)
     stats = read_gate_stats(spark, store)
     out: dict[str, dict] = {}
     retrains: dict[str, tuple] = {}
@@ -728,9 +729,6 @@ def text_gate_retrain_if(
     store = _require_posix_store(store, "text_gate_retrain_if")
     names = {"dsir": "dsir_wq", "quality": "quality_model", "ppl": "bigram_lm"}
     tmp = f"{store}/.gate_retrain"
-    _refuse_leftovers(
-        "text_gate_retrain_if", tmp, *[f"{store}/{names[g]}" for g in retrains]
-    )
     for gate, src in retrains.items():
         if gate == "dsir":
             old = spark.read.parquet(f"{store}/dsir_wq").select(
@@ -752,7 +750,8 @@ def text_gate_retrain_if(
         else:
             vs = spark.read.parquet(f"{store}/bigram_lm/fb").count() - 1
             prepare_ppl_gate(src, tmp, id_col, text_col, vocab_size=vs)
-    _swap_trees(tmp, {names[g]: f"{store}/{names[g]}" for g in retrains})
+    POSIX_BACKEND.swap_set(Path(store), [(names[g], f".gate_retrain/{names[g]}") for g in retrains])
+    shutil.rmtree(tmp)
     for gate in retrains:
         out[gate]["retrained"] = True
     return out
@@ -863,6 +862,7 @@ def make_corpus_batch_processor(
     dsir_wq_path = f"{store}/dsir_wq"
     qmodel_path = f"{store}/quality_model"
     lm_path = f"{store}/bigram_lm"
+    _recover_store(SparkSession.active(), store)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -1528,6 +1528,7 @@ def make_embedding_batch_processor(
     meta_path = f"{store}/meta"
     meta_checked = [False]
     cells_checked = [False]
+    _recover_store(SparkSession.active(), store)
 
     def _check_meta(spark) -> None:
         """The gate's semantics live in (threshold, quantize, labeled):
@@ -1749,13 +1750,8 @@ def requantize_embedding_store(
     frozen-quantizer contract as bootstrap, just with earned cells.
 
     Single-writer contract: run with the stream STOPPED (the same
-    operational slot as engine compaction). Crash safety: both new
-    trees are fully written under ``<store>/.requant`` before any
-    swap; the old trees are moved aside as ``*.old`` and removed only
-    after both renames land, so any crash leaves either the complete
-    old state, the complete new state, or a ``*.old`` tree to rename
-    back by hand (the job refuses to start over a leftover
-    ``.requant`` / ``*.old`` from a previous crash).
+    operational slot as engine compaction). Both trees are written
+    under ``<store>/.requant`` and swap in as one ``swap_set``.
 
     Returns {"rows": n, "cells": m} for the rewritten store."""
     import os
@@ -1763,11 +1759,9 @@ def requantize_embedding_store(
     from orestes_spark.operators import similarity as _s
 
     store = _require_posix_store(store, "requantize_embedding_store")
-    vecs_path = f"{store}/vecs"
-    cents_path = f"{store}/cents"
+    _recover_store(spark, store)
     tmp = f"{store}/.requant"
-    _refuse_leftovers("requantize", tmp, vecs_path, cents_path)
-    vecs = spark.read.parquet(vecs_path).select(id_col, "label", "vec").localCheckpoint()
+    vecs = spark.read.parquet(f"{store}/vecs").select(id_col, "label", "vec").localCheckpoint()
     assign = _s.kmeans_cosine(vecs, id_col=id_col, vec_col="vec", k=k, iters=iters)
     rows = vecs.join(assign, id_col)
     # Unlabeled stores (meta.labeled = false) carry the CELL ID in the
@@ -1786,7 +1780,8 @@ def requantize_embedding_store(
     ).write.parquet(f"{tmp}/cents")
     n_rows = rows.count()
     n_cells = rows.select("cluster").distinct().count()
-    _swap_trees(tmp, {"vecs": vecs_path, "cents": cents_path})
+    POSIX_BACKEND.swap_set(Path(store), [(t, f".requant/{t}") for t in ("vecs", "cents")])
+    shutil.rmtree(tmp)
     return {"rows": n_rows, "cells": n_cells}
 
 
@@ -1842,7 +1837,7 @@ def requantize_if(
 
 def _require_posix_store(store: str, who: str) -> str:
     """Normalize a local store path, refusing remote URIs loudly: the
-    offline-job swaps below are os.rename-based (everything STREAMING
+    offline-job swaps below are rename-based (everything STREAMING
     goes through the Hadoop FS API and works anywhere), so a remote
     store would pass the Spark writes and then die at the rename —
     the same POSIX boundary and pointer as the engine's
@@ -1852,52 +1847,43 @@ def _require_posix_store(store: str, who: str) -> str:
     low = store.lower()
     if low.startswith("file:"):
         # strip ONLY an empty authority: file:/p and file:///p are the
-        # local path /p, but file://host/p names a REMOTE authority —
-        # the (//)? regex this replaced accepted it as the bogus local
-        # path '//host/p' and died later at the os.rename
+        # local path /p, but file://host/p names a REMOTE authority
         rest = store[len("file://"):] if low.startswith("file://") else store[len("file:"):]
         if rest.startswith("/"):
             return rest
         raise RuntimeError(
             f"{who}: {store!r} carries a remote authority — the swap is"
-            " os.rename-based; mount it locally or port the swap onto a"
-            " commit backend (see orestes_spark.commit_backend)"
+            " rename-based; mount it locally or port"
+            " commit_backend.PosixCommitBackend.swap_set to its store"
         )
     if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", store):
         raise RuntimeError(
             f"{who} needs a POSIX-rename store, got {store!r} — run it"
-            " against a local/NFS mount, or port the swap onto a commit"
-            " backend (see orestes_spark.commit_backend)"
+            " against a local/NFS mount, or port"
+            " commit_backend.PosixCommitBackend.swap_set to its store"
         )
     return store
 
 
-def _refuse_leftovers(who: str, tmp: str, *finals: str) -> None:
-    import os
-
-    for leftover in (tmp, *[f"{p}.old" for p in finals]):
-        if os.path.exists(leftover):
-            raise RuntimeError(
-                f"{who}: leftover {leftover!r} from a previous run/crash —"
-                " recover or remove it first"
-            )
-
-
-def _swap_trees(tmp: str, mapping: dict[str, str]) -> None:
-    """Move every fully-written ``<tmp>/<sub>`` over its final path:
-    finals go aside as ``*.old`` first, the ``.old`` trees and the
-    staging root are removed only after EVERY rename landed — a crash
-    leaves either complete old state, complete new state, or an
-    ``*.old`` tree to rename back by hand."""
-    import os
-    import shutil
-
-    for sub, final in mapping.items():
-        os.rename(final, f"{final}.old")
-        os.rename(f"{tmp}/{sub}", final)
-    for final in mapping.values():
-        shutil.rmtree(f"{final}.old")
-    shutil.rmtree(tmp)
+def _recover_store(spark, store: str) -> None:
+    """Crash recovery when a job or a batch processor opens a corpus or
+    embedding store: roll a pending swap set forward and discard
+    staging trees no intent committed. A ``<tree>.old`` from the
+    earlier swap, which kept no intent, raises: only an operator can
+    tell which trees belong together."""
+    fs, base = _fs_and_path(spark, store)
+    if not fs.exists(base):
+        return
+    names = {st.getPath().getName() for st in fs.listStatus(base)}
+    legacy = sorted(n for n in names if n.endswith(".old"))
+    if legacy:
+        raise RuntimeError(f"{store}: leftover {legacy} from a previous crash — recover or remove it first")
+    staging = {".gate_retrain", ".requant", ".compact"}  # the offline jobs' staging trees
+    if SWAP_INTENT in names or names & staging:
+        root = Path(_require_posix_store(store, "store recovery"))
+        POSIX_BACKEND.recover_swap_set(root)
+        for n in staging:
+            shutil.rmtree(root / n, ignore_errors=True)
 
 
 def compact_corpus_store(
@@ -1919,7 +1905,7 @@ def compact_corpus_store(
     verbatim, so the gate accepts/rejects exactly as before.
 
     Single-writer contract (stream stopped); crash safety identical to
-    requantize: full staging write, then ``_swap_trees``.
+    requantize: full staging write, then one ``swap_set``.
 
     Stores whose stream armed the ``span_k`` gate also carry a
     ``<store>/kgrams`` epoch tree; its partitions collapse to one
@@ -1936,19 +1922,17 @@ def compact_corpus_store(
     import os
 
     store = _require_posix_store(store, "compact_corpus_store")
+    _recover_store(spark, store)
     docs_path, bands_path = f"{store}/docs", f"{store}/bands"
     kgrams_path = f"{store}/kgrams"
     has_kgrams = os.path.exists(kgrams_path)
     tmp = f"{store}/.compact"
-    finals = [docs_path, bands_path] + ([kgrams_path] if has_kgrams else [])
-    _refuse_leftovers("compact_corpus_store", tmp, *finals)
     docs = spark.read.parquet(docs_path).select(id_col, text_col).localCheckpoint()
     bands = spark.read.parquet(bands_path).select("band", "bval", "_id").localCheckpoint()
     docs.write.parquet(f"{tmp}/docs/epoch=-1")
     bands.write.parquet(f"{tmp}/bands/epoch=-1")
     n_docs, n_bands = docs.count(), bands.count()
     out = {"docs": n_docs, "bands": n_bands}
-    mapping = {"docs": docs_path, "bands": bands_path}
     if has_kgrams:
         from orestes_spark.operators import dedup as _d
 
@@ -1977,6 +1961,6 @@ def compact_corpus_store(
         else:
             kgrams.write.parquet(f"{tmp}/kgrams/epoch=-1")
         out["kgrams"] = kgrams.count()
-        mapping["kgrams"] = kgrams_path
-    _swap_trees(tmp, mapping)
+    POSIX_BACKEND.swap_set(Path(store), [(t, f".compact/{t}") for t in out])
+    shutil.rmtree(tmp)
     return out

@@ -1,11 +1,16 @@
 """The commit-backend seam: the three rename-dependent durability
-protocols (manifest, lock, partition swap) on POSIX."""
+protocols (manifest, lock, swap set) on POSIX."""
 
 from __future__ import annotations
 
 import json
+import os
+import pathlib
+import shutil
 
-from orestes_spark.commit_backend import POSIX_BACKEND
+import pytest
+
+from orestes_spark.commit_backend import POSIX_BACKEND, SWAP_INTENT
 
 
 def test_manifest_roundtrip_and_legacy_formats(tmp_path):
@@ -41,20 +46,80 @@ def test_lock_create_is_atomic_with_payload(tmp_path):
     POSIX_BACKEND.remove_lock(lock)  # idempotent
 
 
-def test_swap_partition_replaces_and_bootstraps(tmp_path):
-    live = tmp_path / "bucket=1"
-    live.mkdir()
-    (live / "old.parquet").write_text("old")
-    tmp = tmp_path / ".delete_bucket=1"
-    tmp.mkdir()
-    (tmp / "new.parquet").write_text("new")
-    POSIX_BACKEND.swap_partition(live, tmp)
-    assert [f.name for f in live.glob("*.parquet")] == ["new.parquet"]
-    assert not tmp.exists() and not (tmp_path / ".old_bucket=1").exists()
-    # bootstrap: live absent (first rollup rebuild of a bucket)
-    live2 = tmp_path / "bucket=2"
-    tmp2 = tmp_path / ".rebuild_bucket=2"
-    tmp2.mkdir()
-    (tmp2 / "a.parquet").write_text("a")
-    POSIX_BACKEND.swap_partition(live2, tmp2)
-    assert (live2 / "a.parquet").exists()
+class Crash(RuntimeError):
+    pass
+
+
+# a replace, a replace or bootstrap (no live dir), and a drop
+PAIRS = [("t1/bucket=1", "t1/.rewrite_bucket=1"), ("t2/bucket=1", "t2/.rewrite_bucket=1"),
+         ("t3/bucket=1", None)]
+
+
+def _tree(root, name, tag):
+    (root / name).mkdir(parents=True)
+    (root / name / "part.parquet").write_text(tag)
+
+
+def _state(root):
+    files = {live: root / live / "part.parquet" for live, _ in PAIRS}
+    return {live: f.read_text() if f.exists() else None for live, f in files.items()}
+
+
+@pytest.mark.parametrize("bootstrap", [False, True], ids=["replace", "bootstrap"])
+def test_swap_set_crash_matrix(tmp_path, monkeypatch, bootstrap):
+    """A three-pair swap set crashed before each of its effects — the
+    intent publish, every rename, every backup drop, the intent
+    removal — then recovered: the pairs read all old (crash before the
+    intent) or all new, and recovery leaves no backup, staged dir or
+    intent behind. The uncrashed run replaces, bootstraps and drops."""
+    old = {"t1/bucket=1": "old1", "t2/bucket=1": None if bootstrap else "old2",
+           "t3/bucket=1": "old3"}
+    new = {"t1/bucket=1": "new1", "t2/bucket=1": "new2", "t3/bucket=1": None}
+    real = {"replace": os.replace, "rename": pathlib.Path.rename,
+            "rmtree": shutil.rmtree, "unlink": pathlib.Path.unlink}
+
+    def run(name, crash_at=None):
+        root = tmp_path / name
+        for live, staged in PAIRS:
+            if old[live]:
+                _tree(root, live, old[live])
+            if staged:
+                _tree(root, staged, new[live])
+        effects = []
+
+        def hook(kind):
+            def call(*args, **kwargs):
+                if len(effects) == crash_at:
+                    raise Crash(kind)
+                effects.append(kind)
+                return real[kind](*args, **kwargs)
+            return call
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", hook("replace"))
+            m.setattr(pathlib.Path, "rename", hook("rename"))
+            m.setattr(shutil, "rmtree", hook("rmtree"))
+            m.setattr(pathlib.Path, "unlink", hook("unlink"))
+            try:
+                POSIX_BACKEND.swap_set(root, PAIRS)
+            except Crash:
+                pass
+        return root, effects
+
+    root, effects = run("clean")
+    assert _state(root) == new
+    n_live = sum(v is not None for v in old.values())
+    assert effects == ["replace"] + ["rename"] * (n_live + 2) + ["rmtree"] * n_live + ["unlink"]
+
+    for i, kind in enumerate(effects):
+        root, _ = run(f"crash_{i}", crash_at=i)
+        if i > 0:  # the intent is published: a recoverer that aborts leaves it
+            assert POSIX_BACKEND.recover_swap_set(root, abort=lambda: True) is False
+            assert (root / SWAP_INTENT).exists()
+        for _ in range(2):  # idempotent
+            assert POSIX_BACKEND.recover_swap_set(root) is True
+            assert _state(root) == (old if i == 0 else new), (i, kind)
+        assert not (root / SWAP_INTENT).exists()
+        left = {p.name for t in ("t1", "t2", "t3") if (root / t).exists() for p in (root / t).iterdir()}
+        want = {"bucket=1", ".rewrite_bucket=1"} if i == 0 else {"bucket=1"}
+        assert left <= want, (i, kind, left)

@@ -1142,12 +1142,32 @@ def test_requantize_embedding_store_swaps_cells_and_keeps_dedup(spark, tmp_path)
     assert 100 not in final, "near-dup of vec 0 must still be rejected"
     assert 101 in final
 
-    # leftover guard
-    import pytest as _pytest
+    # A staging tree with no intent was never committed: it is
+    # discarded, and the run matches one on a clean copy of the store.
+    import shutil
 
-    (tmp_path / "emb_rq" / ".requant").mkdir()
-    with _pytest.raises(RuntimeError, match="leftover"):
+    clean = shutil.copytree(store, str(tmp_path / "emb_rq_clean"))
+    junk = tmp_path / "emb_rq" / ".requant" / "vecs"
+    junk.mkdir(parents=True)
+    (junk / "part-00000.parquet").write_bytes(b"not parquet")
+    assert requantize_embedding_store(spark, store, k=4) == requantize_embedding_store(
+        spark, clean, k=4
+    )
+    assert not os.path.exists(f"{store}/.requant")
+    ids = [
+        sorted(r["vec_id"] for r in spark.read.parquet(f"{s}/vecs").collect())
+        for s in (store, clean)
+    ]
+    assert ids[0] == ids[1]
+    # A `<tree>.old` from the earlier intent-less swap still raises, in
+    # the job and in the gate.
+    (tmp_path / "emb_rq" / "cents.old").mkdir()
+    with pytest.raises(RuntimeError, match="leftover"):
         requantize_embedding_store(spark, store, k=4)
+    with pytest.raises(RuntimeError, match="leftover"):
+        make_embedding_batch_processor(store, threshold=0.9)(
+            spark.createDataFrame([(102, 0, [0.0, 0.0, 7.0, 7.0])], ddl), 3
+        )
 
 
 def test_embedding_ingest_unlabeled_bootstrap_trains_quantizer(spark, tmp_path):
