@@ -20,12 +20,11 @@ on three primitives this module owns:
 3. **Swap set** — crash-atomic replace of several directories: an
    intent manifest lists the ``(live, staged)`` pairs, then live →
    ``.old_*``, staged → live, drop the backups, drop the intent
-   (``swap_set`` / ``recover_swap_set``). Every engine bucket rewrite,
-   erasure and retention drop, and every streaming-store offline job
-   swaps through it. ``engine._recover_swaps`` rolls a space's intent
-   forward before its per-bucket table, in ``engine._writer_lock``
-   right after each acquisition and on reads when no live writer
-   holds the space; a store recovers when it is opened.
+   (``swap_set`` / ``recover_swap_set``): every engine bucket rewrite,
+   erasure and retention drop, and every streaming-store job. The
+   engine rolls an intent forward under the writer lock (each
+   acquisition, and a read that finds one pending), before
+   ``engine._recover_swaps``; a store, when a job or processor opens it.
 
 ``PosixCommitBackend`` is the only backend; the engine imports the
 shared ``POSIX_BACKEND`` instance. ``engine._require_posix_warehouse``
@@ -143,44 +142,38 @@ class PosixCommitBackend:
     def swap_set(root: Path, pairs: list) -> None:
         """Swap the fully written ``(live, staged)`` pairs (relative to
         ``root``; ``staged=None`` drops ``live``) as one crash-atomic
-        set: the intent published first is the commit point. Backup
-        drops are STRICT — an erasure reporting success with the old
-        bytes on disk would be a silent GDPR violation."""
+        set; the intent is the commit point. Backup drops are STRICT:
+        an erasure "succeeding" with the old bytes on disk is a GDPR
+        violation."""
         PosixCommitBackend.publish_manifest(root / SWAP_INTENT, pairs, "swap")
         PosixCommitBackend.recover_swap_set(root)
 
     @staticmethod
-    def recover_swap_set(root: Path, abort=None) -> bool:
+    def recover_swap_set(root: Path) -> None:
         """Roll the set pending under ``root`` forward: per pair live →
         .old_<name> (.drop_ for a drop), staged → live; drop the
-        backups, then the intent. Idempotent; FileNotFoundError means
-        a concurrent recoverer went first. False when ``abort()``,
-        checked before each mutating action, stopped it."""
-        pairs, _, _ = PosixCommitBackend.read_manifest(root / SWAP_INTENT)
-        if pairs is None:
-            return True
+        backups, then the intent. Idempotent from any crash state, NOT
+        against a concurrent recoverer (it can move the other's new
+        live dir aside): callers serialize. An unreadable intent
+        raises — only a missing one means nothing is pending."""
+        try:
+            pairs = _json.loads((root / SWAP_INTENT).read_text())["files"]
+        except FileNotFoundError:
+            return
         backups = []
         for live, staged in pairs:
             live = root / live
             backups.append(live.with_name((".drop_" if staged is None else ".old_") + live.name))
             if staged is not None and not (root / staged).exists():
-                continue
-            if abort is not None and abort():
-                return False
-            try:
-                if live.exists():
-                    live.rename(backups[-1])
-                if staged is not None:
-                    (root / staged).rename(live)
-            except FileNotFoundError:
-                pass
+                continue  # this pair already swapped
+            if live.exists():
+                live.rename(backups[-1])
+            if staged is not None:
+                (root / staged).rename(live)
         for backup in backups:
-            if abort is not None and abort():
-                return False
             if backup.exists():
                 shutil.rmtree(backup)
-        (root / SWAP_INTENT).unlink(missing_ok=True)
-        return True
+        (root / SWAP_INTENT).unlink()
 
 
 #: process-wide default; engine call sites import this

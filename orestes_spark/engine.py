@@ -54,7 +54,7 @@ import shutil
 import threading
 import time as _time
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from pathlib import Path
 from typing import Any
 
@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orestes_spark import esdsl, schema, validation
-from orestes_spark.commit_backend import POSIX_BACKEND as _BACKEND
+from orestes_spark.commit_backend import POSIX_BACKEND as _BACKEND, SWAP_INTENT
 from orestes_spark.config import MS_IN_DAY, EngineConfig, SpaceConfig
 
 
@@ -842,9 +842,10 @@ class OrestesEngine:
         beater.start()
         body_raised = False
         try:
-            # Crash recovery, once per acquisition: every writer finds
-            # each bucket old or new — never parked at .old_ or staged —
-            # before it touches one (see _recover_swaps).
+            # Crash recovery, once per acquisition, so every writer
+            # finds each bucket old or new before it touches one: the
+            # pending swap set first (its "staged + live" is committed).
+            _BACKEND.recover_swap_set(path.parent)
             for root in self._tables(space).values():
                 self._recover_swaps(root)
             yield
@@ -1685,24 +1686,27 @@ class OrestesEngine:
         return _holder_alive(holder, path, self.config.writer_lease_ms)
 
     def _recover(self, space: str, root: Path) -> None:
-        """Reader-side crash recovery entry point: runs _recover_swaps
-        ONLY when no live writer holds the space (a live writer's
-        intent, staged and .old_ dirs are in-flight state, not crash
-        debris — acting on them would corrupt the rewrite in progress)."""
-        if not self._writer_active(space):
-            # The check cannot close the check-then-act window, so
-            # recovery re-checks before EVERY mutating action (abort).
-            # A writer that wins the lock between a re-check and its
-            # rename/rmtree is covered: _writer_lock runs _recover_swaps
-            # over every table right after each acquisition.
-            self._recover_swaps(root, abort=lambda: self._writer_active(space))
+        """Reader-side crash recovery, skipped while a live writer holds
+        the space (its intent, staged and .old_ dirs are in-flight
+        state, not debris). A pending swap set rolls forward only under
+        the writer lock, whose acquisition recovers every table: two
+        lock-free roll-forwards could move each other's new live dir
+        aside. The per-table sweep re-checks for a writer before each
+        mutating action (abort); one that wins the lock between a
+        re-check and the action recovers every table on acquisition."""
+        if self._writer_active(space):
+            return
+        if (root.parent / SWAP_INTENT).exists():
+            with suppress(ConcurrentWriterError), self._writer_lock(space, "recover"):
+                pass  # a contender holds the lock: its acquisition recovers
+            return
+        self._recover_swaps(root, abort=lambda: self._writer_active(space))
 
     @staticmethod
     def _recover_swaps(root: Path, abort=None) -> None:
-        """Crash recovery of one table: first the space's pending swap
-        set is rolled forward (while one is pending, "staged + live" is
-        committed, not debris), then the table below settles what no
-        intent covers — a staged write that never reached its intent,
+        """Crash recovery of one table once no swap set is pending (see
+        _writer_lock and _recover, which roll the intent forward
+        first): settles a staged write that never reached its intent
         and dirs earlier versions left. One directory listing per call;
         idempotent. Per bucket, with "staged" any of the _STAGED
         prefixes:
@@ -1729,8 +1733,6 @@ class OrestesEngine:
         before each mutating action; True stops the sweep (reader-side
         recovery passes a live-writer probe so a writer that acquires
         the lock mid-sweep is not raced)."""
-        if not _BACKEND.recover_swap_set(root.parent, abort):
-            return
         try:
             names = sorted(os.listdir(root))
         except FileNotFoundError:

@@ -57,15 +57,17 @@ behavior (append mode drops events later than the watermark).
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from orestes_spark import schema, validation
-from orestes_spark.commit_backend import POSIX_BACKEND, SWAP_INTENT
+from orestes_spark.commit_backend import POSIX_BACKEND
 from orestes_spark.engine import OrestesEngine
 
 # Raw input contract for file sources: reference-style points with a
@@ -110,9 +112,6 @@ def _canonical_stream_ns(checkpoint: str) -> str:
     re-appends its single replayed final epoch under the new key
     (points upsert-merge absorbs it; rollup partials over-count until
     ``compact()``/``rebuild_rollup``, surfaced by ``rollup_stale``)."""
-    import os
-    import re
-
     s = checkpoint.rstrip("/") or "/"
     m = re.match(r"^file:(//)?(/.*)?$", s, re.IGNORECASE)
     if m:
@@ -242,7 +241,6 @@ class LatePointPolicy:
         """Monotone, epoch-guarded advance — idempotent under replay
         (a seq at or below the stored one is a no-op)."""
         import json
-        import os
 
         wm, seq = self._state()
         if epoch_id <= seq or batch_max_ms is None:
@@ -663,7 +661,7 @@ def text_gate_retrain_if(
     triggered=True with reason="no_scored_docs" instead of a healthy
     default (ADVICE r11: n=0 must surface drift, not mask it); it is
     never retrained, since the collapse is upstream of the gate."""
-    _recover_store(spark, store)
+    _recover_store(store)
     stats = read_gate_stats(spark, store)
     out: dict[str, dict] = {}
     retrains: dict[str, tuple] = {}
@@ -728,7 +726,8 @@ def text_gate_retrain_if(
         return out
     store = _require_posix_store(store, "text_gate_retrain_if")
     names = {"dsir": "dsir_wq", "quality": "quality_model", "ppl": "bigram_lm"}
-    tmp = f"{store}/.gate_retrain"
+    tmp = Path(store, ".gate_retrain")
+    shutil.rmtree(tmp, ignore_errors=True)  # no intent named it: never committed
     for gate, src in retrains.items():
         if gate == "dsir":
             old = spark.read.parquet(f"{store}/dsir_wq").select(
@@ -750,7 +749,7 @@ def text_gate_retrain_if(
         else:
             vs = spark.read.parquet(f"{store}/bigram_lm/fb").count() - 1
             prepare_ppl_gate(src, tmp, id_col, text_col, vocab_size=vs)
-    POSIX_BACKEND.swap_set(Path(store), [(names[g], f".gate_retrain/{names[g]}") for g in retrains])
+    POSIX_BACKEND.swap_set(Path(store), [(names[g], f"{tmp.name}/{names[g]}") for g in retrains])
     shutil.rmtree(tmp)
     for gate in retrains:
         out[gate]["retrained"] = True
@@ -853,7 +852,9 @@ def make_corpus_batch_processor(
     Epoch-keyed subdirectories written with mode("overwrite") make
     replays idempotent: a re-offered epoch overwrites its own output
     instead of appending duplicates (no marker file needed — the
-    partition path IS the marker)."""
+    partition path IS the marker). Construction rolls the store's
+    pending swap set forward: never build one while an offline job
+    runs on the store."""
     from orestes_spark.operators import dedup as _d
 
     docs_path = f"{store}/docs"
@@ -862,7 +863,7 @@ def make_corpus_batch_processor(
     dsir_wq_path = f"{store}/dsir_wq"
     qmodel_path = f"{store}/quality_model"
     lm_path = f"{store}/bigram_lm"
-    _recover_store(SparkSession.active(), store)
+    _recover_store(store)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -1518,7 +1519,9 @@ def make_embedding_batch_processor(
     frozen k must be sized for the expected corpus (cells ~ bounded),
     or the corpus periodically re-quantized offline with a finer
     trained quantizer (``similarity.kmeans_cosine``); see the
-    SCALING.md soak for the measured growth when k is too coarse."""
+    SCALING.md soak for the measured growth when k is too coarse.
+    Construction rolls the store's pending swap set forward: never
+    build one while an offline job runs on the store."""
     from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
     from orestes_spark.operators import similarity as _s
@@ -1528,7 +1531,7 @@ def make_embedding_batch_processor(
     meta_path = f"{store}/meta"
     meta_checked = [False]
     cells_checked = [False]
-    _recover_store(SparkSession.active(), store)
+    _recover_store(store)
 
     def _check_meta(spark) -> None:
         """The gate's semantics live in (threshold, quantize, labeled):
@@ -1754,13 +1757,12 @@ def requantize_embedding_store(
     under ``<store>/.requant`` and swap in as one ``swap_set``.
 
     Returns {"rows": n, "cells": m} for the rewritten store."""
-    import os
-
     from orestes_spark.operators import similarity as _s
 
     store = _require_posix_store(store, "requantize_embedding_store")
-    _recover_store(spark, store)
-    tmp = f"{store}/.requant"
+    _recover_store(store)
+    tmp = Path(store, ".requant")
+    shutil.rmtree(tmp, ignore_errors=True)  # no intent named it: never committed
     vecs = spark.read.parquet(f"{store}/vecs").select(id_col, "label", "vec").localCheckpoint()
     assign = _s.kmeans_cosine(vecs, id_col=id_col, vec_col="vec", k=k, iters=iters)
     rows = vecs.join(assign, id_col)
@@ -1780,7 +1782,7 @@ def requantize_embedding_store(
     ).write.parquet(f"{tmp}/cents")
     n_rows = rows.count()
     n_cells = rows.select("cluster").distinct().count()
-    POSIX_BACKEND.swap_set(Path(store), [(t, f".requant/{t}") for t in ("vecs", "cents")])
+    POSIX_BACKEND.swap_set(Path(store), [(t, f"{tmp.name}/{t}") for t in ("vecs", "cents")])
     shutil.rmtree(tmp)
     return {"rows": n_rows, "cells": n_cells}
 
@@ -1842,8 +1844,6 @@ def _require_posix_store(store: str, who: str) -> str:
     store would pass the Spark writes and then die at the rename —
     the same POSIX boundary and pointer as the engine's
     _require_posix_warehouse."""
-    import re
-
     low = store.lower()
     if low.startswith("file:"):
         # strip ONLY an empty authority: file:/p and file:///p are the
@@ -1851,39 +1851,31 @@ def _require_posix_store(store: str, who: str) -> str:
         rest = store[len("file://"):] if low.startswith("file://") else store[len("file:"):]
         if rest.startswith("/"):
             return rest
-        raise RuntimeError(
-            f"{who}: {store!r} carries a remote authority — the swap is"
-            " rename-based; mount it locally or port"
-            " commit_backend.PosixCommitBackend.swap_set to its store"
-        )
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", store):
-        raise RuntimeError(
-            f"{who} needs a POSIX-rename store, got {store!r} — run it"
-            " against a local/NFS mount, or port"
-            " commit_backend.PosixCommitBackend.swap_set to its store"
-        )
-    return store
+    elif not re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*:", store):
+        return store
+    raise RuntimeError(
+        f"{who} needs a POSIX-rename store, got {store!r} — run it against"
+        " a local/NFS mount, or port commit_backend.PosixCommitBackend.swap_set"
+        " to its store"
+    )
 
 
-def _recover_store(spark, store: str) -> None:
+def _recover_store(store: str) -> None:
     """Crash recovery when a job or a batch processor opens a corpus or
-    embedding store: roll a pending swap set forward and discard
-    staging trees no intent committed. A ``<tree>.old`` from the
+    embedding store: roll a pending swap set forward (each job discards
+    its own uncommitted staging tree). A ``<tree>.old`` from the
     earlier swap, which kept no intent, raises: only an operator can
-    tell which trees belong together."""
-    fs, base = _fs_and_path(spark, store)
-    if not fs.exists(base):
-        return
-    names = {st.getPath().getName() for st in fs.listStatus(base)}
+    tell which trees belong together. The swaps are rename-based, so
+    only a POSIX store can carry an intent."""
+    try:
+        root = Path(_require_posix_store(store, "store recovery"))
+        names = os.listdir(root)
+    except (RuntimeError, FileNotFoundError):
+        return  # a remote store, or one not yet written
     legacy = sorted(n for n in names if n.endswith(".old"))
     if legacy:
         raise RuntimeError(f"{store}: leftover {legacy} from a previous crash — recover or remove it first")
-    staging = {".gate_retrain", ".requant", ".compact"}  # the offline jobs' staging trees
-    if SWAP_INTENT in names or names & staging:
-        root = Path(_require_posix_store(store, "store recovery"))
-        POSIX_BACKEND.recover_swap_set(root)
-        for n in staging:
-            shutil.rmtree(root / n, ignore_errors=True)
+    POSIX_BACKEND.recover_swap_set(root)
 
 
 def compact_corpus_store(
@@ -1919,14 +1911,13 @@ def compact_corpus_store(
     to) the unbucketed layout.
 
     Returns {"docs": n, "bands": m} (+ "kgrams" when present)."""
-    import os
-
     store = _require_posix_store(store, "compact_corpus_store")
-    _recover_store(spark, store)
+    _recover_store(store)
     docs_path, bands_path = f"{store}/docs", f"{store}/bands"
     kgrams_path = f"{store}/kgrams"
     has_kgrams = os.path.exists(kgrams_path)
-    tmp = f"{store}/.compact"
+    tmp = Path(store, ".compact")
+    shutil.rmtree(tmp, ignore_errors=True)  # no intent named it: never committed
     docs = spark.read.parquet(docs_path).select(id_col, text_col).localCheckpoint()
     bands = spark.read.parquet(bands_path).select("band", "bval", "_id").localCheckpoint()
     docs.write.parquet(f"{tmp}/docs/epoch=-1")
@@ -1961,6 +1952,7 @@ def compact_corpus_store(
         else:
             kgrams.write.parquet(f"{tmp}/kgrams/epoch=-1")
         out["kgrams"] = kgrams.count()
-    POSIX_BACKEND.swap_set(Path(store), [(t, f".compact/{t}") for t in out])
+    trees = ["docs", "bands"] + (["kgrams"] if has_kgrams else [])
+    POSIX_BACKEND.swap_set(Path(store), [(t, f"{tmp.name}/{t}") for t in trees])
     shutil.rmtree(tmp)
     return out

@@ -113,13 +113,24 @@ def test_swap_set_crash_matrix(tmp_path, monkeypatch, bootstrap):
 
     for i, kind in enumerate(effects):
         root, _ = run(f"crash_{i}", crash_at=i)
-        if i > 0:  # the intent is published: a recoverer that aborts leaves it
-            assert POSIX_BACKEND.recover_swap_set(root, abort=lambda: True) is False
-            assert (root / SWAP_INTENT).exists()
+        assert (root / SWAP_INTENT).exists() == (i > 0)  # the commit point
         for _ in range(2):  # idempotent
-            assert POSIX_BACKEND.recover_swap_set(root) is True
+            POSIX_BACKEND.recover_swap_set(root)
             assert _state(root) == (old if i == 0 else new), (i, kind)
         assert not (root / SWAP_INTENT).exists()
         left = {p.name for t in ("t1", "t2", "t3") if (root / t).exists() for p in (root / t).iterdir()}
         want = {"bucket=1", ".rewrite_bucket=1"} if i == 0 else {"bucket=1"}
         assert left <= want, (i, kind, left)
+
+
+def test_unreadable_swap_intent_stops_recovery(tmp_path):
+    """Only a missing intent means no set is pending: one that cannot be
+    read raises and leaves the staged dirs for a later recovery."""
+    _tree(tmp_path, "t1/.rewrite_bucket=1", "new1")
+    (tmp_path / SWAP_INTENT).write_text('{"files": [["t1/bucket=1", "t1/.rew')
+    with pytest.raises(ValueError):
+        POSIX_BACKEND.recover_swap_set(tmp_path)
+    assert (tmp_path / "t1" / ".rewrite_bucket=1").exists()
+    (tmp_path / SWAP_INTENT).unlink()
+    POSIX_BACKEND.recover_swap_set(tmp_path)  # nothing pending: a no-op
+    assert (tmp_path / "t1" / ".rewrite_bucket=1").exists()

@@ -13,10 +13,13 @@ from __future__ import annotations
 
 import pathlib
 import shutil
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from orestes_spark.commit_backend import PosixCommitBackend
 from orestes_spark.config import SpaceConfig
 from orestes_spark.engine import OrestesEngine
 from orestes_spark.streaming.ingest import _recover_store
@@ -129,6 +132,42 @@ def test_delete_series_crash_reads_as_erased(spark, erasure):
     assert _observe(spark, str(wh) + "_w", skip="host=z") == erasure["new"]
 
 
+def test_racing_readers_roll_the_intent_forward_once(spark, erasure, monkeypatch):
+    """Two reader threads find the crashed erasure's intent pending: the
+    roll-forward runs in one of them at a time, under the writer lock,
+    and the space ends as the completed erasure."""
+    wh = erasure["root"] / "race"
+    shutil.copytree(erasure["snaps"][2], wh / "default")
+    eng = OrestesEngine(spark, str(wh), spaces={"default": ROLLUP})
+    real, inside, overlap, errors = PosixCommitBackend.recover_swap_set, [], [], []
+
+    def slow(root):
+        inside.append(root)
+        overlap.append(len(inside))
+        time.sleep(0.5)  # hold the other reader inside the race window
+        try:
+            real(root)
+        finally:
+            inside.pop()
+
+    def reader(start):
+        start.wait()
+        try:
+            eng._recover("default", eng._points_path("default"))
+        except BaseException as e:
+            errors.append(e)
+
+    monkeypatch.setattr(PosixCommitBackend, "recover_swap_set", staticmethod(slow))
+    start = threading.Barrier(2)
+    threads = [threading.Thread(target=reader, args=(start,)) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == [] and overlap and max(overlap) == 1
+    assert _files(wh / "default") == erasure["after"]
+
+
 def _hosts_and_counts(eng):
     listed = sorted(r["tags"]["host"] for r in eng.get_stream_list(None, "default", 0, END).collect())
     counts = {}
@@ -203,7 +242,7 @@ def _ids(spark, path, col):
 
 def _recovers_to(spark, snaps, after) -> None:
     for snap in snaps:
-        _recover_store(spark, str(snap))
+        _recover_store(str(snap))
         assert _files(snap) == after, snap
 
 
