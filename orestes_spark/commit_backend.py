@@ -21,10 +21,14 @@ on three primitives this module owns:
    intent manifest lists the ``(live, staged)`` pairs, then live →
    ``.old_*``, staged → live, drop the backups, drop the intent
    (``swap_set`` / ``recover_swap_set``): every engine bucket rewrite,
-   erasure and retention drop, and every streaming-store job. The
-   engine rolls an intent forward under the writer lock (each
-   acquisition, and a read that finds one pending), before
-   ``engine._recover_swaps``; a store, when a job or processor opens it.
+   erasure and retention drop, every streaming-store job and the PQ
+   index retrain. The intent is the commit point, so recovery has one
+   rule: roll a pending intent forward, then discard every staging
+   dir, which no intent committed. The engine recovers only under the
+   writer lock, at each acquisition (a read that finds an intent
+   pending takes the lock to get there), and
+   ``engine._recover_swaps`` does the discard; a store recovers when a
+   job or processor opens it, and each job discards its own staging.
 
 ``PosixCommitBackend`` is the only backend; the engine imports the
 shared ``POSIX_BACKEND`` instance. ``engine._require_posix_warehouse``

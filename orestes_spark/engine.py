@@ -69,14 +69,6 @@ from orestes_spark.config import MS_IN_DAY, EngineConfig, SpaceConfig
 
 
 
-def _with_seq(pts: DataFrame) -> DataFrame:
-    """Pad a points frame written before the ``_seq`` delivery stamp
-    existed (pre-upsert warehouse: one delivery, stamp 0)."""
-    if "_seq" not in pts.columns:
-        pts = pts.withColumn("_seq", F.lit(0).cast("long"))
-    return pts
-
-
 def _last_write_wins(pts: DataFrame, *keys: str) -> DataFrame:
     """One row per ``keys``: the later delivery (greater ``_seq``) wins
     and equal stamps fall to the greater value — the reference's
@@ -85,8 +77,7 @@ def _last_write_wins(pts: DataFrame, *keys: str) -> DataFrame:
     (reference lib/orestes-settings.js:9-24). Output: ``keys``, value,
     tags and the winning ``_seq``."""
     return (
-        _with_seq(pts)
-        .groupBy(*keys)
+        pts.groupBy(*keys)
         .agg(
             F.max_by(F.struct("value", "tags"), F.struct("_seq", "value")).alias("_m"),
             F.max("_seq").alias("_seq"),
@@ -119,12 +110,7 @@ def _rollup_partials(pts: DataFrame, step: int, *keys: str) -> DataFrame:
 
 def _merge_rollup_partials(partials: DataFrame) -> DataFrame:
     """Fold rollup partials to one row per (series, slot): counts and
-    sums add, min/max fold. A table written before the sum_sq column
-    existed (pre-round-4 warehouses) is padded with NULL partials, so
-    stddev over a legacy slot reads as NULL (unknown) rather than
-    wrong; rebuild_rollup upgrades the table in place."""
-    if "sum_sq" not in partials.columns:
-        partials = partials.withColumn("sum_sq", F.lit(None).cast("decimal(38,12)"))
+    sums add, min/max fold."""
     return partials.groupBy("series_id", "slot_ms").agg(
         F.first("tags").alias("tags"),
         F.sum("n").alias("n"),
@@ -347,10 +333,10 @@ def _publish_compact_manifest(points_root: Path, part_name: str, tmp: Path) -> N
     _write_manifest(points_root / "_epochs" / f"epoch-{key}", files, "compact")
 
 
-# Hidden prefix a bucket rewrite stages under (_stage_bucket), then
-# the prefixes earlier versions staged under, which recovery still
-# accepts (_recover_swaps).
-_STAGED = (".rewrite_", ".delete_", ".rebuild_", ".compact_")
+# The hidden names a writer stages a table's files under until they
+# are committed: a bucket rewrite (_stage_bucket), a driver commit
+# (_publish_staged) and an epoch stage. _recover_swaps discards them.
+_STAGING = (".rewrite_bucket=", ".append-", ".staging_epoch=")
 
 
 def _stage_bucket(part: Path, df: DataFrame, partition_by: str | None = None) -> tuple[str, str]:
@@ -358,7 +344,7 @@ def _stage_bucket(part: Path, df: DataFrame, partition_by: str | None = None) ->
     staging name (Spark's ``_SUCCESS`` marks it complete), publish its
     compact manifest in an ``_epochs`` space, and return the
     ``(live, staged)`` swap_set pair, relative to the space dir."""
-    tmp = part.parent / f"{_STAGED[0]}{part.name}"
+    tmp = part.parent / f".rewrite_{part.name}"
     writer = df.write.mode("overwrite")
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
@@ -420,9 +406,10 @@ def _sweep_uncommitted_epoch_files(points_root: Path) -> None:
     they are crash debris — and maintenance rewrites (compact,
     delete_series) MUST NOT fold them into untagged output, which
     would both make an uncommitted epoch visible and duplicate it on
-    replay. Same decommissioned-stream caveat as the orphan staging
-    sweep: a stream that never restarts loses its uncommitted (never
-    acknowledged) final epoch."""
+    replay. Same decommissioned-stream caveat as the staging discard
+    at each writer-lock acquisition (_recover_swaps): a stream that
+    never restarts loses its uncommitted (never acknowledged) final
+    epoch."""
     if not points_root.exists():
         return
     committed = _committed_epochs(points_root)
@@ -540,8 +527,8 @@ def _pid_alive(pid: int) -> bool:
     """Liveness probe for the writer lock. EPERM means the pid EXISTS
     under another uid — a live foreign writer sharing the warehouse —
     so it must read as alive (stealing its lock would cause the exact
-    concurrent-mutation corruption the lock prevents, and readers
-    would run swap recovery against its in-flight staging dirs). Only
+    concurrent-mutation corruption the lock prevents, and the thief's
+    recovery would discard its in-flight staging dirs). Only
     ESRCH proves death; any other kill(0) failure fails SAFE as
     alive (manual lock removal beats silent corruption)."""
     import os
@@ -843,8 +830,9 @@ class OrestesEngine:
         body_raised = False
         try:
             # Crash recovery, once per acquisition, so every writer
-            # finds each bucket old or new before it touches one: the
-            # pending swap set first (its "staged + live" is committed).
+            # finds each bucket old or new before it touches one: roll
+            # the pending swap set forward, then every staging dir left
+            # is uncommitted.
             _BACKEND.recover_swap_set(path.parent)
             for root in self._tables(space).values():
                 self._recover_swaps(root)
@@ -945,22 +933,14 @@ class OrestesEngine:
         constant cost no matter how many micro-batch markers have
         accumulated (an unbounded listing would be a paged object-store
         LIST per read at scale)."""
-        import itertools
-        import json
-
         p = self._deliveries_path(space)
         if p.exists():
             return len(list(itertools.islice(p.iterdir(), 2)))
-        # One-time migration from the earlier single-JSON marker: its
-        # recorded count preserves the fast path for warehouses written
-        # by the previous format.
-        legacy = Path(self.config.warehouse) / space / "_deliveries.json"
-        if legacy.exists():
-            return int(json.loads(legacy.read_text()).get("appends", 0))
-        # Pre-marker warehouse with data: unknown history — assume
-        # merge is needed (safe, never wrong). "Has data" means live
-        # bucket partitions, not a leftover empty directory — a space
-        # whose buckets were all expired holds nothing to merge.
+        # No markers beside live buckets (a crash inside
+        # _reset_deliveries or _clear_deliveries): unknown history —
+        # assume merge is needed (safe, never wrong). "Has data" means
+        # live bucket partitions, not a leftover empty directory — a
+        # space whose buckets were all expired holds nothing to merge.
         return 2 if any(self._points_path(space).glob("bucket=*")) else 0
 
     def _mark_delivery(self, space: str) -> None:
@@ -974,20 +954,8 @@ class OrestesEngine:
         lands between its listing of the series bucket and its rename.
         Concurrent list writes in this engine are group-committed into
         one append (_group_commit), and any other writer fails loudly
-        on the writer lock.)
-        Migrates the earlier single-JSON marker on first write: the
-        old count seeds marker files (capped at 2 — only the ≤1 vs >1
-        distinction is ever read) and the JSON is removed."""
-        import json
-
+        on the writer lock.)"""
         p = self._deliveries_path(space)
-        legacy = Path(self.config.warehouse) / space / "_deliveries.json"
-        if not p.exists() and legacy.exists():
-            p.mkdir(parents=True, exist_ok=True)
-            n = int(json.loads(legacy.read_text()).get("appends", 0))
-            for i in range(min(n, 2)):
-                (p / f"migrated-{i}").touch()
-            legacy.unlink()
         p.mkdir(parents=True, exist_ok=True)
         (p / f"{self._last_seq}-{uuid.uuid4().hex}").touch()
 
@@ -999,9 +967,6 @@ class OrestesEngine:
         p = self._deliveries_path(space)
         if p.exists():
             shutil.rmtree(p)
-        legacy = Path(self.config.warehouse) / space / "_deliveries.json"
-        if legacy.exists():
-            legacy.unlink()
 
     def _reset_deliveries(self, space: str) -> None:
         """Post-full-compaction: collapse the marker set to one (the
@@ -1659,116 +1624,27 @@ class OrestesEngine:
 
     # ---------- raw readers ----------
 
-    def _writer_active(self, space: str) -> bool:
-        """True when a LIVE process holds this space's writer lock
-        (and it is not this thread). Readers use it to distinguish a
-        writer's in-flight tmp/.old dirs from crash debris."""
-        import json as _json
-        import threading
-
-        if self._held_locks.get(space) == threading.get_ident():
-            return False  # we are the writer; our own recovery may run
-        path = self._lock_path(space)
-        try:
-            holder = _json.loads(path.read_text())
-            pid = int(holder.get("pid", -1))
-        except FileNotFoundError:
-            return False  # no lock: no live writer
-        except (ValueError, OSError):
-            # Unreadable/mangled lock (foreign uid, foreign writer):
-            # locks THIS code writes are created atomically with their
-            # payload, so this is a foreign file — fail SAFE as alive
-            # so readers skip recovery instead of mutating what may be
-            # an in-flight writer's staging dirs.
-            return True
-        if pid <= 0:
-            return False
-        return _holder_alive(holder, path, self.config.writer_lease_ms)
-
     def _recover(self, space: str, root: Path) -> None:
-        """Reader-side crash recovery, skipped while a live writer holds
-        the space (its intent, staged and .old_ dirs are in-flight
-        state, not debris). A pending swap set rolls forward only under
-        the writer lock, whose acquisition recovers every table: two
-        lock-free roll-forwards could move each other's new live dir
-        aside. The per-table sweep re-checks for a writer before each
-        mutating action (abort); one that wins the lock between a
-        re-check and the action recovers every table on acquisition."""
-        if self._writer_active(space):
-            return
+        """Reader-side crash recovery: a reader never renames or deletes.
+        When a swap set is pending it enters the writer lock with an
+        empty body, whose acquisition recovers every table; a contender
+        holding the lock recovers instead. (``root``: any table of the
+        space.)"""
         if (root.parent / SWAP_INTENT).exists():
             with suppress(ConcurrentWriterError), self._writer_lock(space, "recover"):
-                pass  # a contender holds the lock: its acquisition recovers
-            return
-        self._recover_swaps(root, abort=lambda: self._writer_active(space))
+                pass
 
     @staticmethod
-    def _recover_swaps(root: Path, abort=None) -> None:
-        """Crash recovery of one table once no swap set is pending (see
-        _writer_lock and _recover, which roll the intent forward
-        first): settles a staged write that never reached its intent
-        and dirs earlier versions left. One directory listing per call;
-        idempotent. Per bucket, with "staged" any of the _STAGED
-        prefixes:
-
-        ========  =======  ====  ==========================================
-        staged    .old_    live  action
-        ========  =======  ====  ==========================================
-        any       yes      yes   drop the backup (the swap completed)
-        yes       yes      no    roll the staged dir forward (it was
-                                 complete: the first rename follows the
-                                 whole write)
-        no        yes      no    restore the backup
-        yes       no       yes   discard the staged dir (never committed)
-        yes       no       no    roll forward if it holds Spark's
-                                 ``_SUCCESS`` (a complete rewrite of an
-                                 absent bucket), else discard
-        ========  =======  ====  ==========================================
-
-        Writers run it under the lock right after acquiring it, readers
-        when no live writer holds the space (see _recover). Two
-        recoverers racing each other tolerate lost races: every action
-        is one rename/delete, so FileNotFoundError means the other
-        already did it. ``abort``: optional callable checked immediately
-        before each mutating action; True stops the sweep (reader-side
-        recovery passes a live-writer probe so a writer that acquires
-        the lock mid-sweep is not raced)."""
+    def _recover_swaps(root: Path) -> None:
+        """Discard every staging dir in the table ``root``: run under the
+        writer lock once no swap set is pending, none was committed."""
         try:
-            names = sorted(os.listdir(root))
+            names = os.listdir(root)
         except FileNotFoundError:
             return
-        staged = [(p, n) for n in names for p in _STAGED if n.startswith(p + "bucket=")]
         for n in names:
-            if not n.startswith((".old_bucket=", ".drop_bucket=")):
-                continue
-            if abort is not None and abort():
-                return
-            if n.startswith(".drop_"):
-                shutil.rmtree(root / n, ignore_errors=True)  # remove() committed
-                continue
-            old, live = root / n, root / n[len(".old_") :]
-            mine = [root / (p + live.name) for p in _STAGED if p + live.name in names]
-            try:
-                if live.exists():
-                    shutil.rmtree(old)
-                elif mine:
-                    mine[0].rename(live)
-                    shutil.rmtree(old)
-                else:
-                    old.rename(live)
-            except FileNotFoundError:
-                pass  # a concurrent recoverer won the race; state is valid
-        for p, n in staged:
-            if abort is not None and abort():
-                return
-            tmp, live = root / n, root / n[len(p) :]
-            try:
-                if not live.exists() and (tmp / "_SUCCESS").exists():
-                    tmp.rename(live)
-                else:
-                    shutil.rmtree(tmp, ignore_errors=True)
-            except FileNotFoundError:
-                pass
+            if n.startswith(_STAGING):
+                shutil.rmtree(root / n, ignore_errors=True)
 
     def _read_points(self, space: str) -> DataFrame | None:
         p = self._points_path(space)
@@ -1777,8 +1653,7 @@ class OrestesEngine:
         # bucket=* partitions left — treat as empty, not a schema error.
         if not p.exists() or not any(p.glob("bucket=*")):
             return None
-        df = self._visible_points(p)
-        return None if df is None else _with_seq(df)
+        return self._visible_points(p)
 
     def _visible_points(self, p: Path) -> DataFrame | None:
         """Epoch-consistent point listing (read committed at EPOCH
@@ -2577,14 +2452,7 @@ class OrestesEngine:
             # Decide ONCE, before the marker is reset below: collapse upserts
             # only when reads would merge them too.
             collapse_upserts = self._merge_needed(space)
-            # Orphaned staging dirs (a stream decommissioned after a crash
-            # never replays its uncommitted epoch; a driver commit that
-            # crashed before its renames) are invisible to readers but leak
-            # disk — compaction is the natural sweep point.
             proot = self._points_path(space)
-            for root in (proot, self._series_path(space)):
-                for stale in itertools.chain(root.glob(".staging_epoch=*"), root.glob(".append-*")):
-                    shutil.rmtree(stale)
             # Uncommitted epoch files must not be folded into untagged
             # compacted output (visibility + replay-duplicate hazard); they
             # are debris the epoch's replay fully re-delivers — sweep them.

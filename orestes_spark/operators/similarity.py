@@ -2264,9 +2264,7 @@ def pq_requantize_if(
     (``pq_index_recall``), not a row-count heuristic: when recall@k
     over the deterministic probe sample drops below ``recall_floor``,
     retrain codebooks + re-encode the corpus (``pq_index_write`` into
-    a temp tree, then swap with ``.old`` backups — a crash leaves the
-    complete old index, the complete new one, or a ``*.old`` tree to
-    rename back; never a codebook/code mismatch).
+    a temp tree, then swap it in whole; see below).
 
     Deterministic from (corpus, config) state: an auto-triggered
     retrain and a manual ``pq_index_write`` over the same corpus
@@ -2277,40 +2275,36 @@ def pq_requantize_if(
     Single-writer contract like the other offline jobs: run with
     searches paused or between epochs.
 
-    Swap discipline (review round-10): the WHOLE index directory
-    swaps as a unit — new trees are written to the sibling
-    ``<path>.retrain``, then ``path → <path>.old``, ``<path>.retrain
-    → path``, drop ``.old``. A crash at any point leaves the complete
-    old index, the complete new one, or a momentarily-ABSENT index
-    (readers fail loudly) plus an ``.old`` to rename back — never a
-    readable index whose codebooks and codes disagree, which a
-    per-tree swap could produce. The swap is os.rename-based, so the
-    path must be POSIX-local (same boundary and error as the
-    embedding store's offline jobs)."""
-    import os
+    Swap discipline: the WHOLE index directory swaps as a unit, so no
+    crash can leave a readable index whose codebooks and codes
+    disagree. New trees are written to the sibling ``<path>.retrain``
+    and swapped in by one ``commit_backend.swap_set`` over the parent
+    directory. On entry the job rolls a pending swap forward and
+    discards an uncommitted ``.retrain``: a restart after a crash ends
+    with the old index retrained again or the new index kept. Between
+    the swap's two renames the index is ABSENT (readers fail loudly)
+    until the job runs again. The swap is rename-based, so the path
+    must be POSIX-local (same boundary and error as the embedding
+    store's offline jobs)."""
     import shutil
+    from pathlib import Path
 
+    from orestes_spark.commit_backend import POSIX_BACKEND
     from orestes_spark.streaming.ingest import _require_posix_store
 
-    path = _require_posix_store(path, "pq_requantize_if")
+    path = Path(_require_posix_store(path, "pq_requantize_if"))
+    tmp = path.with_name(path.name + ".retrain")
+    POSIX_BACKEND.recover_swap_set(path.parent)
+    shutil.rmtree(tmp, ignore_errors=True)
     recall = pq_index_recall(
-        spark, path, corpus, id_col, vec_col, k, probe_mod, quantize
+        spark, str(path), corpus, id_col, vec_col, k, probe_mod, quantize
     )
     if recall >= recall_floor:
         return {"recall": recall}
-    tmp, old = f"{path}.retrain", f"{path}.old"
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            raise RuntimeError(
-                f"pq_requantize_if: leftover {leftover!r} from a previous"
-                " crash — finish or remove it by hand before retraining"
-            )
-    pq_index_write(corpus, tmp, id_col, vec_col, m, ks, seed)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    pq_index_write(corpus, str(tmp), id_col, vec_col, m, ks, seed)
+    POSIX_BACKEND.swap_set(path.parent, [(path.name, tmp.name)])
     after = pq_index_recall(
-        spark, path, corpus, id_col, vec_col, k, probe_mod, quantize
+        spark, str(path), corpus, id_col, vec_col, k, probe_mod, quantize
     )
     return {"recall_before": recall, "recall_after": after, "retrained": True}
 

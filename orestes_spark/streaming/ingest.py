@@ -1863,18 +1863,12 @@ def _require_posix_store(store: str, who: str) -> str:
 def _recover_store(store: str) -> None:
     """Crash recovery when a job or a batch processor opens a corpus or
     embedding store: roll a pending swap set forward (each job discards
-    its own uncommitted staging tree). A ``<tree>.old`` from the
-    earlier swap, which kept no intent, raises: only an operator can
-    tell which trees belong together. The swaps are rename-based, so
+    its own uncommitted staging tree). The swaps are rename-based, so
     only a POSIX store can carry an intent."""
     try:
         root = Path(_require_posix_store(store, "store recovery"))
-        names = os.listdir(root)
-    except (RuntimeError, FileNotFoundError):
-        return  # a remote store, or one not yet written
-    legacy = sorted(n for n in names if n.endswith(".old"))
-    if legacy:
-        raise RuntimeError(f"{store}: leftover {legacy} from a previous crash — recover or remove it first")
+    except RuntimeError:
+        return  # a remote store
     POSIX_BACKEND.recover_swap_set(root)
 
 

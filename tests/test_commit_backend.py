@@ -114,6 +114,11 @@ def test_swap_set_crash_matrix(tmp_path, monkeypatch, bootstrap):
     for i, kind in enumerate(effects):
         root, _ = run(f"crash_{i}", crash_at=i)
         assert (root / SWAP_INTENT).exists() == (i > 0)  # the commit point
+        # a backup exists only while the intent does: recovery with no
+        # intent pending never has a backup to restore
+        backups = [p for t in ("t1", "t2", "t3") if (root / t).exists()
+                   for p in (root / t).iterdir() if p.name.startswith((".old_", ".drop_"))]
+        assert not backups or (root / SWAP_INTENT).exists(), (i, kind, backups)
         for _ in range(2):  # idempotent
             POSIX_BACKEND.recover_swap_set(root)
             assert _state(root) == (old if i == 0 else new), (i, kind)

@@ -845,32 +845,6 @@ def test_two_writer_instances_arm_merge_gate(spark, tmp_path):
     assert sum(1 for _ in a._deliveries_path("default").iterdir()) == 6
 
 
-def test_legacy_json_marker_migrates(spark, tmp_path):
-    """A warehouse written by the earlier single-JSON marker format
-    keeps its recorded fast-path state: appends=1 must NOT flip the
-    merge gate on after upgrade, and the next write migrates the file
-    into marker files."""
-    import json
-
-    from orestes_spark.config import SpaceConfig
-    from orestes_spark.engine import OrestesEngine
-
-    eng = OrestesEngine(spark, str(tmp_path / "wh_mig"), spaces={"default": SpaceConfig(1)})
-    eng.write([{"time": START, "value": 1.0, "host": "a"}])
-    # rewrite the marker into the legacy single-JSON format
-    import shutil as _sh
-
-    _sh.rmtree(eng._deliveries_path("default"))
-    legacy = eng._deliveries_path("default").parent / "_deliveries.json"
-    legacy.write_text(json.dumps({"appends": 1}))
-    assert eng._delivery_count("default") == 1
-    assert not eng._merge_needed("default")  # fast path preserved
-    eng.write([{"time": START + 1000, "value": 2.0, "host": "a"}])
-    assert not legacy.exists()  # migrated away
-    assert eng._delivery_count("default") == 2
-    assert eng._merge_needed("default")
-
-
 def test_rollup_quantile_from_histogram_partials(spark, tmp_path):
     """Quantiles served from pre-aggregated histogram partials match a
     Python model of the fixed-bin interpolation — across multiple
@@ -950,11 +924,13 @@ def test_full_retention_sweep_disarms_merge_gate(engine):
     assert got == {"host=a": ({"host": "a"}, [(START + 2, 3.0)])}
 
 
-def test_delete_series_swap_is_crash_atomic(spark, tmp_path):
-    """Simulate a crash at the worst point of delete_series' two-phase
-    swap — after live→.old, before tmp→live — and assert the next read
-    rolls FORWARD (tmp was complete) without losing the bucket; also
-    the pure roll-back case (tmp incomplete, live intact)."""
+def test_delete_series_swap_is_crash_atomic(spark, tmp_path, monkeypatch):
+    """Simulate a crash at the worst point of delete_series' swap —
+    after live→.old, before staged→live, its intent pending — and
+    assert the next read rolls FORWARD without losing the bucket; also
+    the pure roll-back case (a staged dir with no intent, live intact):
+    the read serves the live bucket and the next writer discards it."""
+    import pathlib
     import shutil as _sh
 
     from orestes_spark.config import SpaceConfig
@@ -965,31 +941,42 @@ def test_delete_series_swap_is_crash_atomic(spark, tmp_path):
            for i, h in enumerate(["a", "b"] * 10)]
     assert eng.write(pts) == []
     proot = eng._points_path("default")
-    part = next(proot.glob("bucket=*"))
 
-    # Roll-forward crash: a completed rewrite staged at .delete_*, live
-    # renamed away to .old_* — exactly between the two renames.
-    tmp = proot / f".delete_{part.name}"
-    eng.spark.read.parquet(str(part)).where("value >= 0").write.parquet(str(tmp))
-    part.rename(proot / f".old_{part.name}")
+    # Roll-forward crash: exactly between the two renames of the points
+    # bucket.
+    real = pathlib.Path.rename
+
+    def rename(self, target):
+        if self.parent == proot and self.name.startswith(".rewrite_"):
+            raise RuntimeError("simulated crash")
+        return real(self, target)
+
+    monkeypatch.setattr(pathlib.Path, "rename", rename)
+    with pytest.raises(RuntimeError, match="simulated"):
+        eng.delete_series({"term": {"host": "a"}})
+    monkeypatch.undo()
+    assert list(proot.glob(".old_*")) and not list(proot.glob("bucket=*"))
+    kept = [p for p in pts if p["host"] == "b"]
     got = read_as_model(eng)  # read triggers recovery
-    assert got == model_series(pts)
-    assert not list(proot.glob(".old_*")) and not list(proot.glob(".delete_*"))
+    assert got == model_series(kept)
+    assert not list(proot.glob(".old_*")) and not list(proot.glob(".rewrite_*"))
 
-    # Roll-back crash: live intact, a (possibly partial) tmp left over —
-    # the tmp must be discarded, the live bucket served untouched.
+    # Roll-back crash: live intact, a (possibly partial) staged dir left
+    # over — the live bucket is served untouched, the write discards it.
     part = next(proot.glob("bucket=*"))
-    junk = proot / f".delete_{part.name}"
+    junk = proot / f".rewrite_{part.name}"
     junk.mkdir()
     (junk / "part-00000.parquet").write_bytes(b"not parquet")
-    got = read_as_model(eng)
-    assert got == model_series(pts)
-    assert not list(proot.glob(".delete_*"))
+    assert read_as_model(eng) == model_series(kept)
+    assert junk.exists()
+    late = {"time": START + 100, "value": 7.0, "host": "b"}
+    assert eng.write([late]) == []
+    assert not junk.exists()
 
     # And the real delete still works end-to-end after recoveries.
-    n = eng.delete_series({"term": {"host": "a"}})
+    n = eng.delete_series({"term": {"host": "b"}})
     assert n == 1
-    assert read_as_model(eng) == model_series([p for p in pts if p["host"] == "b"])
+    assert read_as_model(eng) == {}
     _sh.rmtree(tmp_path / "wh_crash", ignore_errors=True)
 
 
@@ -1433,68 +1420,45 @@ def test_config_preserves_reference_client_knobs(tmp_path):
     assert ec.space("weekly").read_request_concurrency == 200  # default
 
 
-def test_recover_swaps_full_crash_matrix(spark, tmp_path):
-    """Exhaustive state matrix for the two-phase swap recovery: every
-    reachable crash state converges to exactly one live bucket with
-    the right contents, and no hidden dirs survive."""
+def test_recover_swaps_full_crash_matrix(tmp_path):
+    """Every state a crashed one-bucket rewrite can leave converges, at
+    the next writer-lock acquisition, to exactly one live bucket with
+    the right contents and no hidden dirs: with no intent pending the
+    staged dir was never committed and is discarded; with one pending
+    the swap rolls forward."""
+    import json
+
+    from orestes_spark.commit_backend import SWAP_INTENT
     from orestes_spark.engine import OrestesEngine
 
-    def mk(root, name, tag):
-        d = root / name
-        spark.createDataFrame([(tag,)], "v STRING").write.mode("overwrite").parquet(str(d))
-
-    def val(root, name):
-        return spark.read.parquet(str(root / name)).first()["v"]
-
-    def fresh(state):
-        root = tmp_path / f"swap_{state}"
-        root.mkdir()
-        return root
-
-    # 1. normal: live only → untouched
-    r = fresh("live")
-    mk(r, "bucket=1", "old-data")
-    OrestesEngine._recover_swaps(r)
-    assert val(r, "bucket=1") == "old-data"
-
-    # 2. live + tmp (crash before first rename): tmp discarded
-    r = fresh("live_tmp")
-    mk(r, "bucket=1", "old-data"); mk(r, ".delete_bucket=1", "half-written")
-    OrestesEngine._recover_swaps(r)
-    assert val(r, "bucket=1") == "old-data"
-    assert sorted(p.name for p in r.iterdir()) == ["bucket=1"]
-
-    # 3. old + tmp (crash between renames): roll FORWARD — tmp commits
-    r = fresh("old_tmp")
-    mk(r, ".old_bucket=1", "old-data"); mk(r, ".delete_bucket=1", "rewritten")
-    OrestesEngine._recover_swaps(r)
-    assert val(r, "bucket=1") == "rewritten"
-    assert sorted(p.name for p in r.iterdir()) == ["bucket=1"]
-
-    # 4. old + live (crash before dropping the backup): keep live
-    r = fresh("old_live")
-    mk(r, ".old_bucket=1", "old-data"); mk(r, "bucket=1", "rewritten")
-    OrestesEngine._recover_swaps(r)
-    assert val(r, "bucket=1") == "rewritten"
-    assert sorted(p.name for p in r.iterdir()) == ["bucket=1"]
-
-    # 5. old only (tmp lost): roll BACK — restore the original
-    r = fresh("old_only")
-    mk(r, ".old_bucket=1", "old-data")
-    OrestesEngine._recover_swaps(r)
-    assert val(r, "bucket=1") == "old-data"
-    assert sorted(p.name for p in r.iterdir()) == ["bucket=1"]
-
-    # idempotent: a second recovery pass is a no-op everywhere
-    for state in ("live", "live_tmp", "old_tmp", "old_live", "old_only"):
-        root = tmp_path / f"swap_{state}"
-        OrestesEngine._recover_swaps(root)
-        assert sorted(p.name for p in root.iterdir()) == ["bucket=1"]
+    pair = ["points/bucket=1", "points/.rewrite_bucket=1"]
+    states = {  # dirs present, intent pending, contents of the result
+        "live": ({"bucket=1": "old"}, False, "old"),
+        "live_staged": ({"bucket=1": "old", ".rewrite_bucket=1": "new"}, False, "old"),
+        "intent_live_staged": ({"bucket=1": "old", ".rewrite_bucket=1": "new"}, True, "new"),
+        "intent_old_staged": ({".old_bucket=1": "old", ".rewrite_bucket=1": "new"}, True, "new"),
+        "intent_old_live": ({".old_bucket=1": "old", "bucket=1": "new"}, True, "new"),
+    }
+    for state, (dirs, intent, want) in states.items():
+        eng = OrestesEngine(None, str(tmp_path / state))
+        root = eng._points_path("default")
+        for name, tag in dirs.items():
+            (root / name).mkdir(parents=True)
+            (root / name / "part.parquet").write_text(tag)
+        if intent:
+            (root.parent / SWAP_INTENT).write_text(json.dumps({"files": [pair], "kind": "swap"}))
+        for _ in range(2):  # idempotent
+            with eng._writer_lock("default", "test"):
+                pass
+            assert sorted(p.name for p in root.iterdir()) == ["bucket=1"], state
+            assert (root / "bucket=1" / "part.parquet").read_text() == want, state
+            assert not (root.parent / SWAP_INTENT).exists(), state
 
 
 def test_compact_sweeps_orphan_staging(engine, spark):
     """An uncommitted epoch staging dir from a decommissioned stream is
-    invisible to readers but leaks disk — compact() removes it."""
+    invisible to readers but leaks disk — a reader leaves it, and the
+    next writer of the space (any op, here a compact()) removes it."""
     engine.write([{"time": START, "value": 1.0, "host": "a"},
                   {"time": START + 1, "value": 2.0, "host": "a"}])
     pp = engine._points_path("default")
@@ -1502,6 +1466,7 @@ def test_compact_sweeps_orphan_staging(engine, spark):
     orphan.mkdir()
     (orphan / "junk").write_text("x")
     assert engine.read(None, "default", 0, 2**50).count() == 1  # invisible
+    assert orphan.exists()
     engine.compact("default")
     assert not orphan.exists()
 
@@ -1535,10 +1500,10 @@ def test_driver_and_executor_time_parsers_agree(engine, spark):
 
 
 def test_reader_recovery_defers_to_live_writer(spark, tmp_path):
-    """A reader must NOT treat a live delete_series writer's staged
-    .delete_/.old_ dirs as crash debris (destroying them would corrupt
-    the erasure in progress); once the writer is gone, the same reader
-    call recovers them."""
+    """A reader must NOT treat a writer's staged dir as crash debris
+    (destroying it would corrupt the rewrite in progress), whether or
+    not a live writer holds the lock: only the next writer, under the
+    lock, discards it."""
     import json
     import os
 
@@ -1549,7 +1514,7 @@ def test_reader_recovery_defers_to_live_writer(spark, tmp_path):
     eng.write([{"time": START, "value": 1.0, "host": "a"}])
     pp = eng._points_path("default")
     part = next(pp.glob("bucket=*"))
-    staged = pp / f".delete_{part.name}"
+    staged = pp / f".rewrite_{part.name}"
     staged.mkdir()
     (staged / "part-0.parquet").write_bytes(b"in-flight")
 
@@ -1560,28 +1525,83 @@ def test_reader_recovery_defers_to_live_writer(spark, tmp_path):
     assert eng.read(None, "default", 0, 2**50).count() == 1
     assert staged.exists()
 
-    # writer gone: the very next read sweeps the uncommitted staging
+    # writer gone: a reader still leaves it, the next writer sweeps it
     eng._lock_path("default").unlink()
     assert eng.read(None, "default", 0, 2**50).count() == 1
+    assert staged.exists()
+    assert eng.write([{"time": START + 1, "value": 2.0, "host": "a"}]) == []
     assert not staged.exists()
+    assert eng.read(None, "default", 0, 2**50).count() == 1
 
 
-def test_remove_recovers_parked_bucket_before_sweep_and_disarm(spark, tmp_path):
-    """A bucket parked at .old_bucket=N by a crashed erasure must be
-    restored BEFORE remove() decides the space is empty: the retention
-    decision covers it, and the merge gate cannot be disarmed while
-    recoverable duplicates exist."""
+def test_readers_never_rename_or_delete(spark, tmp_path, monkeypatch):
+    """With no swap intent pending, a staged dir of each kind the engine
+    writes (a bucket rewrite, a driver commit, an epoch stage) is left
+    alone by /read, /series and read_rollup — they call no rename and
+    no rmtree — and the next write discards all three."""
+    import pathlib
+    import shutil
+
+    from orestes_spark.config import SpaceConfig
+    from orestes_spark.engine import OrestesEngine
+
+    hour = 3_600_000
+    eng = OrestesEngine(
+        spark, str(tmp_path / "wh_ro"), spaces={"default": SpaceConfig(1, rollup_step_ms=hour)}
+    )
+    assert eng.write([{"time": START, "value": 1.0, "host": "a"}]) == []
+    pp, sp = eng._points_path("default"), eng._series_path("default")
+    part = next(pp.glob("bucket=*")).name
+    orphans = [pp / f".rewrite_{part}", sp / ".append-0123abcd", pp / ".staging_epoch=7"]
+    for o in orphans:
+        (o / part).mkdir(parents=True)
+        (o / part / "part-0.parquet").write_bytes(b"not parquet")
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"a reader mutated the warehouse: {args}")
+
+    lo = START // hour * hour
+    with monkeypatch.context() as m:
+        m.setattr(pathlib.Path, "rename", refuse)
+        m.setattr(shutil, "rmtree", refuse)
+        assert eng.read(None, "default", 0, 2**50).count() == 1
+        assert eng.get_stream_list(None, "default", 0, 2**50).count() == 1
+        assert eng.read_rollup(None, "default", lo, lo + hour).count() == 1
+    assert all(o.exists() for o in orphans)
+    assert eng.write([{"time": START + 1, "value": 2.0, "host": "a"}]) == []
+    assert not any(o.exists() for o in orphans)
+
+
+def test_remove_recovers_parked_bucket_before_sweep_and_disarm(spark, tmp_path, monkeypatch):
+    """A bucket parked at .old_bucket=N by a crashed erasure (its swap
+    intent pending) must be rolled forward BEFORE remove() decides the
+    space is empty: the retention decision covers it, and the merge
+    gate cannot be disarmed while recoverable duplicates exist."""
+    import pathlib
+
+    from orestes_spark.commit_backend import SWAP_INTENT
     from orestes_spark.config import SpaceConfig
     from orestes_spark.engine import OrestesEngine
 
     eng = OrestesEngine(spark, str(tmp_path / "wh_park"), spaces={"default": SpaceConfig(1)})
-    eng.write([{"time": START, "value": 1.0, "host": "a"}])
+    eng.write([{"time": START, "value": 1.0, "host": "a"}, {"time": START, "value": 2.0, "host": "b"}])
     eng.write([{"time": START, "value": 5.0, "host": "a"}])  # overwrite, gate armed
     pp = eng._points_path("default")
-    part = next(pp.glob("bucket=*"))
-    part.rename(pp / f".old_{part.name}")  # crashed erasure parked it
+    real = pathlib.Path.rename
 
-    # keep_days large: nothing should be swept, bucket restored, gate kept
+    def rename(self, target):
+        if self.parent == pp and self.name.startswith(".rewrite_"):
+            raise RuntimeError("simulated crash")
+        return real(self, target)
+
+    monkeypatch.setattr(pathlib.Path, "rename", rename)
+    with pytest.raises(RuntimeError, match="simulated"):
+        eng.delete_series({"term": {"host": "b"}})
+    monkeypatch.undo()
+    assert not list(pp.glob("bucket=*")) and list(pp.glob(".old_*"))  # parked
+    assert (pp.parent / SWAP_INTENT).exists()
+
+    # keep_days large: nothing should be swept, erasure finished, gate kept
     eng.remove("default", keep_days=10**6)
     assert list(pp.glob("bucket=*")) and not list(pp.glob(".old_*"))
     assert eng._merge_needed("default")
@@ -1624,8 +1644,7 @@ def test_compact_failure_before_reset_keeps_gate_armed(spark, tmp_path, monkeypa
 def test_writer_liveness_eperm_means_alive(spark, tmp_path, monkeypatch):
     """EPERM from kill(pid, 0) means the pid EXISTS (under another
     uid): the holder must read as ALIVE — a contender must not steal
-    its lock, and readers must not run swap recovery against its
-    in-flight staging. Only ESRCH proves death."""
+    its lock. Only ESRCH proves death."""
     import json
     import os
 
@@ -1648,7 +1667,6 @@ def test_writer_liveness_eperm_means_alive(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "kill", eperm_kill)
     with pytest.raises(ConcurrentWriterError, match="live writer"):
         eng.write([{"time": START + 1, "value": 2.0, "host": "a"}])
-    assert eng._writer_active("default")  # readers must skip recovery
 
     def esrch_kill(pid, sig):
         if pid == foreign and sig == 0:
@@ -1656,44 +1674,49 @@ def test_writer_liveness_eperm_means_alive(spark, tmp_path, monkeypatch):
         return real_kill(pid, sig)
 
     monkeypatch.setattr(os, "kill", esrch_kill)
-    assert not eng._writer_active("default")
     assert eng.write([{"time": START + 1, "value": 2.0, "host": "a"}]) == []
     assert not lock.exists()  # stolen and released
 
 
-def test_writer_active_unreadable_lock_fails_safe(spark, tmp_path):
+def test_writer_active_unreadable_lock_fails_safe(spark, tmp_path, monkeypatch):
     """A lock file readers cannot parse is a FOREIGN writer's (locks
-    this code writes are atomic with their payload): _writer_active
-    fails safe as alive so recovery is skipped, not unleashed."""
+    this code writes are atomic with their payload): with a crashed
+    erasure's intent pending, a reader fails safe — it cannot take the
+    lock, so it leaves the tree untouched for the holder to recover."""
+    import pathlib
+
+    from orestes_spark.commit_backend import SWAP_INTENT
+    from orestes_spark.config import SpaceConfig
     from orestes_spark.engine import OrestesEngine
 
-    eng = OrestesEngine(spark, str(tmp_path / "wh_mangled"))
+    eng = OrestesEngine(spark, str(tmp_path / "wh_mangled"), spaces={"default": SpaceConfig(1)})
+    eng.write([{"time": START, "value": 1.0, "host": "a"}, {"time": START, "value": 2.0, "host": "b"}])
+    pp = eng._points_path("default")
+    real = pathlib.Path.rename
+
+    def rename(self, target):
+        if self.parent == pp and self.name.startswith(".rewrite_"):
+            raise RuntimeError("simulated crash")
+        return real(self, target)
+
+    monkeypatch.setattr(pathlib.Path, "rename", rename)
+    with pytest.raises(RuntimeError, match="simulated"):
+        eng.delete_series({"term": {"host": "b"}})
+    monkeypatch.undo()
+    space = pp.parent
     lock = eng._lock_path("default")
-    lock.parent.mkdir(parents=True, exist_ok=True)
     lock.write_text("not json {{{")
-    assert eng._writer_active("default")
-    lock.unlink()
-    assert not eng._writer_active("default")
 
+    def tree():
+        return sorted(p.relative_to(space).as_posix() for p in space.rglob("*"))
 
-def test_recover_swaps_abort_midsweep(tmp_path):
-    """Reader-side recovery re-checks for a live writer before EVERY
-    mutating action: with abort() True the staged dirs are left
-    untouched (they may be a mid-acquisition writer's in-flight
-    state); with abort() False the same state recovers normally."""
-    from orestes_spark.engine import OrestesEngine
-
-    r = tmp_path / "points"
-    (r / ".old_bucket=1").mkdir(parents=True)
-    (r / ".delete_bucket=2").mkdir()
-    OrestesEngine._recover_swaps(r, abort=lambda: True)
-    assert (r / ".old_bucket=1").exists()
-    assert (r / ".delete_bucket=2").exists()
-
-    OrestesEngine._recover_swaps(r, abort=lambda: False)
-    assert not (r / ".old_bucket=1").exists()
-    assert (r / "bucket=1").exists()  # rolled back to live
-    assert not (r / ".delete_bucket=2").exists()  # uncommitted: discarded
+    before = tree()
+    assert (space / SWAP_INTENT).exists()
+    eng.read(None, "default", 0, 2**50).count()
+    assert tree() == before
+    lock.unlink()  # the foreign holder is gone: the next read recovers
+    assert read_as_model(eng) == {"host=a": ({"host": "a"}, [(START, 1.0)])}
+    assert not (space / SWAP_INTENT).exists()
 
 
 def test_remove_keep_rollup_keeps_gate_armed(spark, tmp_path):
@@ -1904,11 +1927,9 @@ def test_writer_lock_foreign_host_lease(tmp_path):
     with pytest.raises(ConcurrentWriterError, match="live writer"):
         with eng._writer_lock("default", "contend"):
             pass
-    assert eng._writer_active("default")  # readers skip recovery too
 
     stale = time.time() - 120  # heartbeat older than the lease
     os.utime(lock, (stale, stale))
-    assert not eng._writer_active("default")
     with eng._writer_lock("default", "contend"):  # expired: stolen
         pass
     assert not lock.exists()
@@ -2024,7 +2045,6 @@ def test_foreign_holder_lease_uses_holders_lease(tmp_path):
     with pytest.raises(ConcurrentWriterError, match="live writer"):
         with eng._writer_lock("default", "contend"):
             pass
-    assert eng._writer_active("default")
 
 
 def test_engine_accepts_engine_config(spark, tmp_path):

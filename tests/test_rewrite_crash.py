@@ -1,20 +1,26 @@
 """Crash windows of the engine's one bucket rewrite (_rewrite_bucket).
 
-A crash is simulated by making one filesystem step raise: the staged
-Spark write, the live→.old_ rename, the staged→live rename, or the drop
-of the .old_ backup. After the crash a fresh engine on the same
-warehouse ("restart") must serve every table as its old rows or its
-new rows — both on a plain read and on a read after one more write."""
+Each rewrite runs once and the space is copied aside just before each
+of its swap steps: the intent publish (the staged dir written, no
+intent yet), the live→.old_ rename, the staged→live rename and the
+drop of the .old_ backup. Each copy is the state a crash at that step
+leaves (without the writer lock, which a dead process leaves stale). A
+fresh engine on a copy ("restart") must serve every table as its old
+rows or its new rows — both on a plain read and on a read after one
+more write."""
 
 from __future__ import annotations
 
+import json
+import os
 import pathlib
 import shutil
+from concurrent.futures import ThreadPoolExecutor, wait
 
 import pytest
-from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from orestes_spark.commit_backend import SWAP_INTENT
 from orestes_spark.config import SpaceConfig
 from orestes_spark.engine import OrestesEngine
 
@@ -29,39 +35,53 @@ class SimulatedCrash(RuntimeError):
     pass
 
 
-def _crash_at(monkeypatch, root: pathlib.Path, step: str) -> None:
-    """Make ``step`` of a bucket rewrite under ``root`` raise."""
-    if step == "staged_write":
-        real = DataFrameWriter.parquet
+def _step_snapshots(space: pathlib.Path, out: pathlib.Path, run) -> dict:
+    """Run ``run()`` and copy ``space`` to ``out/<table>-<step>/<space
+    name>`` just before each swap step of each bucket rewrite in it."""
+    real = {"replace": os.replace, "rename": pathlib.Path.rename, "rmtree": shutil.rmtree}
+    snaps: dict[tuple[str, str], pathlib.Path] = {}
 
-        def parquet(self, path, *args, **kwargs):
-            real(self, path, *args, **kwargs)
-            p = pathlib.Path(path)
-            if p.parent == root and p.name.startswith(".rewrite_"):
-                (p / "_SUCCESS").unlink()  # the job never committed
-                raise SimulatedCrash(step)
+    def snap(table, step):
+        assert (table, step) not in snaps, (table, step)  # one bucket per table
+        snaps[table, step] = out / f"{table}-{step}" / space.name
+        shutil.copytree(space, snaps[table, step], ignore=shutil.ignore_patterns("_writer.lock"))
 
-        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    elif step == "drop_backup":
-        real = shutil.rmtree
+    def replace(src, dst, *args, **kwargs):
+        if pathlib.Path(dst) == space / SWAP_INTENT:
+            (live, _staged), = json.loads(pathlib.Path(src).read_text())["files"]
+            snap(live.split("/")[0], "staged_write")
+        return real["replace"](src, dst, *args, **kwargs)
 
-        def rmtree(path, *args, **kwargs):
-            p = pathlib.Path(path)
-            if p.parent == root and p.name.startswith(".old_"):
-                raise SimulatedCrash(step)
-            return real(path, *args, **kwargs)
+    def rename(self, target):
+        if self.parent.parent == space:
+            snap(self.parent.name, "first_rename" if self.name.startswith("bucket=") else "second_rename")
+        return real["rename"](self, target)
 
-        monkeypatch.setattr(shutil, "rmtree", rmtree)
-    else:
-        real = pathlib.Path.rename
-        src = "bucket=" if step == "first_rename" else ".rewrite_"
+    def rmtree(path, *args, **kwargs):
+        p = pathlib.Path(path)
+        if p.parent.parent == space and p.name.startswith(".old_"):
+            snap(p.parent.name, "drop_backup")
+        return real["rmtree"](path, *args, **kwargs)
 
-        def rename(self, target):
-            if self.parent == root and self.name.startswith(src):
-                raise SimulatedCrash(step)
-            return real(self, target)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(os, "replace", replace)
+        m.setattr(pathlib.Path, "rename", rename)
+        m.setattr(shutil, "rmtree", rmtree)
+        run()
+    return snaps
 
-        monkeypatch.setattr(pathlib.Path, "rename", rename)
+
+def _crash_between_renames(monkeypatch, root: pathlib.Path) -> None:
+    """Make a bucket rewrite under ``root`` raise at its staged→live
+    rename."""
+    real = pathlib.Path.rename
+
+    def rename(self, target):
+        if self.parent == root and self.name.startswith(".rewrite_"):
+            raise SimulatedCrash("second_rename")
+        return real(self, target)
+
+    monkeypatch.setattr(pathlib.Path, "rename", rename)
 
 
 def _points(n, start, host):
@@ -93,13 +113,27 @@ def _observe(spark, wh: str, skip: str | None = None) -> dict:
     return out
 
 
+def _restart_and_read(spark, snap: pathlib.Path, wh: str) -> tuple:
+    """Restart on one copy of ``snap`` and read every table; restart on
+    another, write one point of a new series z, and read again."""
+    shutil.copytree(snap, wh)
+    shutil.copytree(snap, wh + "_w")
+    got = _observe(spark, wh)
+    late = OrestesEngine(spark, wh + "_w", spaces={"default": ROLLUP})
+    assert late.write([{"time": START + 500, "value": 5.0, "host": "z"}]) == []
+    z = late.read({"term": {"host": "z"}}, "default", 0, START + 10**9, grouped=False).collect()
+    return got, _observe(spark, wh + "_w", skip="host=z"), [(r["time_ms"], r["value"]) for r in z]
+
+
 @pytest.fixture(scope="module")
 def base(spark, tmp_path_factory):
     """Three deliveries into one bucket of a rollup+histogram space —
     a new series each time and one overwritten point, so every table
     holds several files and the rollup over-counts until rebuilt —
-    plus what a completed compact and a completed rebuild_rollup make
-    of it."""
+    then one run of compact and one of rebuild_rollup, each from a copy
+    of it, snapshotted at every swap step, and what each completed run
+    makes of it. Every snapshot is restarted and read (_restart_and_read)
+    on a few threads at once; each test case checks one."""
     root = tmp_path_factory.mktemp("rewrite_crash")
     wh = str(root / "base")
     eng = OrestesEngine(spark, wh, spaces={"default": ROLLUP})
@@ -111,17 +145,26 @@ def base(spark, tmp_path_factory):
         "compact": lambda e: e.compact("default", buckets=[bucket]),
         "rebuild_rollup": lambda e: e.rebuild_rollup("default"),
     }
-    states = {"old": _observe(spark, wh)}
+    states, snaps = {"old": _observe(spark, wh)}, {}
     for op, run in ops.items():
-        ref = str(root / f"ref_{op}")
+        ref = root / f"ref_{op}"
         shutil.copytree(wh, ref)
-        run(OrestesEngine(spark, ref, spaces={"default": ROLLUP}))
-        states[op] = _observe(spark, ref)
+        e = OrestesEngine(spark, str(ref), spaces={"default": ROLLUP})
+        got = _step_snapshots(ref / "default", root / f"snap_{op}", lambda: run(e))
+        snaps.update({(op, t, step): p.parent for (t, step), p in got.items()})
+        states[op] = _observe(spark, str(ref))
+    assert sorted(snaps) == sorted((o, t, step) for o, t in CASES for step in STEPS)
     # the rewrites change the rows (series rows only move between files)
     for table in ("points", "rollup", "rollup_hist"):
         assert states["compact"][table] != states["old"][table]
     assert states["rebuild_rollup"]["read_rollup"] != states["old"]["read_rollup"]
-    return {"root": root, "wh": wh, "ops": ops, "states": states}
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        seen = {
+            key: pool.submit(_restart_and_read, spark, snap, str(root / "_".join(key)))
+            for key, snap in snaps.items()
+        }
+        wait(seen.values())
+    return {"seen": seen, "states": states}
 
 
 CASES = [("compact", t) for t in ("points", "series", "rollup", "rollup_hist")] + [
@@ -131,29 +174,15 @@ CASES = [("compact", t) for t in ("points", "series", "rollup", "rollup_hist")] 
 
 @pytest.mark.parametrize("step", STEPS)
 @pytest.mark.parametrize("op,table", CASES, ids=[f"{o}-{t}" for o, t in CASES])
-def test_rewrite_crash_reads_old_or_new(spark, base, monkeypatch, op, table, step):
-    wh = str(base["root"] / f"{op}_{table}_{step}")
-    shutil.copytree(base["wh"], wh)
-    eng = OrestesEngine(spark, wh, spaces={"default": ROLLUP})
-    _crash_at(monkeypatch, eng._tables("default")[table], step)
-    with pytest.raises(SimulatedCrash):
-        base["ops"][op](eng)
-    monkeypatch.undo()
-    shutil.copytree(wh, wh + "_w")
-
+def test_rewrite_crash_reads_old_or_new(base, op, table, step):
+    got, got_w, z = base["seen"][op, table, step].result()
     old, new = base["states"]["old"], base["states"][op]
-    got = _observe(spark, wh)
     for key in got:
         assert got[key] in (old[key], new[key]), key
-
     # restart, write, then read: the write lands beside old or new rows
-    late = OrestesEngine(spark, wh + "_w", spaces={"default": ROLLUP})
-    assert late.write([{"time": START + 500, "value": 5.0, "host": "z"}]) == []
-    got = _observe(spark, wh + "_w", skip="host=z")
-    for key in got:
-        assert got[key] in (old[key], new[key]), key
-    z = late.read({"term": {"host": "z"}}, "default", 0, START + 10**9, grouped=False).collect()
-    assert [(r["time_ms"], r["value"]) for r in z] == [(START + 500, 5.0)]
+    for key in got_w:
+        assert got_w[key] in (old[key], new[key]), key
+    assert z == [(START + 500, 5.0)]
 
 
 def _model(eng):
@@ -169,7 +198,7 @@ def test_crashed_compact_keeps_every_point(spark, tmp_path, monkeypatch):
     eng = OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)})
     for i in range(3):
         assert eng.write(_points(10, START + 10 * i, "a")) == []
-    _crash_at(monkeypatch, eng._points_path("default"), "second_rename")
+    _crash_between_renames(monkeypatch, eng._points_path("default"))
     with pytest.raises(SimulatedCrash):
         eng.compact("default")
     monkeypatch.undo()
@@ -189,7 +218,7 @@ def test_write_after_crashed_erasure_keeps_survivors(spark, tmp_path, monkeypatc
     wh = str(tmp_path / "wh")
     eng = OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)})
     assert eng.write(_points(10, START, "a") + _points(10, START, "b")) == []
-    _crash_at(monkeypatch, eng._points_path("default"), "second_rename")
+    _crash_between_renames(monkeypatch, eng._points_path("default"))
     with pytest.raises(SimulatedCrash):
         eng.delete_series({"term": {"host": "b"}})
     monkeypatch.undo()
@@ -198,25 +227,6 @@ def test_write_after_crashed_erasure_keeps_survivors(spark, tmp_path, monkeypatc
     assert eng.write([{"time": START + 100, "value": 7.0, "host": "c"}]) == []
     want = [("host=a", START + i, 1.0 + i) for i in range(10)] + [("host=c", START + 100, 7.0)]
     assert _model(eng) == want
-
-
-def test_legacy_compact_staging_rolls_forward(spark, tmp_path):
-    """Earlier versions of compact() deleted the live bucket before
-    renaming `.compact_bucket=N` in: a complete one (Spark's _SUCCESS)
-    with no live bucket is the only copy of the data and must come
-    back on the next read."""
-    wh = str(tmp_path / "wh")
-    eng = OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)})
-    assert eng.write(_points(10, START, "a")) == []
-    want = _model(eng)
-    part = next(eng._points_path("default").glob("bucket=*"))
-    staged = part.parent / f".compact_{part.name}"
-    spark.read.parquet(str(part)).write.parquet(str(staged))
-    shutil.rmtree(part)
-
-    eng = OrestesEngine(spark, wh, spaces={"default": SpaceConfig(1)})
-    assert _model(eng) == want
-    assert not staged.exists()
 
 
 def test_crashed_retention_drop_reads_as_dropped(spark, tmp_path, monkeypatch):

@@ -968,18 +968,8 @@ def test_pq_requantize_if_recall_floor_trigger(spark, tmp_path):
     rb = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in pq_index_topk(spark, manual, q, k=3).collect()}
     assert ra == rb
 
-    # leftover guard (whole-index sibling trees, review round-10: the
-    # swap moves the WHOLE directory so a crash can never leave
-    # mismatched codebooks/codes) and the POSIX-path boundary
-    import os
-    import pytest
-
-    os.makedirs(f"{path}.old")
-    with pytest.raises(RuntimeError, match="leftover"):
-        pq_requantize_if(
-            spark, path, drifted, recall_floor=1.1, probe_mod=7, m=4, ks=8
-        )
-    os.rmdir(f"{path}.old")
+    # the POSIX-path boundary (its crash windows are in
+    # test_swap_set_crash.py)
     with pytest.raises(RuntimeError, match="POSIX"):
         pq_requantize_if(
             spark, "s3a://bucket/pq", drifted, recall_floor=1.1, probe_mod=7

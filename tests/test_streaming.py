@@ -1159,15 +1159,6 @@ def test_requantize_embedding_store_swaps_cells_and_keeps_dedup(spark, tmp_path)
         for s in (store, clean)
     ]
     assert ids[0] == ids[1]
-    # A `<tree>.old` from the earlier intent-less swap still raises, in
-    # the job and in the gate.
-    (tmp_path / "emb_rq" / "cents.old").mkdir()
-    with pytest.raises(RuntimeError, match="leftover"):
-        requantize_embedding_store(spark, store, k=4)
-    with pytest.raises(RuntimeError, match="leftover"):
-        make_embedding_batch_processor(store, threshold=0.9)(
-            spark.createDataFrame([(102, 0, [0.0, 0.0, 7.0, 7.0])], ddl), 3
-        )
 
 
 def test_embedding_ingest_unlabeled_bootstrap_trains_quantizer(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Crash windows of the multi-path swap sets (commit_backend.swap_set):
-engine erasure and retention across tables, and the streaming stores'
-offline jobs (gate retrain, requantize, corpus compaction).
+engine erasure and retention across tables, the streaming stores'
+offline jobs (gate retrain, requantize, corpus compaction) and the PQ
+index retrain.
 
 A crash at rename k is the state on disk just before that rename:
 ``_snapshots`` runs the operation once and copies the tree aside before
@@ -19,7 +20,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from orestes_spark.commit_backend import PosixCommitBackend
+from orestes_spark.commit_backend import SWAP_INTENT, PosixCommitBackend
 from orestes_spark.config import SpaceConfig
 from orestes_spark.engine import OrestesEngine
 from orestes_spark.streaming.ingest import _recover_store
@@ -334,3 +335,40 @@ def test_crashed_gate_retrain_swaps_whole(spark, tmp_path):
     make_corpus_batch_processor(str(snaps[1]), dsir_floor=0.0)(batch, 3)
     assert _ids(spark, f"{snaps[1]}/docs", "doc_id") == [1, 2, 7, 8]
     _recovers_to(spark, snaps[:1], after)
+
+
+# ---------- PQ index ----------
+
+
+def test_crashed_pq_retrain_answers_as_retrained(spark, tmp_path):
+    """pq_requantize_if swaps the whole index directory as one set:
+    restarted on the state before its intent or before either rename,
+    it ends with one index that answers pq_index_topk as the completed
+    retrain's does, and no backup, staging tree or intent beside it."""
+    from orestes_spark.operators.similarity import pq_index_topk, pq_index_write, pq_requantize_if
+
+    ddl = "vec_id LONG, embedding ARRAY<FLOAT>"
+    base = [(i, [1.0 + 0.01 * (i % 7), 0.1 * (i % 3), 0.01 * i, 0.0]) for i in range(64)]
+    drift = [(100 + i, [0.0, 0.01 * (i % 5), 1.0 + 0.02 * (i % 9), 2.0 + 0.03 * i]) for i in range(64)]
+    corpus = spark.createDataFrame(base + drift, ddl).localCheckpoint()
+    q = corpus.where(F.col("vec_id") % 10 == 0)
+    idx = tmp_path / "idx"
+    pq_index_write(spark.createDataFrame(base, ddl), str(idx / "pq"), m=4, ks=8)
+
+    def retrain(root):
+        return pq_requantize_if(spark, str(root / "pq"), corpus, recall_floor=0.95, probe_mod=7, m=4, ks=8)
+
+    def answers(root):
+        rows = pq_index_topk(spark, str(root / "pq"), q, k=3).collect()
+        return {(r["query_id"], r["neighbor_id"], r["rank"]) for r in rows}
+
+    snaps = _snapshots(idx, tmp_path, lambda: retrain(idx))
+    assert len(snaps) == 2  # pq → .old_pq, pq.retrain → pq
+    pre = tmp_path / "pre_intent" / "idx"
+    shutil.copytree(snaps[0], pre)
+    (pre / SWAP_INTENT).unlink()  # the state just before the intent's publish
+    want = answers(idx)
+    for root in (pre, *snaps):
+        retrain(root)
+        assert answers(root) == want, root
+        assert [p.name for p in root.iterdir()] == ["pq"], root
