@@ -80,13 +80,6 @@ class SpaceConfig:
     granularity_days: int = 1
     rollup_step_ms: int | None = None
     append_only: bool = False
-    # §2.6 parity knob (/root/reference/lib/orestes-query.js:310,
-    # default 200): per-space cap on concurrent per-bucket point
-    # fetches. Preserved as config surface per SURVEY §2.6; ADVISORY
-    # under Spark — task concurrency is the scheduler's job (executor
-    # cores × locality), and capping it per query would fight AQE.
-    # Accepted, stored, and echoed so reference configs load verbatim.
-    read_request_concurrency: int = 200
     # (bin_width, nbins): adds fixed-width value-histogram partials to
     # the continuous rollup, so QUANTILES become servable from
     # pre-aggregated state (engine.read_rollup_quantile) — the
@@ -121,23 +114,6 @@ class EngineConfig:
     warehouse: str
     spaces: dict[str, SpaceConfig] = field(default_factory=dict)
     default_space_config: SpaceConfig = field(default_factory=SpaceConfig)
-    # §2.6 parity knobs, preserved as config surface (SURVEY §2.6) with
-    # reference defaults (/root/reference/lib/orestes-query.js:23-24,
-    # 179). All three are ES/Cassandra client-pool tuning with no Spark
-    # analogue — series scans are distributed jobs, not paged scrolls;
-    # count fan-out is one aggregation, not N HTTP calls — so they are
-    # accepted and stored (reference configs load verbatim) but do not
-    # alter plans. metadata_fetch_size: ES scroll page size (20000).
-    # max_concurrent_count_requests: count-request pool cap (20).
-    # scroll_ttl_ms: ES scroll keep-alive. NOTE the reference HARDCODES
-    # scroll: '10m' (orestes-query.js:179, elasticsearch/query.js:30) —
-    # it is not config-driven there; this knob is an engine extension
-    # that defaults to the reference's hardcoded value and accepts the
-    # reference's duration-string syntax ('10m', '30s') via
-    # parse_duration_ms.
-    metadata_fetch_size: int = 20_000
-    max_concurrent_count_requests: int = 20
-    scroll_ttl_ms: int = 600_000
     # Writer-lock lease (engine extension, no reference counterpart):
     # a lock held by a process on ANOTHER host (NFS-shared warehouse)
     # cannot be pid-probed, so it reads as dead once its mtime
@@ -157,13 +133,10 @@ class EngineConfig:
         # would read as instantly expired (live remote writers get
         # stolen) and the heartbeat loop would spin at its 50 ms floor
         # — exactly the failure mode the negative-duration rejection
-        # exists to prevent. Same for a zero scroll TTL (pages would
-        # expire between fetches). Loud at construction, not at the
-        # first stolen lock.
+        # exists to prevent. Loud at construction, not at the first
+        # stolen lock.
         if self.writer_lease_ms <= 0:
             raise ValueError("writer_lease_ms must be > 0")
-        if self.scroll_ttl_ms <= 0:
-            raise ValueError("scroll_ttl_ms must be > 0")
 
     def space(self, name: str) -> SpaceConfig:
         return self.spaces.get(name, self.default_space_config)
@@ -194,22 +167,21 @@ def _space_configs_from(conf: dict) -> dict[str, SpaceConfig]:
                 if sc.get("rollup_hist") is not None
                 else None
             ),
-            read_request_concurrency=int(sc.get("read_request_concurrency", 200)),
         )
         for name, sc in spaces.items()
     }
 
 
 def engine_config_from_json(path: str | Path, warehouse: str) -> EngineConfig:
-    """EngineConfig driven from a reference-format JSON config file,
-    including the §2.6 client-pool knobs (reference defaults when
-    absent — see EngineConfig for why they are advisory under Spark)."""
+    """EngineConfig driven from a reference-format JSON config file:
+    the ``spaces`` block plus ``writer_lease_ms``. Every other key —
+    backend blocks and the reference's ES/Cassandra client-pool knobs
+    (``metadata_fetch_size``, ``max_concurrent_count_requests``,
+    ``read_request_concurrency``, ...) — has no Spark counterpart and
+    is ignored, so reference configs load unchanged."""
     conf = json.loads(Path(path).read_text())
     return EngineConfig(
         warehouse=warehouse,
         spaces=_space_configs_from(conf),
-        metadata_fetch_size=int(conf.get("metadata_fetch_size", 20_000)),
-        max_concurrent_count_requests=int(conf.get("max_concurrent_count_requests", 20)),
-        scroll_ttl_ms=parse_duration_ms(conf.get("scroll_ttl_ms", 600_000)),
         writer_lease_ms=parse_duration_ms(conf.get("writer_lease_ms", 600_000)),
     )

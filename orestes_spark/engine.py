@@ -666,9 +666,8 @@ class OrestesEngine:
         config: EngineConfig | None = None,
     ) -> None:
         """``config`` carries the full EngineConfig — the way the
-        engine-level knobs a reference-format JSON file sets
-        (writer_lease_ms, scroll_ttl_ms, ...) actually reach an
-        engine: ``OrestesEngine(spark,
+        engine-level setting a reference-format JSON file carries
+        (``writer_lease_ms``) reaches an engine: ``OrestesEngine(spark,
         config=engine_config_from_json(path, warehouse))``. The
         (warehouse, spaces) form stays for the common programmatic
         case; passing both ``config`` and ``spaces`` is ambiguous and

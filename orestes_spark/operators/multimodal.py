@@ -1,23 +1,26 @@
 """Multimodal columns: images/audio/video as opaque BINARY + typed
 metadata, processed with Arrow-batched pandas transforms.
 
-Decode tiers (round-10 — the stub is closed for stdlib-decodable
-formats):
+Decode: WAV (RIFF/WAVE PCM), PPM (binary P6), BMP headers and the PV
+video container (concatenated P6 frames) decode with the stdlib —
+``decode_audio``, ``decode_image``, ``decode_video``. Formats that need
+a codec library (JPEG/PNG/MP3...) raise NotImplementedError unless PIL
+is importable; ``fake_decode_meta`` is the deterministic stand-in for
+plumbing tests.
 
-- **REAL stdlib decode**: WAV (RIFF/WAVE PCM via ``wave`` +
-  ``array``/``struct``), PPM (binary P6 header + raw RGB), and BMP
-  (BITMAPINFOHEADER) need no codec library — ``decode_audio`` /
-  ``decode_image`` parse them for real, and ``wav_metadata`` /
-  ``ppm_metadata`` compute their outputs from ACTUALLY-DECODED
-  samples/pixels. The synthetic fixtures (``attach_wav_binary`` /
-  ``attach_ppm_binary``) build genuine WAV/PPM payloads whose
-  parameters derive from an md5 of the text, so a DuckDB oracle can
-  state the expected metadata in closed form — the hash-match then
-  certifies the full synthesize→decode round-trip.
-- **Honest stub**: formats that genuinely need a codec library
-  (JPEG/PNG/MP3...) still raise NotImplementedError unless PIL is
-  importable, and ``fake_decode_meta`` remains the deterministic
-  stand-in for plumbing tests.
+One path from payload to operator: each decode operator
+(``wav_metadata``, ``ppm_metadata``, ``audio_quality``,
+``dhash_signatures``, ``video_frame_dhash``, ``audio_envelope``) is a
+module-level per-batch transform over (media_id, content) rows, mapped
+over a media frame by ``_map_media``. A synthetic fixture is a list of
+variants ``(render: text -> bytes, media id from doc id)`` whose
+payload parameters derive from an md5 of the text, so a DuckDB oracle
+can state every operator output in closed form. ``_attach`` renders
+the variants into a media frame (the ``attach_*`` fixtures);
+``_fused_synth`` renders them and applies an operator's own transform
+in the same batch (the ``*_synth`` / ``synth_*`` kernels), so the
+payload never crosses Arrow and fused rows equal composed rows because
+both run the same code.
 
 Scale notes: binary payloads ride through Arrow record batches;
 ``mapInPandas`` processes a partition as an iterator of batches so one
@@ -30,6 +33,7 @@ never carry the payload.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections.abc import Iterator
 
@@ -47,6 +51,75 @@ META_SCHEMA = (
     "media_id LONG, modality STRING, mime STRING, n_bytes LONG, "
     "checksum STRING, width INT, height INT, duration_ms LONG"
 )
+
+PPM_MIME = "image/x-portable-pixmap"
+
+
+def _map_media(media: DataFrame, transform, schema: str) -> DataFrame:
+    """Apply a per-batch transform over (media_id, content) rows to a
+    media frame — how every decode operator runs."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield transform(pdf)
+
+    return media.mapInPandas(batches, schema)
+
+
+def _one(render, id_offset: int = 0) -> list:
+    """A single fixture: one payload per doc, media id ``m + id_offset``."""
+    return [(render, lambda m: m + id_offset)]
+
+
+def _pair(render, variant) -> list:
+    """A pair fixture: the base payload under media id ``2m``, its
+    near-identical variant under ``2m + 1``."""
+    return [(render, lambda m: 2 * m), (variant, lambda m: 2 * m + 1)]
+
+
+def _fused_synth(
+    docs: DataFrame, id_col: str, text_col: str, variants: list, transform, schema: str
+) -> DataFrame:
+    """Render every fixture variant ``(render, media id from doc id)``
+    of every doc and apply ``transform`` — an operator's own per-batch
+    transform — in the same batch: one MapInPandas, and the payload
+    never crosses Arrow. The operator still decodes the real bytes the
+    render produced. ``docs`` is used as given, so the caller decides
+    the kernel's input parallelism."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids = [id_of(pdf["_mid"]) for _, id_of in variants]
+            payloads = [pdf["_txt"].map(render) for render, _ in variants]
+            yield transform(
+                pd.DataFrame(
+                    {
+                        "media_id": pd.concat(ids, ignore_index=True).astype("int64"),
+                        "content": pd.concat(payloads, ignore_index=True),
+                    }
+                )
+            )
+
+    src = docs.select(
+        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
+    )
+    return src.mapInPandas(batches, schema)
+
+
+def _attach(
+    docs: DataFrame, id_col: str, text_col: str, variants: list, modality: str, mime: str
+) -> DataFrame:
+    """A fixture's media frame (MEDIA_SCHEMA): its rendered payloads
+    under their media ids, for any operator to consume."""
+
+    def media(r: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"media_id": r["media_id"], "modality": modality, "mime": mime, "content": r["content"]}
+        )
+
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col, variants, media, MEDIA_SCHEMA
+    )
 
 
 def attach_fake_binary(docs: DataFrame, id_col: str, text_col: str, modality: str = "image") -> DataFrame:
@@ -171,6 +244,42 @@ def decode_audio(content: bytes) -> dict:
     }
 
 
+def _pcm16_wav(samples, rate: int) -> bytes:
+    """A GENUINE 16-bit PCM mono RIFF/WAVE payload of ``samples``."""
+    import io
+    import wave
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(np.asarray(samples).astype("<i2").tobytes())
+    return buf.getvalue()
+
+
+def _mono_pcm16(content: bytes, who: str):
+    """(framerate, int64 samples) of a 16-bit mono PCM WAV payload;
+    anything else raises NotImplementedError naming ``who``."""
+    import io
+    import wave
+
+    import numpy as np
+
+    if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
+        raise NotImplementedError(
+            "audio decode without a codec library supports WAV (RIFF) only"
+        )
+    with wave.open(io.BytesIO(content), "rb") as w:
+        if w.getsampwidth() != 2 or w.getnchannels() != 1:
+            raise NotImplementedError(f"{who}: 16-bit mono PCM only")
+        rate = w.getframerate()
+        raw = w.readframes(w.getnframes())
+    return rate, np.frombuffer(raw, dtype="<i2").astype(np.int64)
+
+
 _WAV_RATES = (8000, 16000, 22050, 44100)
 
 
@@ -193,42 +302,17 @@ def synth_wav(text: str) -> bytes:
     ``_wav_params``. Every sample is exactly ±amp (no zero crossing
     values), so the decoded peak and integer rms BOTH equal amp — the
     closed form the oracle states."""
-    import io
-    import wave
-
     import numpy as np
 
     amp, rate, n_frames, half = _wav_params(text)
     i = np.arange(n_frames, dtype=np.int64)
-    frames = (amp * (1 - 2 * ((i // half) % 2))).astype("<i2").tobytes()
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(frames)
-    return buf.getvalue()
+    return _pcm16_wav(amp * (1 - 2 * ((i // half) % 2)), rate)
 
 
 def attach_wav_binary(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Real WAV payload column (synth_wav of the text) — the audio
-    twin of attach_fake_binary, built in Arrow batches."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_mid"].astype("int64"),
-                    "modality": "audio",
-                    "mime": "audio/x-wav",
-                    "content": pdf["_txt"].map(synth_wav),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+    twin of attach_fake_binary."""
+    return _attach(docs, id_col, text_col, _one(synth_wav), "audio", "audio/x-wav")
 
 
 _WAV_META_SCHEMA = (
@@ -239,8 +323,7 @@ _WAV_META_SCHEMA = (
 
 def _wav_meta_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """wav_metadata's per-batch transform over (media_id, content)
-    rows — shared verbatim by the attached-frame operator and the
-    fused synth+decode path (round-12)."""
+    rows."""
     metas = pdf["content"].map(decode_audio)
     return pd.DataFrame(
         {
@@ -262,54 +345,15 @@ def wav_metadata(media: DataFrame) -> DataFrame:
     of ``decode_audio`` running on the actual payload bytes (header
     fields AND sample-derived peak/rms). Binary column dropped from
     the output, per the module convention."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _wav_meta_pdf(pdf)
-
-    return media.mapInPandas(batches, _WAV_META_SCHEMA)
-
-
-def _fused_synth(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    synth_fn,
-    consume_pdf,
-    schema: str,
-) -> DataFrame:
-    """ONE kernel that synthesizes a payload per doc and immediately
-    consumes it (round-12, guide §4 — the Python boundary): the
-    attach_* → decode-operator composition shipped every synthetic
-    binary Python → JVM → Python just to hand it back to the next
-    kernel; fused, the payload never crosses the boundary and the
-    plan holds one MapInPandas instead of two. The decode still runs
-    on the REAL bytes the synth produced — only the transport is
-    gone. ``consume_pdf`` is the decode operator's own per-batch
-    transform, shared verbatim, so fused == composed row for row."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield consume_pdf(
-                pd.DataFrame(
-                    {
-                        "media_id": pdf["_mid"].astype("int64"),
-                        "content": pdf["_txt"].map(synth_fn),
-                    }
-                )
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, schema)
+    return _map_media(media, _wav_meta_pdf, _WAV_META_SCHEMA)
 
 
 def wav_metadata_synth(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """wav_metadata(attach_wav_binary(docs)) fused into one kernel —
     see ``_fused_synth``."""
     return _fused_synth(
-        docs, id_col, text_col, synth_wav, _wav_meta_pdf, _WAV_META_SCHEMA
+        ensure_min_parallelism(docs), id_col, text_col,
+        _one(synth_wav), _wav_meta_pdf, _WAV_META_SCHEMA,
     )
 
 
@@ -334,46 +378,18 @@ def synth_wav_q(text: str) -> bytes:
     a pure +-amp square-wave active region, and trailing silence (see
     _wavq_params) — the fixture whose clipping / loudness / silence
     metrics an oracle can state in closed form."""
-    import io
-    import wave
-
     import numpy as np
 
     amp, rate, active, lead, trail, half = _wavq_params(text)
     i = np.arange(active, dtype=np.int64)
-    frames = (
-        b"\x00\x00" * lead
-        + (amp * (1 - 2 * ((i // half) % 2))).astype("<i2").tobytes()
-        + b"\x00\x00" * trail
-    )
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(frames)
-    return buf.getvalue()
+    square = amp * (1 - 2 * ((i // half) % 2))
+    return _pcm16_wav(np.pad(square, (lead, trail)), rate)
 
 
 def attach_wav_quality_binary(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Real silence-padded WAV payload column (synth_wav_q of the
     text) — the audio-quality fixture attach."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_mid"].astype("int64"),
-                    "modality": "audio",
-                    "mime": "audio/x-wav",
-                    "content": pdf["_txt"].map(synth_wav_q),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+    return _attach(docs, id_col, text_col, _one(synth_wav_q), "audio", "audio/x-wav")
 
 
 def audio_quality_metrics(
@@ -385,23 +401,12 @@ def audio_quality_metrics(
     (integer isqrt, exact), and leading/trailing silence run lengths
     (|s| <= silence_thresh) in ms. All-integer math so a SQL oracle
     hashes the same values."""
-    import io
     import math
-    import wave
 
-    if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise NotImplementedError(
-            "audio decode without a codec library supports WAV (RIFF) only"
-        )
-    with wave.open(io.BytesIO(content), "rb") as w:
-        if w.getsampwidth() != 2 or w.getnchannels() != 1:
-            raise NotImplementedError("audio_quality_metrics: 16-bit mono PCM only")
-        rate = w.getframerate()
-        n = w.getnframes()
-        raw = w.readframes(n)
     import numpy as np
 
-    samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+    rate, samples = _mono_pcm16(content, "audio_quality_metrics")
+    n = len(samples)
     mag = np.abs(samples)
     clipped = int((mag >= clip_thresh).sum())
     rms = int(math.isqrt(int(np.dot(samples, samples)) // n)) if n else 0
@@ -421,20 +426,6 @@ def audio_quality_metrics(
     }
 
 
-def audio_quality(
-    media: DataFrame, clip_thresh: int = 30000, silence_thresh: int = 100
-) -> DataFrame:
-    """(media_id, n_samples, clipped, clip_ppm, rms, lead_ms,
-    trail_ms) — audio-quality gates computed from ACTUAL decoded
-    samples inside mapInPandas; per-row independent, no shuffle,
-    binary column dropped from the output per the module convention."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _audio_quality_pdf(pdf, clip_thresh, silence_thresh)
-
-    return media.mapInPandas(batches, _AUDIO_QUALITY_SCHEMA)
-
-
 _AUDIO_QUALITY_SCHEMA = (
     "media_id LONG, n_samples LONG, clipped LONG, clip_ppm LONG, "
     "rms LONG, lead_ms LONG, trail_ms LONG"
@@ -444,8 +435,8 @@ _AUDIO_QUALITY_SCHEMA = (
 def _audio_quality_pdf(
     pdf: pd.DataFrame, clip_thresh: int, silence_thresh: int
 ) -> pd.DataFrame:
-    """audio_quality's per-batch transform — shared by the
-    attached-frame operator and the fused synth+decode path."""
+    """audio_quality's per-batch transform over (media_id, content)
+    rows."""
     metas = pdf["content"].map(
         lambda b: audio_quality_metrics(b, clip_thresh, silence_thresh)
     )
@@ -453,6 +444,20 @@ def _audio_quality_pdf(
     for k in ("n_samples", "clipped", "clip_ppm", "rms", "lead_ms", "trail_ms"):
         out[k] = metas.map(lambda m, k=k: m[k]).astype("int64")
     return pd.DataFrame(out)
+
+
+def audio_quality(
+    media: DataFrame, clip_thresh: int = 30000, silence_thresh: int = 100
+) -> DataFrame:
+    """(media_id, n_samples, clipped, clip_ppm, rms, lead_ms,
+    trail_ms) — audio-quality gates computed from ACTUAL decoded
+    samples inside mapInPandas; per-row independent, no shuffle,
+    binary column dropped from the output per the module convention."""
+    return _map_media(
+        media,
+        lambda pdf: _audio_quality_pdf(pdf, clip_thresh, silence_thresh),
+        _AUDIO_QUALITY_SCHEMA,
+    )
 
 
 def audio_quality_synth(
@@ -465,10 +470,7 @@ def audio_quality_synth(
     """audio_quality(attach_wav_quality_binary(docs)) fused into one
     kernel — see ``_fused_synth``."""
     return _fused_synth(
-        docs,
-        id_col,
-        text_col,
-        synth_wav_q,
+        ensure_min_parallelism(docs), id_col, text_col, _one(synth_wav_q),
         lambda pdf: _audio_quality_pdf(pdf, clip_thresh, silence_thresh),
         _AUDIO_QUALITY_SCHEMA,
     )
@@ -497,22 +499,7 @@ def synth_ppm(text: str) -> bytes:
 def attach_ppm_binary(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Real PPM payload column (synth_ppm of the text) — the image
     twin of attach_fake_binary."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["_mid"].astype("int64"),
-                    "modality": "image",
-                    "mime": "image/x-portable-pixmap",
-                    "content": pdf["_txt"].map(synth_ppm),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+    return _attach(docs, id_col, text_col, _one(synth_ppm), "image", PPM_MIME)
 
 
 _PPM_META_SCHEMA = (
@@ -522,8 +509,8 @@ _PPM_META_SCHEMA = (
 
 
 def _ppm_meta_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """ppm_metadata's per-batch transform — shared by the
-    attached-frame operator and the fused synth+decode path."""
+    """ppm_metadata's per-batch transform over (media_id, content)
+    rows."""
     metas = pdf["content"].map(decode_image)
     return pd.DataFrame(
         {
@@ -540,19 +527,15 @@ def _ppm_meta_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 def ppm_metadata(media: DataFrame) -> DataFrame:
     """Image metadata from REAL decode: dimensions from the parsed P6
     header, pixel_sum summed over the ACTUAL decoded RGB plane."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _ppm_meta_pdf(pdf)
-
-    return media.mapInPandas(batches, _PPM_META_SCHEMA)
+    return _map_media(media, _ppm_meta_pdf, _PPM_META_SCHEMA)
 
 
 def ppm_metadata_synth(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """ppm_metadata(attach_ppm_binary(docs)) fused into one kernel —
     see ``_fused_synth``."""
     return _fused_synth(
-        docs, id_col, text_col, synth_ppm, _ppm_meta_pdf, _PPM_META_SCHEMA
+        ensure_min_parallelism(docs), id_col, text_col,
+        _one(synth_ppm), _ppm_meta_pdf, _PPM_META_SCHEMA,
     )
 
 
@@ -611,6 +594,20 @@ def dhash64(content: bytes) -> int:
     return sig
 
 
+_DHASH_SCHEMA = "_id LONG, simhash LONG"
+
+
+def _dhash_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+    """dhash_signatures' per-batch transform over (media_id, content)
+    rows."""
+    return pd.DataFrame(
+        {
+            "_id": pdf["media_id"].astype("int64"),
+            "simhash": pdf["content"].map(dhash64).astype("int64"),
+        }
+    )
+
+
 def dhash_signatures(media: DataFrame) -> DataFrame:
     """(_id, simhash) — dHash signatures for a binary media frame via
     Arrow-batched mapInPandas (decode is per-row independent: no
@@ -618,17 +615,7 @@ def dhash_signatures(media: DataFrame) -> DataFrame:
     dedup.simhash_near_pairs consumes it unchanged — perceptual
     near-dup pairs are then banded-Hamming candidates + exact
     bit_count verify, never an all-pairs scan."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["media_id"].astype("int64"),
-                    "simhash": pdf["content"].map(dhash64).astype("int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, "_id LONG, simhash LONG")
+    return _map_media(media, _dhash_pdf, _DHASH_SCHEMA)
 
 
 def _ppm_img_params(text: str) -> tuple[int, int, bytes]:
@@ -656,6 +643,19 @@ def synth_ppm_img(text: str) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode() + plane[:n]
 
 
+def _upscale_ppm(content: bytes) -> bytes:
+    """The REAL 2x nearest-neighbor upscale of a P6 payload."""
+    m = decode_image(content)
+    return resize_ppm(content, 2 * m["width"], 2 * m["height"])
+
+
+def _ppm_img_upscaled(text: str) -> bytes:
+    return _upscale_ppm(synth_ppm_img(text))
+
+
+_PPM_PAIR = _pair(synth_ppm_img, _ppm_img_upscaled)
+
+
 def attach_ppm_pair(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """TWO real image rows per doc: media_id 2*id = the base P6
     payload (synth_ppm_img), media_id 2*id+1 = its REAL 2x
@@ -664,33 +664,37 @@ def attach_ppm_pair(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     must surface. The variant goes through the actual resize kernel,
     so a downstream dHash match certifies the whole
     synthesize->resize->decode->hash chain, not an assumed identity."""
+    return _attach(docs, id_col, text_col, _PPM_PAIR, "image", PPM_MIME)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            base = pdf["_txt"].map(synth_ppm_img)
 
-            def upscaled(b: bytes) -> bytes:
-                m = decode_image(b)
-                return resize_ppm(b, 2 * m["width"], 2 * m["height"])
-
-            out = pd.DataFrame(
-                {
-                    "media_id": pd.concat(
-                        [2 * pdf["_mid"], 2 * pdf["_mid"] + 1], ignore_index=True
-                    ).astype("int64"),
-                    "modality": "image",
-                    "mime": "image/x-portable-pixmap",
-                    "content": pd.concat(
-                        [base, base.map(upscaled)], ignore_index=True
-                    ),
-                }
-            )
-            yield out
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
+def synth_ppm_pair_dhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """attach_ppm_pair |> dhash_signatures fused into one kernel,
+    emitting (_id, simhash) only — see ``_fused_synth``. Real stored
+    binaries take the composable operators; synthetic fixtures take
+    this, since the composed form ships every payload across Arrow
+    twice for 8 bytes of signal per row."""
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col,
+        _PPM_PAIR, _dhash_pdf, _DHASH_SCHEMA,
     )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+
+
+def synth_ppm_dhash(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    upscale: bool = False,
+    id_offset: int = 0,
+) -> DataFrame:
+    """Fixture kernel: ONE dHash row per doc — the base synthetic
+    image, or (``upscale=True``) its REAL 2x nearest-neighbor
+    upscale, with ``id_offset`` added to the id (a re-encoded copy
+    arriving under a NEW media id — the incremental-dedup fixture).
+    Emits (_id, simhash) only; ``docs`` keeps its own partitioning."""
+    render = _ppm_img_upscaled if upscale else synth_ppm_img
+    return _fused_synth(
+        docs, id_col, text_col, _one(render, id_offset), _dhash_pdf, _DHASH_SCHEMA
+    )
 
 
 def _video_params(text: str) -> tuple[int, int, int]:
@@ -750,40 +754,59 @@ def decode_video(content: bytes) -> list[bytes]:
     return frames
 
 
+def _upscale_video(content: bytes) -> bytes:
+    """A PV container with EVERY frame 2x-upscaled through the real
+    resize kernel, re-muxed."""
+    frames = decode_video(content)
+    return f"PV{len(frames)}\n".encode() + b"".join(map(_upscale_ppm, frames))
+
+
+def _video_upscaled(text: str) -> bytes:
+    return _upscale_video(synth_video(text))
+
+
+_VIDEO_PAIR = _pair(synth_video, _video_upscaled)
+
+
 def attach_video_pair(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """TWO real video rows per doc: media_id 2*id = the base PV
     container (synth_video), 2*id+1 = the variant with EVERY frame
     2x-upscaled through the real resize kernel — the planted
     near-identical video pair a perceptual video dedup must surface."""
+    return _attach(docs, id_col, text_col, _VIDEO_PAIR, "video", "video/x-pv")
 
-    def upscaled(b: bytes) -> bytes:
-        frames = decode_video(b)
-        out = [f"PV{len(frames)}\n".encode()]
-        for fr in frames:
-            m = decode_image(fr)
-            out.append(resize_ppm(fr, 2 * m["width"], 2 * m["height"]))
-        return b"".join(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            base = pdf["_txt"].map(synth_video)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.concat(
-                        [2 * pdf["_mid"], 2 * pdf["_mid"] + 1], ignore_index=True
-                    ).astype("int64"),
-                    "modality": "video",
-                    "mime": "video/x-pv",
-                    "content": pd.concat(
-                        [base, base.map(upscaled)], ignore_index=True
-                    ),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
+def _units_pdf(
+    pdf: pd.DataFrame, units_of, idx_col: str, sig_col: str
+) -> pd.DataFrame:
+    """(media_id, idx_col, sig_col): one exploded row per aligned unit
+    (video frame, audio window) ``units_of`` yields for each payload."""
+    mids: list[int] = []
+    idxs: list[int] = []
+    sigs: list[int] = []
+    for mid, content in zip(pdf["media_id"], pdf["content"]):
+        for k, sig in enumerate(units_of(bytes(content))):
+            mids.append(int(mid))
+            idxs.append(k)
+            sigs.append(sig)
+    return pd.DataFrame(
+        {
+            "media_id": pd.Series(mids, dtype="int64"),
+            idx_col: pd.Series(idxs, dtype="int32"),
+            sig_col: pd.Series(sigs, dtype="int64"),
+        }
     )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+
+
+_FRAME_SCHEMA = "media_id LONG, frame_idx INT, simhash LONG"
+
+
+def _frame_dhash_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+    """video_frame_dhash's per-batch transform over (media_id,
+    content) rows."""
+    return _units_pdf(
+        pdf, lambda c: map(dhash64, decode_video(c)), "frame_idx", "simhash"
+    )
 
 
 def video_frame_dhash(media: DataFrame) -> DataFrame:
@@ -791,27 +814,36 @@ def video_frame_dhash(media: DataFrame) -> DataFrame:
     dHash every frame's ACTUAL decoded pixels inside mapInPandas (one
     exploded row per frame; per-row independent, no shuffle). The
     video twin of dhash_signatures."""
+    return _map_media(media, _frame_dhash_pdf, _FRAME_SCHEMA)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            sigs: list[int] = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                for k, fr in enumerate(decode_video(bytes(content))):
-                    mids.append(int(mid))
-                    idxs.append(k)
-                    sigs.append(dhash64(fr))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
 
-    return media.mapInPandas(
-        batches, "media_id LONG, frame_idx INT, simhash LONG"
+def synth_video_pair_frame_dhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """attach_video_pair |> video_frame_dhash fused into one kernel,
+    emitting (media_id, frame_idx, simhash) only — see
+    ``_fused_synth``."""
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col,
+        _VIDEO_PAIR, _frame_dhash_pdf, _FRAME_SCHEMA,
+    )
+
+
+def synth_video_frame_dhash(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    upscale: bool = False,
+    id_offset: int = 0,
+) -> DataFrame:
+    """Fixture kernel: per-frame dHash rows for ONE container per doc
+    — the base synthetic video, or (``upscale=True``) its REAL
+    frame-by-frame 2x nearest-neighbor upscale, with ``id_offset``
+    added to the id (a re-encoded copy arriving under a NEW media id —
+    the incremental-dedup fixture). The video twin of
+    synth_ppm_dhash."""
+    render = _video_upscaled if upscale else synth_video
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col,
+        _one(render, id_offset), _frame_dhash_pdf, _FRAME_SCHEMA,
     )
 
 
@@ -901,25 +933,19 @@ def synth_wav_segments(text: str, half_salt: str = "h1") -> bytes:
     half_salt have different sample bytes but the IDENTICAL per-window
     RMS envelope (every sample is +-amp_k), which is exactly the
     invariance an envelope fingerprint must capture."""
-    import io
-    import wave
-
     import numpy as np
 
     _, amps = _wav_seg_params(text)
     half = 2 + int(hashlib.md5(f"wh{half_salt}:{text}".encode()).hexdigest()[:2], 16) % 14
     i = np.arange(SEG_FRAMES, dtype=np.int64)
     sign = 1 - 2 * ((i // half) % 2)  # +1/-1 square wave, same floor math
-    frames = np.concatenate(
-        [(amp * sign).astype("<i2") for amp in amps]
-    ).tobytes()
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(16000)
-        w.writeframes(frames)
-    return buf.getvalue()
+    return _pcm16_wav(np.concatenate([amp * sign for amp in amps]), 16000)
+
+
+_WAV_PAIR = _pair(
+    functools.partial(synth_wav_segments, half_salt="h1"),
+    functools.partial(synth_wav_segments, half_salt="h2"),
+)
 
 
 def attach_wav_pair(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -927,80 +953,72 @@ def attach_wav_pair(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     SAME loudness envelope rendered with different square-wave
     periods (different bytes, same perceptual profile) — the planted
     near-identical audio pair an envelope dedup must surface."""
+    return _attach(docs, id_col, text_col, _WAV_PAIR, "audio", "audio/x-wav")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.concat(
-                        [2 * pdf["_mid"], 2 * pdf["_mid"] + 1], ignore_index=True
-                    ).astype("int64"),
-                    "modality": "audio",
-                    "mime": "audio/x-wav",
-                    "content": pd.concat(
-                        [
-                            pdf["_txt"].map(lambda t: synth_wav_segments(t, "h1")),
-                            pdf["_txt"].map(lambda t: synth_wav_segments(t, "h2")),
-                        ],
-                        ignore_index=True,
-                    ),
-                }
-            )
 
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, MEDIA_SCHEMA)
+def env_of(content: bytes, window_frames: int = SEG_FRAMES) -> list[int]:
+    """The loudness envelope of a 16-bit mono PCM WAV: integer RMS
+    (isqrt(sum(s^2)//len)) of the REAL decoded samples per
+    ``window_frames`` window."""
+    import math
+
+    import numpy as np
+
+    _, samples = _mono_pcm16(content, "audio_envelope")
+    out = []
+    for off in range(0, len(samples), window_frames):
+        win = samples[off : off + window_frames]
+        out.append(int(math.isqrt(int(np.dot(win, win)) // len(win))))
+    return out
+
+
+_ENVELOPE_SCHEMA = "media_id LONG, win_idx INT, rms LONG"
+
+
+def _envelope_pdf(pdf: pd.DataFrame, window_frames: int = SEG_FRAMES) -> pd.DataFrame:
+    """audio_envelope's per-batch transform over (media_id, content)
+    rows."""
+    return _units_pdf(pdf, lambda c: env_of(c, window_frames), "win_idx", "rms")
 
 
 def audio_envelope(media: DataFrame, window_frames: int = SEG_FRAMES) -> DataFrame:
     """(media_id, win_idx, rms) — the loudness-envelope fingerprint
-    from REAL decoded PCM: integer RMS (isqrt(sum(s^2)//len)) per
-    ``window_frames`` window, one exploded row per window, computed
-    inside mapInPandas (per-row independent, no shuffle). The audio
-    twin of video_frame_dhash; feed aligned_near_pairs for near-dup
-    detection."""
-    import io
-    import math
-    import wave
+    (``env_of``) from REAL decoded PCM, one exploded row per window,
+    computed inside mapInPandas (per-row independent, no shuffle). The
+    audio twin of video_frame_dhash; feed aligned_near_pairs for
+    near-dup detection."""
+    return _map_media(
+        media, lambda pdf: _envelope_pdf(pdf, window_frames), _ENVELOPE_SCHEMA
+    )
 
-    def env_of(content: bytes) -> list[int]:
-        if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-            raise NotImplementedError(
-                "audio decode without a codec library supports WAV (RIFF) only"
-            )
-        with wave.open(io.BytesIO(content), "rb") as w:
-            if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                raise NotImplementedError("audio_envelope: 16-bit mono PCM only")
-            raw = w.readframes(w.getnframes())
-        import numpy as np
 
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        out = []
-        for off in range(0, len(samples), window_frames):
-            win = samples[off : off + window_frames]
-            out.append(int(math.isqrt(int(np.dot(win, win)) // len(win))))
-        return out
+def synth_wav_envelope(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    half_salt: str = "h1",
+    id_offset: int = 0,
+) -> DataFrame:
+    """Fixture kernel: envelope rows for ONE PCM render per doc —
+    ``half_salt`` picks the waveform micro-structure (two renders of
+    the same text share the envelope but not the bytes), and
+    ``id_offset`` lands the render under a new media id (the
+    incremental-dedup fixture: a re-rendered copy of indexed audio
+    arriving in a later batch). The audio twin of synth_ppm_dhash."""
+    render = functools.partial(synth_wav_segments, half_salt=half_salt)
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col,
+        _one(render, id_offset), _envelope_pdf, _ENVELOPE_SCHEMA,
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            rms: list[int] = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                for k, r in enumerate(env_of(bytes(content))):
-                    mids.append(int(mid))
-                    idxs.append(k)
-                    rms.append(r)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "win_idx": pd.Series(idxs, dtype="int32"),
-                    "rms": pd.Series(rms, dtype="int64"),
-                }
-            )
 
-    return media.mapInPandas(batches, "media_id LONG, win_idx INT, rms LONG")
+def synth_wav_pair_envelope(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """attach_wav_pair |> audio_envelope fused into one kernel,
+    emitting (media_id, win_idx, rms) only — see ``_fused_synth``."""
+    return _fused_synth(
+        ensure_min_parallelism(docs), id_col, text_col,
+        _WAV_PAIR, _envelope_pdf, _ENVELOPE_SCHEMA,
+    )
 
 
 def audio_near_pairs(
@@ -1253,253 +1271,6 @@ def cross_modal_pair_dedup(
             "left_anti",
         )
     )
-
-
-def synth_ppm_pair_dhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fixture-FUSED attach_ppm_pair |> dhash_signatures: synth the
-    base image, run the REAL resize kernel for the variant, decode
-    and dHash both — all inside ONE mapInPandas, emitting only
-    (_id, simhash). Row-identical to the composed pipeline (asserted
-    in tests); exists because the composed form ships every payload
-    across Arrow twice (Python→JVM→Python between the two kernels),
-    which at sf0.1 is ~hundreds of MB of fixture bytes for 8 bytes of
-    signal per row. Real stored binaries take the composable
-    operators; synthetic fixtures take this."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            sigs: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                base = synth_ppm_img(txt)
-                m = decode_image(base)
-                var = resize_ppm(base, 2 * m["width"], 2 * m["height"])
-                mids += [2 * int(mid), 2 * int(mid) + 1]
-                sigs += [dhash64(base), dhash64(var)]
-            yield pd.DataFrame(
-                {
-                    "_id": pd.Series(mids, dtype="int64"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "_id LONG, simhash LONG")
-
-
-def synth_ppm_dhash(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    upscale: bool = False,
-    id_offset: int = 0,
-) -> DataFrame:
-    """Fixture kernel: ONE dHash row per doc — the base synthetic
-    image, or (``upscale=True``) its REAL 2x nearest-neighbor
-    upscale, with ``id_offset`` added to the id (a re-encoded copy
-    arriving under a NEW media id — the incremental-dedup fixture).
-    Emits (_id, simhash) only; see synth_ppm_pair_dhash for why the
-    payload never crosses Arrow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            sigs: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                img = synth_ppm_img(txt)
-                if upscale:
-                    m = decode_image(img)
-                    img = resize_ppm(img, 2 * m["width"], 2 * m["height"])
-                mids.append(int(mid) + id_offset)
-                sigs.append(dhash64(img))
-            yield pd.DataFrame(
-                {
-                    "_id": pd.Series(mids, dtype="int64"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
-
-    src = docs.select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "_id LONG, simhash LONG")
-
-
-def synth_video_pair_frame_dhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fixture-FUSED attach_video_pair |> video_frame_dhash — see
-    synth_ppm_pair_dhash for why. Emits (media_id, frame_idx,
-    simhash) for the base container and its REAL frame-by-frame 2x
-    upscale without the payloads ever crossing Arrow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            sigs: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                for k, fr in enumerate(decode_video(synth_video(txt))):
-                    m = decode_image(fr)
-                    up = resize_ppm(fr, 2 * m["width"], 2 * m["height"])
-                    dh_base, dh_up = dhash64(fr), dhash64(up)
-                    mids += [2 * int(mid), 2 * int(mid) + 1]
-                    idxs += [k, k]
-                    sigs += [dh_base, dh_up]
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "media_id LONG, frame_idx INT, simhash LONG")
-
-
-def synth_video_frame_dhash(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    upscale: bool = False,
-    id_offset: int = 0,
-) -> DataFrame:
-    """Fixture kernel: per-frame dHash rows for ONE container per doc
-    — the base synthetic video, or (``upscale=True``) its REAL
-    frame-by-frame 2x nearest-neighbor upscale, with ``id_offset``
-    added to the id (a re-encoded copy arriving under a NEW media id —
-    the incremental-dedup fixture). The video twin of
-    synth_ppm_dhash; emits (media_id, frame_idx, simhash) only, so
-    the payload never crosses Arrow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            sigs: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                for k, fr in enumerate(decode_video(synth_video(txt))):
-                    if upscale:
-                        m = decode_image(fr)
-                        fr = resize_ppm(fr, 2 * m["width"], 2 * m["height"])
-                    mids.append(int(mid) + id_offset)
-                    idxs.append(k)
-                    sigs.append(dhash64(fr))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "media_id LONG, frame_idx INT, simhash LONG")
-
-
-def synth_wav_envelope(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    half_salt: str = "h1",
-    id_offset: int = 0,
-) -> DataFrame:
-    """Fixture kernel: envelope rows for ONE PCM render per doc —
-    ``half_salt`` picks the waveform micro-structure (two renders of
-    the same text share the envelope but not the bytes), and
-    ``id_offset`` lands the render under a new media id (the
-    incremental-dedup fixture: a re-rendered copy of indexed audio
-    arriving in a later batch). The audio twin of synth_ppm_dhash;
-    emits (media_id, win_idx, rms) only."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    def env_of(content: bytes) -> list[int]:
-        with wave.open(io.BytesIO(content), "rb") as w:
-            raw = w.readframes(w.getnframes())
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        out = []
-        for off in range(0, len(samples), SEG_FRAMES):
-            win = samples[off : off + SEG_FRAMES]
-            out.append(int(math.isqrt(int(np.dot(win, win)) // len(win))))
-        return out
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            rms: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                for k, r in enumerate(env_of(synth_wav_segments(txt, half_salt))):
-                    mids.append(int(mid) + id_offset)
-                    idxs.append(k)
-                    rms.append(r)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "win_idx": pd.Series(idxs, dtype="int32"),
-                    "rms": pd.Series(rms, dtype="int64"),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "media_id LONG, win_idx INT, rms LONG")
-
-
-def synth_wav_pair_envelope(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fixture-FUSED attach_wav_pair |> audio_envelope — see
-    synth_ppm_pair_dhash for why. Renders both PCM variants and
-    computes their REAL decoded envelopes in one kernel, emitting
-    (media_id, win_idx, rms) only."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    def env_of(content: bytes) -> list[int]:
-        with wave.open(io.BytesIO(content), "rb") as w:
-            raw = w.readframes(w.getnframes())
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        out = []
-        for off in range(0, len(samples), SEG_FRAMES):
-            win = samples[off : off + SEG_FRAMES]
-            out.append(int(math.isqrt(int(np.dot(win, win)) // len(win))))
-        return out
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mids: list[int] = []
-            idxs: list[int] = []
-            rms: list[int] = []
-            for mid, txt in zip(pdf["_mid"], pdf["_txt"]):
-                for salt, m in (("h1", 2 * int(mid)), ("h2", 2 * int(mid) + 1)):
-                    for k, r in enumerate(env_of(synth_wav_segments(txt, salt))):
-                        mids.append(m)
-                        idxs.append(k)
-                        rms.append(r)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "win_idx": pd.Series(idxs, dtype="int32"),
-                    "rms": pd.Series(rms, dtype="int64"),
-                }
-            )
-
-    src = ensure_min_parallelism(docs).select(
-        F.col(id_col).cast("long").alias("_mid"), F.col(text_col).alias("_txt")
-    )
-    return src.mapInPandas(batches, "media_id LONG, win_idx INT, rms LONG")
 
 
 def fake_decode_meta(content: bytes) -> tuple[int, int, int]:

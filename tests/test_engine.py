@@ -1394,30 +1394,28 @@ def test_unencodable_tag_takes_spark_sinks(engine):
     assert read_as_model(engine) == {"host=\ufffd": ({"host": "\ufffd"}, [(START, 1.0)])}
 
 
-def test_config_preserves_reference_client_knobs(tmp_path):
-    """SURVEY §2.6 parity: the reference's ES/Cassandra client-pool
-    knobs load verbatim from a reference-format config (with reference
-    defaults when absent) and are stored as advisory config — Spark's
-    scheduler owns actual concurrency."""
+def test_config_ignores_reference_client_knobs(tmp_path):
+    """A reference-format config still carrying the ES/Cassandra
+    client-pool knobs (which have no Spark counterpart) loads with
+    those keys ignored and keeps every space's granularity."""
     import json
 
-    from orestes_spark.config import engine_config_from_json
+    from orestes_spark.config import EngineConfig, engine_config_from_json
 
     cfg = tmp_path / "orestes-config.json"
     cfg.write_text(json.dumps({
         "metadata_fetch_size": 5000,
         "max_concurrent_count_requests": 7,
+        "scroll_ttl_ms": "10m",
         "spaces": {
             "default": {"table_granularity_days": 1, "read_request_concurrency": 64},
             "weekly": {"table_granularity_days": 7},
         },
     }))
     ec = engine_config_from_json(cfg, str(tmp_path / "wh"))
-    assert ec.metadata_fetch_size == 5000
-    assert ec.max_concurrent_count_requests == 7
-    assert ec.scroll_ttl_ms == 600_000  # reference '10m' default
-    assert ec.space("default").read_request_concurrency == 64
-    assert ec.space("weekly").read_request_concurrency == 200  # default
+    assert ec.space("default").granularity_days == 1
+    assert ec.space("weekly").granularity_days == 7
+    assert ec == EngineConfig(warehouse=str(tmp_path / "wh"), spaces=ec.spaces)
 
 
 def test_recover_swaps_full_crash_matrix(tmp_path):
@@ -1750,9 +1748,10 @@ def test_remove_keep_rollup_keeps_gate_armed(spark, tmp_path):
 
 
 def test_scroll_ttl_duration_strings(tmp_path):
-    """§2.6 knob accepts the reference's duration-string syntax (the
+    """Durations accept the reference's duration-string syntax (the
     reference hardcodes scroll: '10m' — elasticsearch/query.js:30) as
-    well as plain ms numbers, and fails loudly otherwise."""
+    well as plain ms numbers, and fail loudly otherwise; a config
+    file's writer_lease_ms goes through the same parser."""
     import json
 
     import pytest
@@ -1773,8 +1772,8 @@ def test_scroll_ttl_duration_strings(tmp_path):
         parse_duration_ms(True)
 
     cfg = tmp_path / "c.json"
-    cfg.write_text(json.dumps({"scroll_ttl_ms": "10m"}))
-    assert engine_config_from_json(cfg, "wh").scroll_ttl_ms == 600_000
+    cfg.write_text(json.dumps({"writer_lease_ms": "10m"}))
+    assert engine_config_from_json(cfg, "wh").writer_lease_ms == 600_000
 
 
 def test_object_store_warehouse_refused_loudly(spark):
@@ -1988,7 +1987,7 @@ def test_engine_config_rejects_zero_lease():
     import pytest
     from orestes_spark.config import EngineConfig
 
-    for kw in ({"writer_lease_ms": 0}, {"scroll_ttl_ms": 0}, {"writer_lease_ms": -5}):
+    for kw in ({"writer_lease_ms": 0}, {"writer_lease_ms": -5}):
         with pytest.raises(ValueError, match="must be > 0"):
             EngineConfig(warehouse="/tmp/x", **kw)
 

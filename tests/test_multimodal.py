@@ -337,47 +337,130 @@ def test_audio_envelope_near_dup_pairs(spark):
     assert not {k for k in got if k[0] // 2 != k[1] // 2}
 
 
-def test_fused_fixture_kernels_match_composed_pipelines(spark):
-    """The fused fixture kernels (synth+hash in one mapInPandas, no
-    payload across Arrow) must be ROW-IDENTICAL to the composed
-    attach |> decode pipelines they shortcut — image dHash, video
-    frame dHash, and audio envelope."""
+def _test_renders():
+    """Upscale renders built as closures, so Spark workers unpickle
+    them by value (this test module does not import on a worker)."""
+
+    def upscaled_ppm(b: bytes) -> bytes:
+        m = multimodal.decode_image(b)
+        return multimodal.resize_ppm(b, 2 * m["width"], 2 * m["height"])
+
+    def upscaled_video(b: bytes) -> bytes:
+        frames = multimodal.decode_video(b)
+        return f"PV{len(frames)}\n".encode() + b"".join(map(upscaled_ppm, frames))
+
+    def segments(salt: str):
+        return lambda t: multimodal.synth_wav_segments(t, salt)
+
+    return upscaled_ppm, upscaled_video, segments
+
+
+_upscaled_ppm, _upscaled_video, _segments = _test_renders()
+
+
+_SAME, _SHIFTED = (lambda m: m), (lambda m: m + 1000)
+_EVEN, _ODD = (lambda m: 2 * m), (lambda m: 2 * m + 1)
+_PPM_UP = lambda t: _upscaled_ppm(multimodal.synth_ppm_img(t))  # noqa: E731
+_VIDEO_UP = lambda t: _upscaled_video(multimodal.synth_video(t))  # noqa: E731
+
+# name -> (fused kernel over docs, operator over media, fixture variants
+# written out from the public renders, independent of the module's own)
+FUSED_TWINS = {
+    "wav_metadata": (
+        lambda d: multimodal.wav_metadata_synth(d, "doc_id", "text"),
+        multimodal.wav_metadata,
+        [(multimodal.synth_wav, _SAME)],
+    ),
+    "ppm_metadata": (
+        lambda d: multimodal.ppm_metadata_synth(d, "doc_id", "text"),
+        multimodal.ppm_metadata,
+        [(multimodal.synth_ppm, _SAME)],
+    ),
+    "audio_quality": (
+        lambda d: multimodal.audio_quality_synth(d, "doc_id", "text"),
+        multimodal.audio_quality,
+        [(multimodal.synth_wav_q, _SAME)],
+    ),
+    "audio_quality_thresholds": (
+        lambda d: multimodal.audio_quality_synth(d, "doc_id", "text", 20000, 50),
+        lambda m: multimodal.audio_quality(m, 20000, 50),
+        [(multimodal.synth_wav_q, _SAME)],
+    ),
+    "ppm_pair_dhash": (
+        lambda d: multimodal.synth_ppm_pair_dhash(d, "doc_id", "text"),
+        multimodal.dhash_signatures,
+        [(multimodal.synth_ppm_img, _EVEN), (_PPM_UP, _ODD)],
+    ),
+    "ppm_dhash": (
+        lambda d: multimodal.synth_ppm_dhash(d, "doc_id", "text"),
+        multimodal.dhash_signatures,
+        [(multimodal.synth_ppm_img, _SAME)],
+    ),
+    "ppm_dhash_upscaled": (
+        lambda d: multimodal.synth_ppm_dhash(
+            d, "doc_id", "text", upscale=True, id_offset=1000
+        ),
+        multimodal.dhash_signatures,
+        [(_PPM_UP, _SHIFTED)],
+    ),
+    "video_pair_frame_dhash": (
+        lambda d: multimodal.synth_video_pair_frame_dhash(d, "doc_id", "text"),
+        multimodal.video_frame_dhash,
+        [(multimodal.synth_video, _EVEN), (_VIDEO_UP, _ODD)],
+    ),
+    "video_frame_dhash": (
+        lambda d: multimodal.synth_video_frame_dhash(d, "doc_id", "text"),
+        multimodal.video_frame_dhash,
+        [(multimodal.synth_video, _SAME)],
+    ),
+    "video_frame_dhash_upscaled": (
+        lambda d: multimodal.synth_video_frame_dhash(
+            d, "doc_id", "text", upscale=True, id_offset=1000
+        ),
+        multimodal.video_frame_dhash,
+        [(_VIDEO_UP, _SHIFTED)],
+    ),
+    "wav_envelope_h1": (
+        lambda d: multimodal.synth_wav_envelope(d, "doc_id", "text"),
+        multimodal.audio_envelope,
+        [(_segments("h1"), _SAME)],
+    ),
+    "wav_envelope_h2_shifted": (
+        lambda d: multimodal.synth_wav_envelope(
+            d, "doc_id", "text", half_salt="h2", id_offset=1000
+        ),
+        multimodal.audio_envelope,
+        [(_segments("h2"), _SHIFTED)],
+    ),
+    "wav_pair_envelope": (
+        lambda d: multimodal.synth_wav_pair_envelope(d, "doc_id", "text"),
+        multimodal.audio_envelope,
+        [(_segments("h1"), _EVEN), (_segments("h2"), _ODD)],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FUSED_TWINS))
+def test_fused_fixture_kernels_match_composed_pipelines(spark, name):
+    """Every fused fixture kernel (render + the operator's per-batch
+    transform in one mapInPandas, no payload across Arrow) is
+    ROW-IDENTICAL, dtypes included, to the operator run over the
+    attached media frame of the same fixture variants."""
+    fused_fn, operator, variants = FUSED_TWINS[name]
     docs = spark.createDataFrame(
         [(i, f"fused kernel doc {i} {'pad ' * (i % 3)}") for i in range(4)],
         "doc_id LONG, text STRING",
     )
-    fused = sorted(
-        tuple(r) for r in multimodal.synth_ppm_pair_dhash(docs, "doc_id", "text").collect()
+    fused = fused_fn(docs)
+    composed = operator(
+        multimodal._attach(
+            docs, "doc_id", "text", variants, "test", "application/octet-stream"
+        )
     )
-    composed = sorted(
-        tuple(r)
-        for r in multimodal.dhash_signatures(
-            multimodal.attach_ppm_pair(docs, "doc_id", "text")
-        ).collect()
-    )
-    assert fused == composed
-    fused_v = sorted(
-        tuple(r)
-        for r in multimodal.synth_video_pair_frame_dhash(docs, "doc_id", "text").collect()
-    )
-    composed_v = sorted(
-        tuple(r)
-        for r in multimodal.video_frame_dhash(
-            multimodal.attach_video_pair(docs, "doc_id", "text")
-        ).collect()
-    )
-    assert fused_v == composed_v
-    fused_a = sorted(
-        tuple(r)
-        for r in multimodal.synth_wav_pair_envelope(docs, "doc_id", "text").collect()
-    )
-    composed_a = sorted(
-        tuple(r)
-        for r in multimodal.audio_envelope(
-            multimodal.attach_wav_pair(docs, "doc_id", "text")
-        ).collect()
-    )
-    assert fused_a == composed_a
+    assert fused.dtypes == composed.dtypes
+    want = sorted(tuple(r) for r in composed.collect())
+    assert len(want) >= 4 * len(variants)
+    assert sorted(tuple(r) for r in fused.collect()) == want
 
 
 def test_incremental_phash_probe_against_persisted_index(spark, tmp_path):

@@ -2230,6 +2230,49 @@ def test_media_ingest_cross_batch_perceptual_dedup(spark, tmp_path):
     assert idx_ids == [1, 2, 11]
 
 
+def test_start_media_ingest_matches_batch_processor(spark, tmp_path):
+    """start_media_ingest streams parquet files of attach_ppm_pair
+    media through the image gate: each base/upscale pair keeps its
+    base, a later re-delivery and re-encode of an accepted image is
+    dropped, and the stored media ids equal those the batch processor
+    stores from the same rows."""
+    from orestes_spark.operators import multimodal as mm
+    from orestes_spark.streaming.ingest import (
+        make_media_batch_processor,
+        start_media_ingest,
+    )
+
+    def pairs(rows):
+        docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+        return mm.attach_ppm_pair(docs, "doc_id", "text").select("media_id", "content")
+
+    batches = [
+        pairs([(i, f"streamed image {i} {'q ' * i}") for i in range(4)]),
+        pairs([(0, "streamed image 0 "), (5, "a later, novel image")]),
+    ]
+    src = tmp_path / "media_src"
+    stream = spark.readStream.schema("media_id LONG, content BINARY").parquet(
+        str(src / "*")
+    )
+    store = str(tmp_path / "stream_store")
+    q = start_media_ingest(stream, store, checkpoint=str(tmp_path / "ckpt"))
+    try:
+        for k, batch in enumerate(batches):
+            batch.write.parquet(str(src / f"b{k}"))
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def stored(root):
+        return sorted(r["media_id"] for r in spark.read.parquet(f"{root}/media").collect())
+
+    twin = str(tmp_path / "batch_store")
+    process = make_media_batch_processor(twin)
+    for epoch, batch in enumerate(batches):
+        process(batch, epoch)
+    assert stored(store) == stored(twin) == [0, 2, 4, 6, 10]
+
+
 def test_text_gate_retrain_if_zero_scored_window_surfaces(spark, tmp_path):
     """Round-12 (ADVICE r11): a gate that scored ZERO docs across the
     window (everything consumed upstream — a fully-collapsed stream)

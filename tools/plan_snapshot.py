@@ -9,6 +9,7 @@ broadcast-to-shuffle join downgrade, or lost pushed filter.
 
 Usage:
     python tools/plan_snapshot.py            # print regressions vs snapshot
+    python tools/plan_snapshot.py NAME ...   # the same, for the named queries only
     python tools/plan_snapshot.py --write    # (re)write plans_snapshot.json
 """
 
@@ -44,14 +45,23 @@ def main() -> int:
     from orestes_spark.plans.explain import profile_regressions
     from orestes_spark.session import get_spark
 
+    write = "--write" in sys.argv
+    names = [a for a in sys.argv[1:] if a != "--write"] or None
+    if write and names:
+        print("--write regenerates the full snapshot; refusing with query names given")
+        return 2
     spark = get_spark("plan-snapshot")
-    new = generate(spark)
+    new = generate(spark, names)
+    unknown = sorted(set(names or ()) - set(new))
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        return 2
     errors = {n: p for n, p in new.items() if "error" in p}
     if errors:
         for n, p in errors.items():
             print(f"ERROR {n}: {p['error']}")
         return 2
-    if "--write" in sys.argv:
+    if write:
         SNAPSHOT.write_text(json.dumps(new, indent=1, sort_keys=True) + "\n")
         print(f"wrote {SNAPSHOT} ({len(new)} queries)")
         return 0
